@@ -19,16 +19,15 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // SQL surface for the as-of plan node (§7.3): FROM asof_join('probe',
     // 'build', 'key', 'probe_ts', 'build_ts', 'build_tie'[, direction
     // [, tolerance_micros]]) — parses to UnresolvedAsOfJoin, which the
-    // AsOfJoinRewrite rule validates and expands once the named tables
-    // resolve.
+    // AsOfJoinRewrite rule validates into an AsOfJoin node once the named
+    // tables resolve.
     ext.injectTableFunction((
       FunctionIdentifier("asof_join"),
       new ExpressionInfo("graft.plans.UnresolvedAsOfJoin", "asof_join"),
       (args: Seq[Expression]) => graft.plans.AsOfJoinTvf(args)))
     ext.injectResolutionRule(s => graft.plans.RangeJoinRewrite(s))
-    // Physical as-of join: under spark.graft.asofImpl=exec the AsOfJoin
-    // node survives resolution and this strategy plans it as the dedicated
-    // merge operator (plans/AsOfJoinExec) instead of the window expansion.
+    // Physical as-of join: this strategy plans every AsOfJoin node as the
+    // dedicated merge operator (plans/AsOfJoinExec).
     ext.injectPlannerStrategy(s => graft.plans.AsOfJoinStrategy(s))
     // SQL surface for the banded range join (point-in-interval without the
     // nested-loop plan): FROM range_join('points', 'intervals', 'ts', 'lo',

@@ -4,28 +4,18 @@ import org.apache.spark.sql.{DataFrame, GraftSqlShim}
 
 /** DataFrame-level entry point for the plan-level as-of join
   * (graft.plans.AsOfJoin — see its Scaladoc for semantics and the scale
-  * contract). `probe`/`build` ts columns must already be TimestampType;
-  * build columns other than the key must not collide with probe names.
-  *
-  * `impl` picks the physical implementation: `Some("exec")` plans the
-  * dedicated merge operator (plans/AsOfJoinExec), `Some("window")` the
-  * union-tag-sort window expansion; `None` (default) reads the session
-  * default `spark.graft.asofImpl` HERE, in the caller's thread, and bakes
-  * it into the node — analysis never consults mutable session state, so
-  * concurrent queries with different impls can't race (ADVICE r6 #1).
+  * contract; planned as the merge operator graft.plans.AsOfJoinExec).
+  * `probe`/`build` ts columns must already be TimestampType; build columns
+  * other than the key must not collide with probe names.
   */
 object AsOf {
   def join(probe: DataFrame, build: DataFrame, key: String,
            probeTs: String, buildTs: String, buildTie: String,
            direction: String = graft.plans.AsOfJoin.Backward,
-           toleranceMicros: Option[Long] = None,
-           impl: Option[String] = None): DataFrame = {
-    import graft.plans.AsOfJoin
-    val resolvedImpl = impl.getOrElse(
-      probe.sparkSession.conf.get(AsOfJoin.ImplConf, AsOfJoin.ImplWindow))
-    val node = AsOfJoin.build(
+           toleranceMicros: Option[Long] = None): DataFrame = {
+    val node = graft.plans.AsOfJoin.build(
       probe.queryExecution.analyzed, build.queryExecution.analyzed,
-      key, probeTs, buildTs, buildTie, direction, toleranceMicros, resolvedImpl)
+      key, probeTs, buildTs, buildTie, direction, toleranceMicros)
     GraftSqlShim.ofRows(probe.sparkSession, node)
   }
 }

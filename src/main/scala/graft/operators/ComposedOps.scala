@@ -59,8 +59,7 @@ object ComposedOps {
     // shapes; the aggregation collapses map-side.
     "composed_asof_range_day" -> ((s, dir) => {
       val asof = AsOf.join(purchases(s, dir), clicks(s, dir), key = "user_id",
-        probeTs = "ts", buildTs = "click_ts", buildTie = "click_id",
-        impl = Some(graft.plans.AsOfJoin.ImplExec))
+        probeTs = "ts", buildTs = "click_ts", buildTie = "click_id")
       RangeJoin.join(asof, incidents(s, dir), ts = "ts",
           lo = "inc_start", hi = "inc_end", bandMicros = 3600000000L)
         .groupBy("inc_day", "inc_n")
@@ -71,7 +70,7 @@ object ComposedOps {
 
     // Chain 2: custom as-of node FEEDING the dynamic-partition-pruning dim
     // side. The two strongest same-day-conversion days are derived THROUGH
-    // the as-of join (window impl), then drive a DPP-pruned scan of the
+    // the as-of join (AsOfJoinExec), then drive a DPP-pruned scan of the
     // day-partitioned archive sink — at 100 TB the broadcast dim's day set
     // becomes the runtime partition filter and only those two directories
     // are read (plan-guarded: dynamicpruning survives WITH the custom node

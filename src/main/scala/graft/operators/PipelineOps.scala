@@ -44,16 +44,20 @@ object PipelineOps {
     * — as max(cores, estimated bytes / 128 MB): the cores floor keeps the
     * degenerate fixture case parallel (each downstream parse/decode task
     * gets work), the byte term is the guide-§6 output-file-size target
-    * that governs at real scale, and the cap is a defect guard against a
-    * source with no real statistics. Consumers sort their outputs, so
-    * layout never changes results.
+    * that governs at real scale. A source with no statistics (an RDD, for
+    * one) reports `spark.sql.defaultSizeInBytes` (Long.MaxValue unless
+    * set): an estimate at or above it is unknown, not huge, and falls back
+    * to the cores floor. The cap is a defect guard against any other wild
+    * estimate. Consumers sort their outputs, so layout never changes
+    * results.
     */
   private[operators] def parallelFloor(s: SparkSession, df: DataFrame): DataFrame = {
     val dp = s.sparkContext.defaultParallelism.toLong
     val targetBytes = 128L << 20
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val plan = df.queryExecution.optimizedPlan
+    val bytes = plan.stats.sizeInBytes
     val byBytes =
-      if (bytes.isValidLong) bytes.toLong / targetBytes + 1 else dp
+      if (bytes < plan.conf.defaultSizeInBytes) bytes.toLong / targetBytes + 1 else dp
     df.repartition(math.max(dp, math.min(byBytes, 1L << 17)).toInt)
   }
 

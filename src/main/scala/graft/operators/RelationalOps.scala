@@ -50,6 +50,23 @@ object RelationalOps {
       .groupBy("l_returnflag", "l_linestatus")
       .agg(sum(dec(col("l_quantity"))).as("ps"), count(lit(1)).as("pn"))
 
+  /** Backward as-of of purchases onto clicks through the plan-level
+    * operator: the shared body of `join_asof_plan` and `join_asof_exec`.
+    */
+  private val asofViaNode: (SparkSession, String) => DataFrame = (s, dir) => {
+    val e = Tables.events(s, dir)
+    val purchases = e.filter(col("event_type") === "purchase")
+      .select(col("user_id"), col("event_id"), col("ts"))
+    val clicks = e.filter(col("event_type") === "click")
+      .select(col("user_id"), col("ts").as("click_ts"),
+        col("event_id").as("click_id"))
+    AsOf.join(purchases, clicks, key = "user_id",
+        probeTs = "ts", buildTs = "click_ts", buildTie = "click_id")
+      .select(col("event_id").as("p_id"), col("user_id").as("p_user"),
+        col("ts").as("p_ts"), col("click_ts").as("asof_click_ts"))
+      .orderBy("p_id")
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // E1: projection + predicate algebra (IN, BETWEEN, LIKE, IS NULL, bool).
     "filter_pred" -> ((s, dir) => {
@@ -250,45 +267,14 @@ object RelationalOps {
     }),
 
     // E7d: the SAME backward as-of through the PLAN-LEVEL operator
-    // (graft.plans.AsOfJoin + AsOfJoinRewrite, SURVEY.md §7.3): the query
-    // declares `AsOfJoin(probe, build, key, ts, …)` and the resolution rule
-    // owns the union-tag-sort + running-last expansion — one keyed exchange,
-    // linear state, identical semantics to `join_asof` (same oracle SQL).
-    "join_asof_plan" -> ((s, dir) => {
-      val e = Tables.events(s, dir)
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id"), col("ts"))
-      val clicks = e.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts").as("click_ts"),
-          col("event_id").as("click_id"))
-      AsOf.join(purchases, clicks, key = "user_id",
-          probeTs = "ts", buildTs = "click_ts", buildTie = "click_id")
-        .select(col("event_id").as("p_id"), col("user_id").as("p_user"),
-          col("ts").as("p_ts"), col("click_ts").as("asof_click_ts"))
-        .orderBy("p_id")
-    }),
-
-    // E7, (c)-tier: the SAME as-of contract through the dedicated physical
-    // merge operator (plans/AsOfJoinExec). The impl choice is an explicit
-    // `AsOf.join` parameter baked into the plan node at build time — no
-    // session-conf mutation, so concurrent as-of analyses in the same
-    // session can't switch implementation mid-flight (ADVICE r6 #1 closed).
-    // Same oracle as join_asof_plan — one contract, two physical
-    // implementations, both driver-gated.
-    "join_asof_exec" -> ((s, dir) => {
-      val e = Tables.events(s, dir)
-      val purchases = e.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id"), col("ts"))
-      val clicks = e.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts").as("click_ts"),
-          col("event_id").as("click_id"))
-      AsOf.join(purchases, clicks, key = "user_id",
-          probeTs = "ts", buildTs = "click_ts", buildTie = "click_id",
-          impl = Some(graft.plans.AsOfJoin.ImplExec))
-        .select(col("event_id").as("p_id"), col("user_id").as("p_user"),
-          col("ts").as("p_ts"), col("click_ts").as("asof_click_ts"))
-        .orderBy("p_id")
-    }),
+    // (graft.plans.AsOfJoin, SURVEY.md §7.3): the query declares
+    // `AsOfJoin(probe, build, key, ts, …)` and the planner runs it as the
+    // merge operator plans/AsOfJoinExec — one narrow exchange per side,
+    // O(1) merge state, identical semantics to `join_asof` (same oracle
+    // SQL). `join_asof_exec` is the same query under the name the
+    // AQE-interop test and earlier bench artifacts use.
+    "join_asof_plan" -> asofViaNode,
+    "join_asof_exec" -> asofViaNode,
 
     // E8: cross join (tiny×tiny only — a guard rail, not a pattern).
     // Market-basket association — support/confidence/lift for part pairs
@@ -513,8 +499,8 @@ object RelationalOps {
       // round(4) output grain, fixture-pinned). The value at a global
       // rank is independent of how row_number breaks price ties (the
       // sorted multiset is unique), so the two-level rank is exact —
-      // pinned bit-equal against the r10 window form in
-      // R11RewriteEquivalenceSpec. NULL prices are excluded up front
+      // pinned against the percentile aggregate at the round(4) output
+      // grain in R10RewriteEquivalenceSpec. NULL prices are excluded up front
       // exactly as Percentile ignores them (ADVICE r10 #2; a no-op on
       // the fixture, where the column is non-null).
       val ps = Seq(0.25, 0.5, 0.75, 0.95)
@@ -1380,6 +1366,22 @@ object RelationalOps {
         .orderBy("l_returnflag")
     }))
 
+  /** DuckDB oracle of the backward as-of keys (`join_asof`,
+    * `join_asof_plan`, `join_asof_exec`, SqlOps' `sql_asof`): the latest
+    * same-user click at or before each purchase, ties to the max click
+    * event_id.
+    */
+  private[operators] val asofBackwardOracle: String =
+    """SELECT p_id, p_user, p_ts, asof_click_ts FROM (
+      |  SELECT p.event_id AS p_id, p.user_id AS p_user, p.ts AS p_ts,
+      |         c.ts AS asof_click_ts,
+      |         row_number() OVER (PARTITION BY p.event_id
+      |                            ORDER BY c.ts DESC, c.event_id DESC) AS rn
+      |  FROM (SELECT * FROM events WHERE event_type = 'purchase') p
+      |  LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
+      |    ON p.user_id = c.user_id AND c.ts <= p.ts
+      |) WHERE rn = 1 ORDER BY p_id""".stripMargin
+
   def oracle: Map[String, String] = Map(
     "filter_pred" ->
       """SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, o_orderpriority
@@ -1419,38 +1421,9 @@ object RelationalOps {
         |     AS bands(band, lo, hi)
         |  ON p_retailprice >= lo AND p_retailprice < hi
         |ORDER BY p_partkey""".stripMargin,
-    "join_asof" ->
-      """SELECT p_id, p_user, p_ts, asof_click_ts FROM (
-        |  SELECT p.event_id AS p_id, p.user_id AS p_user, p.ts AS p_ts,
-        |         c.ts AS asof_click_ts,
-        |         row_number() OVER (PARTITION BY p.event_id
-        |                            ORDER BY c.ts DESC, c.event_id DESC) AS rn
-        |  FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        |  LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
-        |    ON p.user_id = c.user_id AND c.ts <= p.ts
-        |) WHERE rn = 1 ORDER BY p_id""".stripMargin,
-    // plan-level operator, same semantics ⇒ same oracle as join_asof
-    "join_asof_plan" ->
-      """SELECT p_id, p_user, p_ts, asof_click_ts FROM (
-        |  SELECT p.event_id AS p_id, p.user_id AS p_user, p.ts AS p_ts,
-        |         c.ts AS asof_click_ts,
-        |         row_number() OVER (PARTITION BY p.event_id
-        |                            ORDER BY c.ts DESC, c.event_id DESC) AS rn
-        |  FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        |  LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
-        |    ON p.user_id = c.user_id AND c.ts <= p.ts
-        |) WHERE rn = 1 ORDER BY p_id""".stripMargin,
-    // identical contract through the physical merge operator ⇒ same oracle
-    "join_asof_exec" ->
-      """SELECT p_id, p_user, p_ts, asof_click_ts FROM (
-        |  SELECT p.event_id AS p_id, p.user_id AS p_user, p.ts AS p_ts,
-        |         c.ts AS asof_click_ts,
-        |         row_number() OVER (PARTITION BY p.event_id
-        |                            ORDER BY c.ts DESC, c.event_id DESC) AS rn
-        |  FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        |  LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
-        |    ON p.user_id = c.user_id AND c.ts <= p.ts
-        |) WHERE rn = 1 ORDER BY p_id""".stripMargin,
+    "join_asof" -> asofBackwardOracle,
+    "join_asof_plan" -> asofBackwardOracle,
+    "join_asof_exec" -> asofBackwardOracle,
     "join_asof_tolerance" ->
       """SELECT p_id, p_user, p_ts,
         |       CASE WHEN asof_click_ts IS NOT NULL

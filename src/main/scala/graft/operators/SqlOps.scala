@@ -92,10 +92,10 @@ object SqlOps {
     // The as-of join from pure SQL text (VERDICT r5 ask #2): the
     // `asof_join(...)` table-valued function (GraftExtensions →
     // plans.AsOfJoinTvf) names two temp views and the key/ts/tie columns;
-    // AsOfJoinRewrite expands it to the identical single-exchange window
-    // plan as `join_asof_plan`. Probe/build views are themselves created
-    // with SQL text — the whole query path is spark.sql. Same oracle as
-    // `join_asof`; AsOfJoinPlanSpec pins plan-shape equality.
+    // AsOfJoinRewrite validates it into the same AsOfJoin node as
+    // `join_asof_plan`, planned as AsOfJoinExec. Probe/build views are
+    // themselves created with SQL text — the whole query path is spark.sql.
+    // Same oracle as `join_asof`; AsOfJoinPlanSpec pins plan-shape equality.
     "sql_asof" -> ((s, dir) => {
       graft.Tables.events(s, dir).createOrReplaceTempView("graft_events")
       s.sql("""CREATE OR REPLACE TEMPORARY VIEW graft_asof_purchases AS
@@ -186,16 +186,7 @@ object SqlOps {
         |SELECT custkey, count(*) AS n_anc, max(depth) AS max_depth
         |FROM anc GROUP BY custkey ORDER BY custkey""".stripMargin,
     // same semantics as join_asof ⇒ same oracle
-    "sql_asof" ->
-      """SELECT p_id, p_user, p_ts, asof_click_ts FROM (
-        |  SELECT p.event_id AS p_id, p.user_id AS p_user, p.ts AS p_ts,
-        |         c.ts AS asof_click_ts,
-        |         row_number() OVER (PARTITION BY p.event_id
-        |                            ORDER BY c.ts DESC, c.event_id DESC) AS rn
-        |  FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        |  LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
-        |    ON p.user_id = c.user_id AND c.ts <= p.ts
-        |) WHERE rn = 1 ORDER BY p_id""".stripMargin,
+    "sql_asof" -> RelationalOps.asofBackwardOracle,
     // same semantics as join_interval_bucketed ⇒ same oracle
     "sql_range_join" ->
       """WITH err AS (

@@ -1,24 +1,23 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, First, Last}
-import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, Filter, LogicalPlan, Project, Union, Window => LogicalWindow}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, Expression, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.{IntegerType, StructField, StructType, TimestampType}
+import org.apache.spark.sql.types.TimestampType
 
 /** First-class AS-OF JOIN as a Catalyst logical operator (SURVEY.md §7.3,
   * VERDICT r4 ask #8).
   *
   * The engine's as-of keys (`join_asof`, `_forward`, `_tolerance`,
   * `_nearest`) encode the union-tag-sort + running last/first(ignoreNulls)
-  * composition by hand at the DataFrame layer. This node lifts that
-  * composition to the PLAN layer: a user (or a future SQL syntax hook)
-  * declares `AsOfJoin(probe, build, key, ts, …)` and the
-  * [[AsOfJoinRewrite]] resolution rule expands it into the same
-  * single-exchange window plan — the operator's scale contract (ONE shuffle
-  * on the key, linear per-row state; never the quadratic range-join +
-  * row_number pairing) is now owned by the rule, not re-derived per query.
+  * composition by hand at the DataFrame layer. This node lifts the as-of
+  * contract to the PLAN layer: a user (or the `asof_join` SQL function)
+  * declares `AsOfJoin(probe, build, key, ts, …)` and
+  * [[AsOfJoinStrategy]] plans it as the merge operator [[AsOfJoinExec]] —
+  * the scale contract (one narrow shuffle per side on the key, O(1) merge
+  * state; never the quadratic range-join + row_number pairing) is owned by
+  * the operator, not re-derived per query.
   *
   * Semantics (matching the hand-built keys and pandas `merge_asof`):
   *  - `backward`: latest build row with `b.ts <= p.ts` (inclusive);
@@ -32,8 +31,8 @@ import org.apache.spark.sql.types.{IntegerType, StructField, StructType, Timesta
   *    than the bound (pandas `tolerance` / kdb `wj`).
   *
   * Every probe row survives (left-join shape); build columns (minus the
-  * key) come back nullable, carried through one struct-valued running
-  * aggregate.
+  * key) come back nullable. NULL ts rows follow the rules documented on
+  * [[AsOfJoinExec]].
   */
 final case class AsOfJoin(
     left: LogicalPlan,            // probe side
@@ -44,15 +43,11 @@ final case class AsOfJoin(
     rightTieCol: String,
     direction: String,
     toleranceMicros: Option[Long],
-    impl: String,                 // "window" | "exec" — carried ON the node so
-                                  // concurrent analyses can't race a session conf
     carriedOut: Seq[Attribute])   // pre-minted output attrs for the build payload
   extends BinaryNode {
 
   require(AsOfJoin.Directions.contains(direction),
     s"direction must be one of ${AsOfJoin.Directions.mkString("/")}, got $direction")
-  require(AsOfJoin.Impls.contains(impl),
-    s"impl must be one of ${AsOfJoin.Impls.mkString("/")}, got $impl")
 
   override def output: Seq[Attribute] =
     if (childrenResolved) left.output.map(_.withNullability(true)) ++ carriedOut
@@ -60,14 +55,12 @@ final case class AsOfJoin(
 
   // the carried build-payload attrs are MINTED here, not read from the
   // children — declare them produced or CheckAnalysis flags the node as
-  // referencing missing attributes when it survives to the planner
-  // (spark.graft.asofImpl=exec)
+  // referencing missing attributes on its way to the planner
   override def producedAttributes: AttributeSet = AttributeSet(carriedOut)
 
   // the node addresses child columns by NAME (key/ts/tie strings), which
   // Catalyst cannot see — declare every child column referenced, or
-  // ColumnPruning strips the children down to nothing when the node
-  // survives to the planner
+  // ColumnPruning strips the children down to nothing before planning
   override def references: AttributeSet = AttributeSet(children.flatMap(_.output))
 
   override protected def withNewChildrenInternal(
@@ -80,16 +73,6 @@ object AsOfJoin {
   val Forward = "forward"
   val Nearest = "nearest"
   val Directions: Set[String] = Set(Backward, Forward, Nearest)
-  // implementation choice: resolved ONCE at node-build time (explicit
-  // parameter, or the session default below read in the caller's thread)
-  // and then carried on the node — the resolution rule and the planner
-  // strategy only ever look at the node field, never at mutable session
-  // state, so two queries analyzed concurrently in one SparkSession can
-  // use different implementations without interference (ADVICE r6 #1).
-  val ImplWindow = "window"
-  val ImplExec = "exec"
-  val Impls: Set[String] = Set(ImplWindow, ImplExec)
-  val ImplConf = "spark.graft.asofImpl"
 
   /** Factory: validates the column contract against ANALYZED children and
     * mints the carried-output attributes once, so plan copies
@@ -97,8 +80,7 @@ object AsOfJoin {
     */
   def build(left: LogicalPlan, right: LogicalPlan, keyCol: String,
             leftTsCol: String, rightTsCol: String, rightTieCol: String,
-            direction: String, toleranceMicros: Option[Long],
-            impl: String = ImplWindow): AsOfJoin = {
+            direction: String, toleranceMicros: Option[Long]): AsOfJoin = {
     def attr(p: LogicalPlan, n: String, side: String): Attribute =
       p.output.find(_.name == n).getOrElse(
         throw new IllegalArgumentException(
@@ -114,8 +96,8 @@ object AsOfJoin {
         s"$leftTsCol=${lts.dataType}, $rightTsCol=${rts.dataType}")
     attr(right, rightTieCol, "build")
     // payload excludes the key by NAME, so a key that doubles as the build ts
-    // (or tie) column would leave tsIdx = -1 in expand() and fail analysis
-    // with an opaque GetStructField(-1) — reject the aliasing up front.
+    // (or tie) column would silently drop that column from the carried
+    // output — reject the aliasing up front.
     require(keyCol != rightTsCol,
       s"as-of join: keyCol '$keyCol' cannot also be the build ts column — " +
         "project it under a second name first")
@@ -129,115 +111,7 @@ object AsOfJoin {
         "columns — rename before joining")
     val carried = payload.map(a => AttributeReference(a.name, a.dataType, nullable = true)())
     AsOfJoin(left, right, keyCol, leftTsCol, rightTsCol, rightTieCol,
-      direction, toleranceMicros, impl, carried)
-  }
-
-  /** Expand to the union-tag-sort window composition — pure catalyst nodes,
-    * finishing with a Project that aliases every column onto the node's
-    * declared exprIds so parent operators' references survive the rewrite.
-    */
-  def expand(n: AsOfJoin): LogicalPlan = {
-    val lAttrs = n.left.output
-    val rKey = n.right.output.find(_.name == n.keyCol).get
-    val lKey = lAttrs.find(_.name == n.keyCol).get
-    val lTs = lAttrs.find(_.name == n.leftTsCol).get
-    val rTie = n.right.output.find(_.name == n.rightTieCol).get
-    val payload = n.right.output.filterNot(_.name == n.keyCol)
-    val payloadType = StructType(
-      payload.map(a => StructField(a.name, a.dataType, nullable = true)))
-    val tsIdx = payload.indexWhere(_.name == n.rightTsCol)
-
-    // probe sorts AFTER build at equal ts for backward/nearest (inclusive
-    // bound + the back carry wins the distance tie); BEFORE for forward.
-    val (buildKind, probeKind) = if (n.direction == Forward) (1, 0) else (0, 1)
-
-    def alias(e: Expression, name: String): NamedExpression = Alias(e, name)()
-    val buildProj = Project(Seq(
-      alias(rKey, "__key"),
-      alias(n.right.output.find(_.name == n.rightTsCol).get, "__ts"),
-      alias(Literal(buildKind, IntegerType), "__kind"),
-      alias(rTie, "__tie"),
-      alias(CreateNamedStruct(payload.flatMap(a => Seq(Literal(a.name), a))), "__p"))
-      ++ lAttrs.map(a => alias(Literal.create(null, a.dataType), a.name)),
-      n.right)
-    val probeProj = Project(Seq(
-      alias(lKey, "__key"),
-      alias(lTs, "__ts"),
-      alias(Literal(probeKind, IntegerType), "__kind"),
-      alias(Literal.create(null, rTie.dataType), "__tie"),
-      alias(Literal.create(null, payloadType), "__p"))
-      ++ lAttrs.map(a => alias(a, a.name)),
-      n.left)
-    val u = Union(Seq(buildProj, probeProj))
-    val uOut = u.output
-    val (uKey, uTs, uKind, uTie, uP) = (uOut(0), uOut(1), uOut(2), uOut(3), uOut(4))
-    val uProbe = uOut.drop(5)
-
-    val order = Seq(SortOrder(uTs, Ascending), SortOrder(uKind, Ascending),
-      SortOrder(uTie, Ascending))
-    def winExpr(fn: AggregateExpression, frame: SpecifiedWindowFrame, name: String) =
-      Alias(WindowExpression(fn,
-        WindowSpecDefinition(Seq(uKey), order, frame)), name)()
-    val backFrame = SpecifiedWindowFrame(RowFrame, UnboundedPreceding, CurrentRow)
-    val fwdFrame = SpecifiedWindowFrame(RowFrame, CurrentRow, UnboundedFollowing)
-    val backW = winExpr(AggregateExpression(Last(uP, true), Complete, isDistinct = false),
-      backFrame, "__back")
-    val fwdW = winExpr(AggregateExpression(First(uP, true), Complete, isDistinct = false),
-      fwdFrame, "__fwd")
-    val winExprs = n.direction match {
-      case Backward => Seq(backW)
-      case Forward  => Seq(fwdW)
-      case Nearest  => Seq(backW, fwdW)
-    }
-    val win = LogicalWindow(winExprs, Seq(uKey), order, u)
-    val probeOnly = Filter(EqualTo(uKind, Literal(probeKind, IntegerType)), win)
-
-    def carryAttr(name: String): Attribute = win.output.find(_.name == name).get
-    def carryTsMicros(c: Expression): Expression =
-      UnixMicros(GetStructField(c, tsIdx, Some(n.rightTsCol)))
-    val nullP = Literal.create(null, payloadType)
-    val carry: Expression = n.direction match {
-      case Backward =>
-        val c = carryAttr("__back")
-        n.toleranceMicros.fold(c: Expression)(tol =>
-          If(And(IsNotNull(c),
-            LessThanOrEqual(Subtract(UnixMicros(uTs), carryTsMicros(c)), Literal(tol))),
-            c, nullP))
-      case Forward =>
-        val c = carryAttr("__fwd")
-        n.toleranceMicros.fold(c: Expression)(tol =>
-          If(And(IsNotNull(c),
-            LessThanOrEqual(Subtract(carryTsMicros(c), UnixMicros(uTs)), Literal(tol))),
-            c, nullP))
-      case Nearest =>
-        // tolerance (pandas merge_asof supports it with nearest too) bounds
-        // BOTH carries before the distance tie-break, so a stale backward
-        // match can't beat an in-bound forward one.
-        def bounded(c: Expression, dist: Expression => Expression): Expression =
-          n.toleranceMicros.fold(c)(tol =>
-            If(And(IsNotNull(c), LessThanOrEqual(dist(c), Literal(tol))), c, nullP))
-        val b = bounded(carryAttr("__back"),
-          c => Subtract(UnixMicros(uTs), carryTsMicros(c)))
-        val f = bounded(carryAttr("__fwd"),
-          c => Subtract(carryTsMicros(c), UnixMicros(uTs)))
-        CaseWhen(Seq(
-          (IsNull(b), f),
-          (IsNull(f), b),
-          (LessThanOrEqual(Subtract(UnixMicros(uTs), carryTsMicros(b)),
-            Subtract(carryTsMicros(f), UnixMicros(uTs))), b)),
-          Some(f))
-    }
-
-    // re-alias every output onto the node's declared exprIds (probe columns
-    // by position, payload fields out of the carried struct)
-    val finalExprs: Seq[NamedExpression] =
-      n.output.take(lAttrs.size).zip(uProbe).map { case (tgt, src) =>
-        Alias(src, tgt.name)(exprId = tgt.exprId)
-      } ++
-      n.output.drop(lAttrs.size).zipWithIndex.map { case (tgt, i) =>
-        Alias(GetStructField(carry, i, Some(tgt.name)), tgt.name)(exprId = tgt.exprId)
-      }
-    Project(finalExprs, probeOnly)
+      direction, toleranceMicros, carried)
   }
 }
 
@@ -246,10 +120,10 @@ object AsOfJoin {
   * as [[org.apache.spark.sql.catalyst.analysis.UnresolvedRelation]]s (the SQL
   * user names tables, not plans), so the column contract can't be validated
   * at parse time; this node stays permanently unresolved (`output = Nil`)
-  * until [[AsOfJoinRewrite]] sees resolved children, runs the
-  * [[AsOfJoin.build]] validation, and expands in one step — parents
-  * (star-expansion included) only ever see the final expanded plan, never a
-  * half-built node whose exprIds could churn between fixed-point rounds.
+  * until [[AsOfJoinRewrite]] sees resolved children and replaces it with
+  * the [[AsOfJoin.build]] result in one step — parents (star-expansion
+  * included) only ever see the validated node, never a half-built one whose
+  * exprIds could churn between fixed-point rounds.
   */
 final case class UnresolvedAsOfJoin(
     left: LogicalPlan,
@@ -259,8 +133,7 @@ final case class UnresolvedAsOfJoin(
     rightTsCol: String,
     rightTieCol: String,
     direction: String,
-    toleranceMicros: Option[Long],
-    impl: String)                 // captured at parse time, same as AsOfJoin
+    toleranceMicros: Option[Long])
   extends BinaryNode {
   override lazy val resolved: Boolean = false
   override def output: Seq[Attribute] = Nil
@@ -308,40 +181,21 @@ object AsOfJoinTvf {
     } else None
     def rel(i: Int, what: String): LogicalPlan =
       UnresolvedRelation(str(i, what).split('.').toSeq)
-    // impl is captured HERE — the TVF builder runs synchronously inside the
-    // calling query's own analysis, so this conf read reflects the caller's
-    // session setting at submission time; the rewrite rule below never
-    // consults the conf again (no cross-query race window).
-    val impl = scala.util.Try(SparkSession.active.conf
-      .get(AsOfJoin.ImplConf, AsOfJoin.ImplWindow)).getOrElse(AsOfJoin.ImplWindow)
     UnresolvedAsOfJoin(rel(0, "probe table"), rel(1, "build table"),
       str(2, "key"), str(3, "probe_ts"), str(4, "build_ts"),
-      str(5, "build_tie"), direction, tol, impl)
+      str(5, "build_tie"), direction, tol)
   }
 }
 
-/** Resolution rule: expands every [[AsOfJoin]] node once its children are
-  * resolved, and validates-then-expands the SQL-surface
-  * [[UnresolvedAsOfJoin]] in one step. Registered by
-  * [[graft.GraftExtensions]].
-  *
-  * Under `impl = exec` (carried ON the node — set explicitly via
-  * [[graft.operators.AsOf.join]]'s `impl` parameter, or captured from
-  * `spark.graft.asofImpl` when the node was built) the node is NOT
-  * expanded: it rides resolved through the optimizer and
-  * [[AsOfJoinStrategy]] plans it as the dedicated merge operator
-  * [[AsOfJoinExec]]. The rule itself is STATELESS with respect to the
-  * session — concurrent analyses with different impls cannot interfere
-  * (ADVICE r6 #1). The SQL-surface node is still validated/built here
-  * either way, so both implementations share one contract-error surface.
+/** Resolution rule: validates the SQL-surface [[UnresolvedAsOfJoin]] into
+  * an [[AsOfJoin]] once its named tables resolve, so the SQL and Scala
+  * entry points share one contract-error surface. Registered by
+  * [[graft.GraftExtensions]]; [[AsOfJoinStrategy]] plans every node.
   */
 final case class AsOfJoinRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.resolveOperatorsUp {
-    case n: AsOfJoin if n.childrenResolved && n.impl != AsOfJoin.ImplExec =>
-      AsOfJoin.expand(n)
     case u: UnresolvedAsOfJoin if u.childrenResolved =>
-      val built = AsOfJoin.build(u.left, u.right, u.keyCol, u.leftTsCol,
-        u.rightTsCol, u.rightTieCol, u.direction, u.toleranceMicros, u.impl)
-      if (u.impl == AsOfJoin.ImplExec) built else AsOfJoin.expand(built)
+      AsOfJoin.build(u.left, u.right, u.keyCol, u.leftTsCol,
+        u.rightTsCol, u.rightTieCol, u.direction, u.toleranceMicros)
   }
 }

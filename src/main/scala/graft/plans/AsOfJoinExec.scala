@@ -9,26 +9,18 @@ import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Dist
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 
-/** TRUE physical as-of join — a dedicated merge operator instead of the
-  * union-tag-sort window expansion (SURVEY.md §7.3; the (c)-tier of the
-  * custom-operator ladder: LogicalPlan + Rule + SparkStrategy + SparkPlan).
+/** The physical as-of join: a dedicated merge operator (SURVEY.md §7.3;
+  * the (c)-tier of the custom-operator ladder: LogicalPlan + Rule +
+  * SparkStrategy + SparkPlan), and the only plan for an [[AsOfJoin]] node.
   *
-  * The window expansion ([[AsOfJoin.expand]]) is already single-exchange,
-  * but it pays for generality: both sides union into ONE stream with
-  * null-padded columns from the other side, the union sorts n+m wide rows,
-  * and the carry materializes a struct per row. This operator instead
-  * co-partitions the two sides on the key (one exchange EACH, but each
-  * over its own narrow schema), sorts each side by (key, ts[, tie]), and
-  * streams a single forward merge per partition with O(1) state — the
-  * classic kdb/pandas merge_asof plan. Semantics are IDENTICAL to the
-  * expansion (same inclusive bounds, same tie rules, same tolerance and
-  * nearest behavior); `AsOfJoinExecSpec` pins row-for-row equality on all
-  * direction/tolerance combinations and `PropertySpec` covers the node
-  * against brute force.
-  *
-  * Selected by `spark.graft.asofImpl=exec` (default `window` keeps the
-  * expansion): [[AsOfJoinRewrite]] then leaves the resolved [[AsOfJoin]]
-  * node in the plan and [[AsOfJoinStrategy]] plans it here.
+  * It co-partitions the two sides on the key (one exchange EACH, each over
+  * its own narrow schema), sorts each side by (key, ts[, tie]), and streams
+  * a single forward merge per partition with O(1) state — the classic
+  * kdb/pandas merge_asof plan. No union of the two sides, no null-padded
+  * wide sort, no window buffer. `PropertySpec` pins every
+  * direction/tolerance combination against brute force, NULL ts and
+  * (key, ts) ties included; `AsOfJoinPlanSpec` pins it against the
+  * hand-built window compositions.
   *
   * Merge state per partition, all directions: the last in-bound build row
   * (backward carry, ≤ probe ts — last-in-sort-order = max tie at equal
@@ -123,11 +115,11 @@ case class AsOfJoinExec(
 
         /** Move the build cursor for probe (pk, pts, ptsNull): rows of
           * earlier keys are dropped; in-bound rows of pk become the carry
-          * (backward/nearest: ts <= pts inclusive, with NULL ts sorting
-          * before everything — the window expansion's nulls-first union
-          * order) or are dropped (forward: only ts strictly before the
-          * probe in that order — a row AT the probe ts is the inclusive
-          * forward match and must stay peeked).
+          * (backward/nearest: ts <= pts inclusive, in an order where a
+          * NULL ts sorts before every non-null ts and a NULL build ts sits
+          * AT a NULL probe ts) or are dropped (forward: only ts strictly
+          * before the probe in that order — a row AT the probe ts is the
+          * inclusive forward match and must stay peeked).
           */
         private def advance(pk: Any, pts: Long, ptsNull: Boolean): Unit = {
           var go = true
@@ -168,9 +160,9 @@ case class AsOfJoinExec(
           val pts = if (ptsNull) 0L else probe.getLong(lTsIdx)
           advance(pk, pts, ptsNull)
 
-          // tolerance involving a NULL ts compares NULL in the expansion ->
-          // no match; without tolerance a null-ts carry/peek matches with
-          // its null ts carried through
+          // a distance involving a NULL ts is NULL, which never satisfies a
+          // tolerance -> no match; without tolerance a null-ts carry/peek
+          // matches with its null ts carried through
           val backOk = dir != AsOfJoin.Forward &&
             carry != null && cmpKeys(carryKey, pk) == 0 &&
             tol.forall(t => !carryTsNull && !ptsNull && pts - carryTs <= t)
@@ -184,8 +176,7 @@ case class AsOfJoinExec(
             if (dir == AsOfJoin.Backward) { if (backOk) carry else null }
             else if (dir == AsOfJoin.Forward) { if (fwdOk) peek else null }
             else { // nearest: min distance, exact tie resolves backward;
-              // a NULL distance on either side loses (the expansion's
-              // CaseWhen falls through to the forward carry on NULL)
+              // a NULL distance on either side picks the forward match
               if (backOk && fwdOk) {
                 if (carryTsNull || ptsNull || peekTsNull) peek // NULL distance -> fwd
                 else if (pts - carryTs <= peek.getLong(rTsIdx) - pts) carry
@@ -203,10 +194,8 @@ case class AsOfJoinExec(
   }
 }
 
-/** Planner strategy for the physical as-of join: plans a surviving
-  * [[AsOfJoin]] node as [[AsOfJoinExec]]. Only fires under
-  * `spark.graft.asofImpl=exec` — with the default the node never reaches
-  * the planner ([[AsOfJoinRewrite]] expands it at resolution).
+/** Planner strategy for the physical as-of join: plans every
+  * [[AsOfJoin]] node as [[AsOfJoinExec]].
   */
 case class AsOfJoinStrategy(spark: SparkSession) extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {

@@ -48,7 +48,7 @@ class AqeInteropSpec extends SparkSpec {
     assert(p.contains("AsOfJoin ") && !p.contains("!AsOfJoin"),
       "AQE re-plan lost the physical as-of node:\n" + p.take(1500))
     assert(!p.contains("Window"),
-      "AQE re-plan fell back to the window expansion:\n" + p.take(1500))
+      "AQE re-plan put a Window into the as-of plan:\n" + p.take(1500))
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
       p.take(1500))
     // AdaptiveSparkPlan.toString prints the final AND the initial plan —

@@ -1,16 +1,14 @@
 package graft
 
 import graft.operators.AsOf
-import graft.plans.AsOfJoin
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import java.sql.Timestamp
 
-/** The dedicated physical as-of join (plans/AsOfJoinExec, selected by
-  * spark.graft.asofImpl=exec): row-for-row equality with the window
-  * expansion — which is itself oracle-pinned — on every direction and
-  * tolerance combination, plus the plan shape (a real AsOfJoinExec node,
-  * no Window, no nested loop).
+/** The physical as-of join (plans/AsOfJoinExec, the only plan for an
+  * AsOfJoin node): the plan shape (a real AsOfJoinExec node, no Window, no
+  * nested loop), the left-join shape, and the SQL TVF path. Semantics on
+  * every direction/tolerance combination, NULL ts and (key, ts) ties are
+  * pinned against brute force in PropertySpec.
   */
 class AsOfJoinExecSpec extends SparkSpec {
 
@@ -24,149 +22,45 @@ class AsOfJoinExecSpec extends SparkSpec {
   private def rows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq)
 
-  private def withImpl[A](impl: String)(f: => A): A = {
-    spark.conf.set("spark.graft.asofImpl", impl)
-    try f finally spark.conf.unset("spark.graft.asofImpl")
-  }
-
-  private def run(direction: String, tol: Option[Long]): Seq[Seq[Any]] =
-    rows(AsOf.join(purchases, clicks, "user_id", "ts", "click_ts", "click_id",
-        direction = direction, toleranceMicros = tol)
-      .select(col("event_id").as("p_id"), col("click_ts"), col("click_id"))
-      .orderBy("p_id"))
-
-  private val cases: Seq[(String, Option[Long])] = Seq(
-    (AsOfJoin.Backward, None),
-    (AsOfJoin.Forward, None),
-    (AsOfJoin.Nearest, None),
-    (AsOfJoin.Backward, Some(2L * 3600 * 1000000)),
-    (AsOfJoin.Forward, Some(2L * 3600 * 1000000)),
-    (AsOfJoin.Nearest, Some(30L * 60 * 1000000)))
-
-  test("exec == window expansion, all directions and tolerances, row for row") {
-    for ((dir, tol) <- cases) {
-      val viaWindow = run(dir, tol) // default impl
-      val viaExec = withImpl("exec")(run(dir, tol))
-      assert(viaExec == viaWindow, s"direction=$dir tolerance=$tol")
-    }
-  }
-
   test("exec plan: a real AsOfJoinExec node, no Window, no nested loop") {
-    withImpl("exec") {
-      val df = AsOf.join(purchases, clicks, "user_id", "ts", "click_ts", "click_id")
-      // the exec node prints as "AsOfJoin" (TreeNode strips the Exec
-      // suffix); string-match because AQE wraps the plan out of reach of
-      // SparkPlan.exists before execution
-      val p = df.queryExecution.executedPlan.toString
-      assert(p.contains("AsOfJoin "),
-        "strategy must plan the surviving node as AsOfJoinExec:\n" + p.take(1500))
-      assert(!p.contains("!AsOfJoin"),
-        "exec node must declare produced/references cleanly (no invalid marker):\n" + p.take(1500))
-      assert(!p.contains("Window"), "the exec path must not fall back to the expansion:\n" + p.take(1200))
-      assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p.take(1200))
-      // two narrow per-side exchanges, not the expansion's union shape
-      assert(p.sliding("Exchange hashpartitioning".length)
-        .count(_ == "Exchange hashpartitioning") == 2, p.take(1500))
-    }
+    val df = AsOf.join(purchases, clicks, "user_id", "ts", "click_ts", "click_id")
+    // the exec node prints as "AsOfJoin" (TreeNode strips the Exec
+    // suffix); string-match because AQE wraps the plan out of reach of
+    // SparkPlan.exists before execution
+    val p = df.queryExecution.executedPlan.toString
+    assert(p.contains("AsOfJoin "),
+      "strategy must plan the node as AsOfJoinExec:\n" + p.take(1500))
+    assert(!p.contains("!AsOfJoin"),
+      "exec node must declare produced/references cleanly (no invalid marker):\n" + p.take(1500))
+    assert(!p.contains("Window"), "the as-of plan must not contain a Window:\n" + p.take(1200))
+    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p.take(1200))
+    // two narrow per-side exchanges, not a union shape
+    assert(p.sliding("Exchange hashpartitioning".length)
+      .count(_ == "Exchange hashpartitioning") == 2, p.take(1500))
   }
 
   test("exec: probe rows all survive; unmatched carry is null; empty build side") {
-    withImpl("exec") {
-      val out = AsOf.join(purchases, clicks, "user_id", "ts", "click_ts", "click_id")
-      assert(out.count() == purchases.count())
-      val none = clicks.filter(lit(false))
-      val empty = AsOf.join(purchases, none, "user_id", "ts", "click_ts", "click_id")
-      assert(empty.count() == purchases.count())
-      assert(empty.filter(col("click_ts").isNotNull).count() == 0)
-    }
-  }
-
-  test("exec == window on randomized tables with key collisions and ts ties") {
-    import spark.implicits._
-    val base = Timestamp.valueOf("2024-03-01 00:00:00").getTime
-    def tsOf(offSec: Long): Timestamp = new Timestamp(base + offSec * 1000L)
-    for (seed <- 1 to 5) {
-      val rnd = new scala.util.Random(seed)
-      // tiny key space + coarse ts grid force same-(key,ts) ties on both
-      // sides — the exact spot where carry overwrite order and the
-      // min/max-tie rules can silently diverge between implementations
-      // ~8% NULL ts on both sides: the expansion's nulls-first union order
-      // gives null-ts rows defined (if exotic) semantics, and the merge
-      // operator must reproduce them exactly — not crash, not epoch-0 them
-      def maybeNullTs(): Timestamp =
-        if (rnd.nextInt(12) == 0) null else tsOf(rnd.nextInt(50) * 60L)
-      val probes = (0 until 40 + rnd.nextInt(80))
-        .map(i => (rnd.nextInt(6).toLong, i.toLong, maybeNullTs()))
-        .toDF("user_id", "event_id", "ts")
-      val builds = (0 until 30 + rnd.nextInt(60))
-        .map(i => (rnd.nextInt(6).toLong, maybeNullTs(), (1000 + i).toLong))
-        .toDF("user_id", "click_ts", "click_id")
-      for ((dir, tol) <- cases) {
-        def run0 = rows(AsOf.join(probes, builds, "user_id", "ts",
-            "click_ts", "click_id", direction = dir, toleranceMicros = tol)
-          .orderBy("event_id"))
-        val viaWindow = run0
-        val viaExec = withImpl("exec")(run0)
-        assert(viaExec == viaWindow, s"seed=$seed direction=$dir tolerance=$tol")
-      }
-    }
-  }
-
-  test("impl parameter overrides the session default without touching conf") {
-    // explicit param beats the (unset) session default…
-    val pe = AsOf.join(purchases, clicks, "user_id", "ts", "click_ts",
-      "click_id", impl = Some("exec")).queryExecution.executedPlan.toString
-    assert(pe.contains("AsOfJoin ") && !pe.contains("Window"), pe.take(1200))
-    // …and a user-set session value is left exactly as the user set it
-    spark.conf.set("spark.graft.asofImpl", "exec")
-    try {
-      val pw = AsOf.join(purchases, clicks, "user_id", "ts", "click_ts",
-        "click_id", impl = Some("window")).queryExecution.executedPlan.toString
-      assert(pw.contains("Window") && !pw.contains("AsOfJoin "), pw.take(1200))
-      assert(spark.conf.get("spark.graft.asofImpl") == "exec",
-        "explicit impl must not clobber the user's session setting")
-    } finally spark.conf.unset("spark.graft.asofImpl")
-  }
-
-  test("impl is race-free: concurrent analyses with different impls keep their shapes") {
-    // ADVICE r6 #1: the old conf-set/finally-unset pattern let a
-    // concurrently-analyzed as-of silently switch implementation. The impl
-    // now rides on the plan node, so interleaved analyses are independent —
-    // hammer both paths from two threads and pin each plan's shape.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration._
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val results = (1 to 12).map { _ =>
-      val fe = Future(AsOf.join(purchases, clicks, "user_id", "ts",
-        "click_ts", "click_id", impl = Some("exec"))
-        .queryExecution.executedPlan.toString)
-      val fw = Future(AsOf.join(purchases, clicks, "user_id", "ts",
-        "click_ts", "click_id", impl = Some("window"))
-        .queryExecution.executedPlan.toString)
-      (Await.result(fe, 120.seconds), Await.result(fw, 120.seconds))
-    }
-    results.foreach { case (pe, pw) =>
-      assert(pe.contains("AsOfJoin ") && !pe.contains("Window"),
-        "exec analysis lost its physical node under concurrency:\n" + pe.take(1200))
-      assert(pw.contains("Window") && !pw.contains("AsOfJoin "),
-        "window analysis picked up the exec impl under concurrency:\n" + pw.take(1200))
-    }
+    val out = AsOf.join(purchases, clicks, "user_id", "ts", "click_ts", "click_id")
+    assert(out.count() == purchases.count())
+    val none = clicks.filter(lit(false))
+    val empty = AsOf.join(purchases, none, "user_id", "ts", "click_ts", "click_id")
+    assert(empty.count() == purchases.count())
+    assert(empty.filter(col("click_ts").isNotNull).count() == 0)
   }
 
   test("exec: SQL TVF path plans the physical operator and matches the window result") {
     purchases.createOrReplaceTempView("tvf_purchases")
     clicks.createOrReplaceTempView("tvf_clicks")
-    val sql =
+    val df = spark.sql(
       """SELECT event_id AS p_id, click_ts
         |FROM asof_join('tvf_purchases', 'tvf_clicks',
         |               'user_id', 'ts', 'click_ts', 'click_id')
-        |ORDER BY p_id""".stripMargin
-    val viaWindow = rows(spark.sql(sql))
-    withImpl("exec") {
-      val df = spark.sql(sql)
-      val p = df.queryExecution.executedPlan.toString
-      assert(p.contains("AsOfJoin ") && !p.contains("Window"), p.take(1200))
-      assert(rows(df) == viaWindow)
-    }
+        |ORDER BY p_id""".stripMargin)
+    val p = df.queryExecution.executedPlan.toString
+    assert(p.contains("AsOfJoin ") && !p.contains("Window"), p.take(1200))
+    // the hand-built union-tag-sort + running-last window composition
+    val viaWindow = SparkEntry.queries("join_asof")(spark, sf)
+      .select("p_id", "asof_click_ts")
+    assert(rows(df) == rows(viaWindow))
   }
 }

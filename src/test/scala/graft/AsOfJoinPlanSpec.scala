@@ -6,10 +6,10 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampType
 
-/** The plan-level as-of operator (graft.plans.AsOfJoin + AsOfJoinRewrite):
-  * semantics against the hand-built compositions, the expanded plan's scale
-  * shape (one keyed exchange, window, no NLJ), and the factory's contract
-  * validation.
+/** The plan-level as-of operator (graft.plans.AsOfJoin, planned as
+  * AsOfJoinExec): semantics against the hand-built compositions, the
+  * planned scale shape (the node survives analysis, two narrow keyed
+  * exchanges, no Window, no NLJ), and the factory's contract validation.
   */
 class AsOfJoinPlanSpec extends SparkSpec {
 
@@ -67,17 +67,17 @@ class AsOfJoinPlanSpec extends SparkSpec {
     assert(rows(viaPlan) == rows(handBuilt))
   }
 
-  test("expanded plan: no AsOfJoin node survives; one keyed exchange + window; no NLJ") {
+  test("plan shape: AsOfJoin survives; two keyed exchanges; no Window, no NLJ") {
     val df = AsOf.join(purchases, clicks, "user_id", "ts", "click_ts", "click_id")
-    assert(!df.queryExecution.analyzed.exists(_.isInstanceOf[AsOfJoin]),
-      "resolution rule must expand the node during analysis")
+    assert(df.queryExecution.analyzed.exists(_.isInstanceOf[AsOfJoin]),
+      "the node must survive analysis for AsOfJoinStrategy to plan it")
     val p = df.queryExecution.executedPlan.toString
-    assert(p.contains("Window"), p.take(1200))
+    assert(p.contains("AsOfJoin ") && !p.contains("Window"), p.take(1200))
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
       "as-of must never plan as a nested-loop pairing:\n" + p.take(1500))
     val exchanges = "Exchange hashpartitioning".r.findAllIn(p).size
-    assert(exchanges == 1,
-      s"expected exactly ONE keyed exchange, got $exchanges:\n" + p.take(2000))
+    assert(exchanges == 2,
+      s"expected exactly TWO narrow keyed exchanges, got $exchanges:\n" + p.take(2000))
   }
 
   test("nearest + tolerance bounds BOTH carries (matches brute force)") {

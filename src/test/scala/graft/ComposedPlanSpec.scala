@@ -26,8 +26,8 @@ class ComposedPlanSpec extends SparkSpec {
     assert(p.contains("dynamicpruning"),
       "the custom-node-fed dim must still inject a runtime partition filter:\n" +
         p.take(2000))
-    assert(p.contains("window"),
-      "the as-of window expansion must be in the same plan:\n" + p.take(2000))
+    assert(p.contains("asofjoin ") && !p.contains("window"),
+      "the physical as-of operator must be in the same plan:\n" + p.take(2000))
   }
 
   test("composed_sql_asof_range: both TVF rewrites fire in one analysis; equals the DataFrame chain") {

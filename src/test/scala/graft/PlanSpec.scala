@@ -280,9 +280,9 @@ class PlanSpec extends SparkSpec {
       "good/bad counts must come from ONE scan:\n" + p.take(1500))
   }
 
-  test("join_asof_plan: the rewrite yields the same no-NLJ window shape as join_asof") {
+  test("join_asof_plan: the node plans as AsOfJoinExec, no Window, no NLJ") {
     val p = plan("join_asof_plan")
-    assert(p.contains("Window"), p.take(1200))
+    assert(p.contains("AsOfJoin ") && !p.contains("Window"), p.take(1200))
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
       "the plan-level as-of must never pair ranges:\n" + p.take(1500))
   }

@@ -348,57 +348,87 @@ class PropertySpec extends SparkSpec {
 
   test("property: plan-level AsOfJoin equals brute force for every direction") {
     import spark.implicits._
-    val genPair: Gen[(List[(Long, Long, Long)], List[(Long, Long, Long)])] = for {
+    import plans.AsOfJoin.{Backward, Forward, Nearest}
+    type Row3 = (Long, Option[Long], Long) // (user_id, ts offset in s, id)
+    // every (direction, tolerance) pair; with the 30-min coarse grid below
+    // each tolerance is a whole number of steps, so the inclusive bound is hit
+    val cases: Seq[(String, Option[Long])] = Seq(
+      (Backward, None), (Forward, None), (Nearest, None),
+      (Backward, Some(2L * 3600)), (Forward, Some(2L * 3600)),
+      (Nearest, Some(30L * 60)))
+    // ~8% NULL ts on both sides; the coarse grid forces (key, ts) ties
+    def genRows(n: Int, coarse: Boolean, id0: Long): Gen[List[Row3]] =
+      Gen.listOfN(n, for {
+        u <- Gen.chooseNum(0L, 5L)
+        t <- if (coarse) Gen.chooseNum(0L, 20L).map(_ * 1800L)
+             else Gen.chooseNum(0L, 36000L)
+        ts <- Gen.frequency(1 -> Gen.const(None), 11 -> Gen.const(Some(t)))
+      } yield (u, ts)).map(_.zipWithIndex.map { case ((u, ts), i) => (u, ts, id0 + i) })
+    def genPair(coarse: Boolean): Gen[(List[Row3], List[Row3])] = for {
       np <- Gen.chooseNum(1, 40)
       nb <- Gen.chooseNum(0, 40)  // empty build side must also work
-      probes <- Gen.listOfN(np, for {
-        u <- Gen.chooseNum(0L, 5L); t <- Gen.chooseNum(0L, 2000L)
-      } yield (u, t))
-      builds <- Gen.listOfN(nb, for {
-        u <- Gen.chooseNum(0L, 5L); t <- Gen.chooseNum(0L, 2000L)
-      } yield (u, t))
-    } yield (
-      probes.zipWithIndex.map { case ((u, t), i) => (u, t, i.toLong) },
-      builds.zipWithIndex.map { case ((u, t), i) => (u, t, 1000L + i) })
+      probes <- genRows(np, coarse, 0L)
+      builds <- genRows(nb, coarse, 1000L)
+    } yield (probes, builds)
     val base = 1700000000L
-    def mk(rows: List[(Long, Long, Long)], ts: String, id: String) =
-      rows.map { case (u, t, i) =>
-        (u, new Timestamp((base + t) * 1000L), i)
-      }.toDF("user_id", ts, id)
-    for (i <- trials) {
-      val (p, b) = genPair(Gen.Parameters.default, Seed(i))
-        .getOrElse((List((0L, 0L, 0L)), Nil))
+    def bt(t: Long) = (base + t) * 1000L  // epoch ms of a ts offset
+    def mk(rows: List[Row3], ts: String, id: String) =
+      rows.map { case (u, t, i) => (u, t.map(x => new Timestamp(bt(x))), i) }
+        .toDF("user_id", ts, id)
+
+    /** The operator's documented rules (AsOfJoinExec): per key, build rows
+      * order by (ts NULLS FIRST, id); backward takes the last row at or
+      * before the probe in that order (a NULL build ts is before any
+      * non-null probe ts and AT a NULL one), forward the first row at or
+      * after it (for a NULL probe: the first row of the key), nearest the
+      * backward one against the first row strictly after the probe. A
+      * distance involving a NULL ts is NULL: it fails any tolerance, and in
+      * a nearest tie-break it picks the forward row.
+      */
+    def brute(cands: List[Row3], pt: Option[Long], dir: String,
+              tol: Option[Long]): Option[Row3] = {
+      val ordered = cands.sortBy(c => (c._2.isDefined, c._2.getOrElse(0L), c._3))
+      val back = ordered.filter(c => pt match {
+        case Some(t) => c._2.forall(_ <= t)
+        case None => c._2.isEmpty
+      }).lastOption
+      val fwd = if (dir == Forward) ordered.find(c => pt.forall(t => c._2.exists(_ >= t)))
+                else ordered.find(c => c._2.exists(b => pt.forall(b > _)))
+      def dist(c: Row3, isBack: Boolean): Option[Long] =
+        for (t <- pt; b <- c._2) yield if (isBack) t - b else b - t
+      def ok(c: Option[Row3], isBack: Boolean): Option[Row3] =
+        c.filter(r => tol.forall(tl => dist(r, isBack).exists(_ <= tl)))
+      (dir, ok(back, isBack = true), ok(fwd, isBack = false)) match {
+        case (Backward, b, _) => b
+        case (Forward, _, f) => f
+        case (_, Some(b), Some(f)) =>
+          if ((dist(b, true) zip dist(f, false)).exists { case (x, y) => x <= y }) Some(b)
+          else Some(f)
+        case (_, b, f) => b.orElse(f)
+      }
+    }
+
+    for (i <- trials; coarse <- Seq(false, true)) {
+      val (p, b) = genPair(coarse)(Gen.Parameters.default, Seed(i))
+        .getOrElse((List((0L, Some(0L), 0L)), Nil))
       val probe = mk(p, "ts", "p_id")
       val build = mk(b, "b_ts", "b_id")
-      def run(dir: String, tol: Option[Long] = None) =
-        operators.AsOf.join(probe, build, "user_id", "ts", "b_ts", "b_id",
-            direction = dir, toleranceMicros = tol)
-          .collect()
-          .map(r => r.getLong(2) -> Option(r.getTimestamp(3)).map(_.getTime))
-          .toMap
       val bByUser = b.groupBy(_._1)
-      def bt(t: Long) = (base + t) * 1000L  // expected carry in epoch ms
-      // backward: latest (ts, id) with b_ts <= ts
-      val back = run(plans.AsOfJoin.Backward)
-      val fwd = run(plans.AsOfJoin.Forward)
-      val near = run(plans.AsOfJoin.Nearest)
-      val tol = run(plans.AsOfJoin.Backward, Some(300L * 1000000))
-      assert(back.size == p.size && fwd.size == p.size, s"seed=$i left-join shape")
-      for ((u, t, id) <- p) {
-        val cands = bByUser.getOrElse(u, Nil)
-        val wb = cands.filter(_._2 <= t).sortBy(c => (c._2, c._3)).lastOption
-        val wf = cands.filter(_._2 >= t).sortBy(c => (c._2, c._3)).headOption
-        assert(back(id) == wb.map(c => bt(c._2)), s"seed=$i probe $id backward")
-        assert(fwd(id) == wf.map(c => bt(c._2)), s"seed=$i probe $id forward")
-        val wn = (wb, wf) match {
-          case (None, f) => f
-          case (bk, None) => bk
-          case (Some(bk), Some(f)) =>
-            if (t - bk._2 <= f._2 - t) Some(bk) else Some(f)
+      for ((dir, tol) <- cases) {
+        val got = operators.AsOf.join(probe, build, "user_id", "ts", "b_ts", "b_id",
+            direction = dir, toleranceMicros = tol.map(_ * 1000000L))
+          .collect()
+          .map(r => r.getLong(2) ->
+            (Option(r.getTimestamp(3)).map(_.getTime),
+              if (r.isNullAt(4)) None else Some(r.getLong(4))))
+          .toMap
+        val ctx = s"seed=$i coarse=$coarse direction=$dir tolerance=$tol"
+        assert(got.size == p.size, s"$ctx left-join shape")
+        for ((u, t, id) <- p) {
+          val want = brute(bByUser.getOrElse(u, Nil), t, dir, tol)
+          assert(got(id) == ((want.flatMap(_._2).map(bt), want.map(_._3))),
+            s"$ctx probe $id (user $u, ts $t)")
         }
-        assert(near(id) == wn.map(c => bt(c._2)), s"seed=$i probe $id nearest")
-        val wtol = wb.filter(c => (t - c._2) <= 300L)
-        assert(tol(id) == wtol.map(c => bt(c._2)), s"seed=$i probe $id tolerance")
       }
     }
   }
