@@ -21,16 +21,10 @@ object Service {
     val spark = GraftSession.builder(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val (rate, paced) = sources.GhArchiveSource.catchUpThenPace(
-      spark, archiveDir, outDir, ckptDir)
+    val (rate, q) = sources.GhArchiveSource.catchUpThenPace(
+      spark, archiveDir, outDir, ckptDir, compactEvery = compactEvery)
     println(s"[graft.Service] caught up; paced at $rate files/trigger, " +
       s"compacting every $compactEvery batches, TTL $ttlDays days")
-    // the paced query from catchUpThenPace has no compaction hook — restart
-    // it with the service's merge + retention policy (checkpoint carries on)
-    paced.stop()
-    val q = streaming.ArchiveStream.archive(
-      sources.GhArchiveSource.readStream(spark, archiveDir, rate),
-      outDir, ckptDir, compactEvery = compactEvery)
     sys.addShutdownHook {
       q.stop()
       streaming.ArchiveStream.compact(spark, outDir, ttlDays = Some(ttlDays))
@@ -49,7 +43,6 @@ object Service {
   */
 object Backfill {
   def main(args: Array[String]): Unit = {
-    import org.apache.spark.sql.functions._
     val Array(archiveDir, outDir, from, to) = args
     val spark = GraftSession.builder(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")).getOrCreate()
@@ -58,13 +51,7 @@ object Backfill {
         from = Some(sources.GhArchiveSource.parseHourKey(from)),
         to = Some(sources.GhArchiveSource.parseHourKey(to)))
       .dropDuplicates("id")
-      .withColumn("d", to_date(col("ts")))
-      .repartition(col("d"))
-      .sortWithinPartitions("ts", "id")
-    rows.write.mode("append")
-      .option("compression", "zstd")
-      .partitionBy("d")
-      .parquet(outDir)
+    streaming.ArchiveStream.append(rows, outDir)
     println(s"[graft.Backfill] loaded hours [$from, $to) into $outDir")
     spark.stop()
   }

@@ -22,10 +22,7 @@ object SparkEntry {
     val e = Tables.events(spark, sfDir)
     val w = Window.partitionBy("ts", "event_id").orderBy(col("value").desc)
     val deduped = e.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-    val mx = deduped.agg(max(col("ts")).as("mx"))
-    deduped
-      .crossJoin(broadcast(mx))
-      .filter(col("ts") >= col("mx") - expr("INTERVAL 3 DAYS"))
+    streaming.ArchiveStream.applyTtl(deduped)
       .groupBy(to_date(col("ts")).as("day"))
       .agg(
         count(lit(1)).as("n_events"),

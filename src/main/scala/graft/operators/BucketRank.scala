@@ -38,13 +38,23 @@ object BucketRank {
   def nBuckets(s: SparkSession): Int =
     math.max(32, s.sparkContext.defaultParallelism)
 
-  /** Uniform-width bucket id of `v` within the group's [mn, mx] value range
-    * (width_bucket — whole-stage-codegen arithmetic, returns 1..nb for
-    * in-range values and nb+1 for v == mx). Pure in `v`, monotone, total on
-    * the mn == mx degenerate group.
+  val NullBucket: Long = -1L
+
+  /** `v` if finite, else NULL: callers take `mn`/`mx` over it, since one
+    * NaN or infinity in the range makes `width_bucket` NULL for the group.
+    */
+  def finite(v: Column): Column = when(!isnan(v) && abs(v) =!= Double.PositiveInfinity, v)
+
+  /** Bucket id of `v`: uniform-width within the group's finite [mn, mx]
+    * (width_bucket — codegen arithmetic, 1..nb, nb+1 for v == mx, 1 when
+    * mn == mx). TOTAL and monotone in the windows' ascending order (NULLS
+    * FIRST, NaN above +Inf): NULL → [[NullBucket]], −Inf → 0, +Inf → nb+2,
+    * NaN → nb+3, so no row drops out of the bucket-keyed joins.
     */
   def bucketOf(v: Column, mn: Column, mx: Column, nb: Int): Column =
-    when(mn === mx, lit(1L)).otherwise(width_bucket(v, mn, mx, lit(nb)))
+    when(v.isNull, NullBucket).when(isnan(v), nb + 3L)
+      .when(v === Double.NegativeInfinity, 0L).when(v === Double.PositiveInfinity, nb + 2L)
+      .when(mn === mx, 1L).otherwise(width_bucket(v, mn, mx, lit(nb)))
 
   /** NTile(b) bucket of the row with global row_number `rn` (1-based) in a
     * partition of `n` rows — Spark's own NTile algebra (the first n % b

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.streaming.ArchiveStream
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -70,11 +71,8 @@ object PipelineOps {
   private[operators] def writeSink(s: SparkSession, sfDir: String): String =
     OpCache.once(sfDir + "#sink") {
       val out = scratch(sfDir, "events_by_date")
-      val e = Tables.events(s, sfDir)
-        .withColumn("d", to_date(col("ts")))
-        .repartition(col("d"))
-        .sortWithinPartitions("ts", "event_id")
-      e.write.mode("overwrite")
+      ArchiveStream.byDay(Tables.events(s, sfDir), "event_id")
+        .write.mode("overwrite")
         .option("compression", "zstd")
         .partitionBy("d")
         .parquet(out)
@@ -219,10 +217,7 @@ object PipelineOps {
     // D3: TTL — keep rows within 3 days of the newest event (data-driven
     // "now", so the query is scale-independent).
     "ttl_filter" -> ((s, dir) => {
-      val e = Tables.events(s, dir)
-      val mx = e.agg(max(col("ts")).as("mx"))
-      e.crossJoin(broadcast(mx))
-        .filter(col("ts") >= col("mx") - expr("INTERVAL 3 DAYS"))
+      ArchiveStream.applyTtl(Tables.events(s, dir))
         .select("event_id", "ts", "user_id", "event_type")
         .orderBy("event_id")
     }),
@@ -309,10 +304,7 @@ object PipelineOps {
     "sink_orc_roundtrip" -> ((s, dir) => {
       val path = OpCache.once(dir + "#orc_sink") {
         val out = scratch(dir, "events_by_date_orc")
-        Tables.events(s, dir)
-          .withColumn("d", to_date(col("ts")))
-          .repartition(col("d"))
-          .sortWithinPartitions("ts", "event_id")
+        ArchiveStream.byDay(Tables.events(s, dir), "event_id")
           .write.mode("overwrite")
           .option("compression", "zstd")
           .partitionBy("d")

@@ -509,7 +509,8 @@ object RelationalOps {
         .select(col("l_returnflag"), col("l_extendedprice"))
         .filter(col("l_extendedprice").isNotNull)
       val mm = base0.groupBy("l_returnflag")
-        .agg(min("l_extendedprice").as("mn"), max("l_extendedprice").as("mx"))
+        .agg(min(BucketRank.finite(col("l_extendedprice"))).as("mn"),
+          max(BucketRank.finite(col("l_extendedprice"))).as("mx"))
       val b = base0.join(broadcast(mm), Seq("l_returnflag"))
         .withColumn("bkt",
           BucketRank.bucketOf(col("l_extendedprice"), col("mn"), col("mx"), nb))
@@ -1318,7 +1319,8 @@ object RelationalOps {
       val e = Tables.events(s, dir)
         .select(col("event_type"), col("event_id"), col("value"))
       val mm = e.groupBy("event_type")
-        .agg(min("value").as("mn"), max("value").as("mx"),
+        .agg(min(BucketRank.finite(col("value"))).as("mn"),
+          max(BucketRank.finite(col("value"))).as("mx"),
           count(lit(1)).as("n"))
       val b = e.join(broadcast(mm), Seq("event_type"))
         .withColumn("bkt", BucketRank.bucketOf(col("value"), col("mn"), col("mx"), nb))

@@ -174,7 +174,8 @@ object StatsOps {
           // (no-op here: the fixture quantities are integer-valued)
           floor(col("l_quantity")).as("w"))
       val mm = base.groupBy("l_returnflag")
-        .agg(min("l_extendedprice").as("mn"), max("l_extendedprice").as("mx"))
+        .agg(min(BucketRank.finite(col("l_extendedprice"))).as("mn"),
+          max(BucketRank.finite(col("l_extendedprice"))).as("mx"))
       val b = base.join(broadcast(mm), Seq("l_returnflag"))
         .withColumn("bkt",
           BucketRank.bucketOf(col("l_extendedprice"), col("mn"), col("mx"), nb))
@@ -183,11 +184,14 @@ object StatsOps {
       val stats = b.groupBy("l_returnflag", "bkt").agg(sum("w").as("bw"))
         .withColumn("cumw", sum("bw").over(wB))
         .withColumn("tot", sum("bw").over(Window.partitionBy("l_returnflag")))
+      // NULL prices sort first and carry weight, but min() ignores them: when
+      // their bucket crosses, the answer is the first priced bucket's
+      // minimum (every row there qualifies), so prefer priced buckets
       val crossing = stats.filter(lit(2L) * col("cumw") >= col("tot"))
         .groupBy("l_returnflag")
         .agg(min_by(
           struct(col("bkt"), (col("cumw") - col("bw")).as("off"), col("tot")),
-          col("bkt")).as("cb"))
+          struct(col("bkt") === BucketRank.NullBucket, col("bkt"))).as("cb"))
         .select(col("l_returnflag").as("c_rf"), col("cb.bkt").as("c_bkt"),
           col("cb.off").as("off"), col("cb.tot").as("tot"))
       val cum = Window.partitionBy("l_returnflag").orderBy("l_extendedprice")
@@ -818,7 +822,8 @@ object StatsOps {
       val mom = ev.groupBy("day")
         .agg(count(lit(1)).as("n"), sum(cc).as("svc"),
           sum(cc * cc).as("sq4"),
-          min("value").as("mn"), max("value").as("mx"))
+          min(BucketRank.finite(col("value"))).as("mn"),
+          max(BucketRank.finite(col("value"))).as("mx"))
         .withColumn("mu",
           col("svc").cast(DoubleType) / (lit(100.0) * col("n")))
         .withColumn("sd", sqrt(

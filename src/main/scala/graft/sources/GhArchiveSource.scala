@@ -74,7 +74,7 @@ object GhArchiveSource {
     }.sortBy(_._3.toEpochSecond(java.time.ZoneOffset.UTC)).map(t => (t._1, t._2))
   }
 
-  /** Batch read of an hour range as (id, created_at ts, raw, hour).
+  /** Batch read of an hour range as (id, created_at ts, hour).
     * `failFast = true` reproduces the reference's abort-on-parse-error
     * (ref: cmd/gh-load/main.go:131-134); false keeps malformed rows with
     * null fields (PERMISSIVE).
@@ -84,37 +84,36 @@ object GhArchiveSource {
            failFast: Boolean = true): DataFrame = {
     val paths = listHours(dir, from, to).map(_._1)
     require(paths.nonEmpty, s"no hour files in range under $dir")
-    val raw = spark.read
-      .schema(schema.add("_corrupt_record", StringType))
-      .option("mode", if (failFast) "FAILFAST" else "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .json(paths: _*)
-      .select(col("id"), col("created_at"), col("_metadata.file_path").as("fp"))
-    raw.select(
-      col("id"),
-      to_timestamp(col("created_at")).as("ts"),
-      // TIMESTAMP_NTZ: the hour key is a calendar label (the reference's
-      // archive key, always UTC-hour-of-day), not an instant — NTZ keeps it
-      // independent of the session timezone, where to_timestamp would shift
-      // it in any non-UTC session
-      to_timestamp_ntz(
-        regexp_extract(col("fp"), "(" + keyPattern + raw")\.json\.gz$$", 1),
-        lit("yyyy-MM-dd-H")).as("hour"))
+    decode(spark.read.schema(readSchema).options(readOptions(failFast))
+      .json(paths: _*))
   }
 
-  /** Streaming read over the same directory — the live-poll analog (A1) for
-    * offline use: new hour files are discovered per micro-batch, and
-    * `maxFilesPerTrigger` is the rate-pacing knob (C6,
-    * ref: cmd/gh-archived/main.go:180-193 adaptive pacing; here the
-    * static Spark equivalent).
-    *
-    * Batch/stream parity: the glob can only approximate `fileRe` (globs
-    * can't express hour <= 23), so rows are additionally filtered on the
-    * SAME `keyPattern` applied to `_metadata.file_path` — an invalid-hour
-    * artifact like `2024-01-15-99.json.gz` that `listHours` skips is dropped
-    * here too. The derived `hour` column and the FAILFAST/PERMISSIVE policy
-    * match `read` exactly.
+  /** Reader schema and mode options shared by `read` and `readStream`. */
+  private val readSchema = schema.add("_corrupt_record", StringType)
+  private def readOptions(failFast: Boolean): Map[String, String] = Map(
+    "mode" -> (if (failFast) "FAILFAST" else "PERMISSIVE"),
+    "columnNameOfCorruptRecord" -> "_corrupt_record")
+
+  /** The one decode of a scanned hour file into (id, ts, hour), shared by
+    * `read` and `readStream` so batch/stream parity holds by construction.
+    * Rows whose file name is not a valid hour key are dropped: a no-op
+    * after `listHours`, and the row-level half of `readStream`'s glob.
     */
+  private def decode(json: DataFrame): DataFrame =
+    json
+      .select(col("id"), col("created_at"),
+        regexp_extract(col("_metadata.file_path"),
+          "(?:^|/)(" + keyPattern + raw")\.json\.gz$$", 1).as("key"))
+      .filter(col("key") =!= "")
+      .select(
+        col("id"),
+        to_timestamp(col("created_at")).as("ts"),
+        // TIMESTAMP_NTZ: the hour key is a calendar label (the reference's
+        // archive key, always UTC-hour-of-day), not an instant — NTZ keeps
+        // it independent of the session timezone, where to_timestamp would
+        // shift it in any non-UTC session
+        to_timestamp_ntz(col("key"), lit("yyyy-MM-dd-H")).as("hour"))
+
   /** C6 adaptive pacing controller (ref: cmd/gh-archived/main.go:180-193).
     * The reference recomputes its poll rate from rate-limit headers every
     * cycle; offline, the observable is batch wall time, and the controller
@@ -143,12 +142,14 @@ object GhArchiveSource {
     * `Trigger.AvailableNow` pass drains the backlog (the gh-load backfill
     * mode) while observing per-batch wall times, then a `ProcessingTime`
     * query resumes from the same checkpoint with the controller-adapted
-    * rate. Returns (adapted files-per-trigger, the running paced query).
+    * rate and compacts every `compactEvery` batches (0: never). Returns
+    * (adapted files-per-trigger, the running paced query).
     */
   def catchUpThenPace(spark: SparkSession, dir: String, outDir: String,
                       checkpointDir: String, targetBatchMs: Long = 5000L,
                       initialMaxFiles: Int = 1,
-                      triggerInterval: String = "5 seconds"):
+                      triggerInterval: String = "5 seconds",
+                      compactEvery: Int = 0):
       (Int, org.apache.spark.sql.streaming.StreamingQuery) = {
     import org.apache.spark.sql.streaming.Trigger
     val catchUp = graft.streaming.ArchiveStream.archive(
@@ -161,27 +162,28 @@ object GhArchiveSource {
     val adapted = adaptedMaxFiles(initialMaxFiles, observed, targetBatchMs)
     val paced = graft.streaming.ArchiveStream.archive(
       readStream(spark, dir, adapted), outDir, checkpointDir,
-      Trigger.ProcessingTime(triggerInterval))
+      Trigger.ProcessingTime(triggerInterval), compactEvery)
     (adapted, paced)
   }
 
+  /** Streaming read over the same directory — the live-poll analog (A1) for
+    * offline use: new hour files are discovered per micro-batch, and
+    * `maxFilesPerTrigger` is the rate-pacing knob (C6,
+    * ref: cmd/gh-archived/main.go:180-193 adaptive pacing; here the
+    * static Spark equivalent).
+    *
+    * Batch/stream parity: the glob can only approximate `fileRe` (globs
+    * can't express hour <= 23), so rows are additionally filtered on the
+    * SAME `keyPattern` applied to `_metadata.file_path` — an invalid-hour
+    * artifact like `2024-01-15-99.json.gz` that `listHours` skips is dropped
+    * here too. Schema, FAILFAST/PERMISSIVE policy and the derived `hour`
+    * column come from the same `decode` as `read`.
+    */
   def readStream(spark: SparkSession, dir: String,
                  maxFilesPerTrigger: Int = 1, failFast: Boolean = true): DataFrame =
-    spark.readStream
-      .schema(schema.add("_corrupt_record", StringType))
-      .option("mode", if (failFast) "FAILFAST" else "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
+    decode(spark.readStream.schema(readSchema).options(readOptions(failFast))
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       // coarse listing-level cut: a stray summary.json.gz never enters the
-      // stream; the keyPattern filter below finishes the job row-level
-      .json(s"$dir/[0-9]*-[0-9]*-[0-9]*-[0-9]*.json.gz")
-      .select(col("id"), col("created_at"),
-        regexp_extract(col("_metadata.file_path"),
-          "(?:^|/)(" + keyPattern + raw")\.json\.gz$$", 1).as("key"))
-      .filter(col("key") =!= "")
-      .select(
-        col("id"),
-        to_timestamp(col("created_at")).as("ts"),
-        // same NTZ calendar-label semantics as the batch `read` hour column
-        to_timestamp_ntz(col("key"), lit("yyyy-MM-dd-H")).as("hour"))
+      // stream; decode's keyPattern filter finishes the job row-level
+      .json(s"$dir/[0-9]*-[0-9]*-[0-9]*-[0-9]*.json.gz"))
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -61,6 +62,24 @@ object ArchiveStream {
       .agg(count(lit(1)).as("n"))
       .select(col("w.start").as("hour"), col("n"))
 
+  /** The archive layout, stated once (ref: README.md:8-17 `PARTITION BY
+    * toDate(ts) ORDER BY (ts, id)`): a `d` day column, one shuffle by day
+    * and a (ts, key) sort; `key` is `event_id` on the fixture tables.
+    */
+  def byDay(df: DataFrame, key: String = "id"): DataFrame =
+    df.withColumn("d", to_date(col("ts")))
+      .repartition(col("d"))
+      .sortWithinPartitions("ts", key)
+
+  /** The archive append of both the streaming sink and the backfill:
+    * [[byDay]], then day-partitioned zstd parquet.
+    */
+  def append(df: DataFrame, outDir: String): Unit =
+    byDay(df).write.mode("append")
+      .option("compression", "zstd")
+      .partitionBy("d")
+      .parquet(outDir)
+
   /** The full service: source → dedup → day-partitioned sorted zstd parquet
     * sink (C5/D1/D2/D5). Checkpointing gives the restart/redial durability the
     * reference gets from ETag + ReplacingMergeTree (ref: main.go:44-52,110).
@@ -70,6 +89,8 @@ object ArchiveStream {
     * collapses them by key (replace_by_key, C2/D4) — the ReplacingMergeTree
     * contract (ref: README.md:14; retries lean on it, cmd/gh-load/
     * main.go:257-261). StreamingSpec proves the replay→read round trip.
+    * `compactEvery > 0` runs [[compact]] after every `compactEvery`-th
+    * batch; its crash window adds duplicates under the same contract.
     */
   def archive(events: DataFrame, outDir: String, checkpointDir: String,
               trigger: Trigger = Trigger.ProcessingTime("5 seconds"),
@@ -81,14 +102,7 @@ object ArchiveStream {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch
-          .withColumn("d", to_date(col("ts")))
-          .repartition(col("d"))
-          .sortWithinPartitions("ts", "id")
-          .write.mode("append")
-          .option("compression", "zstd")
-          .partitionBy("d")
-          .parquet(outDir)
+        append(batch, outDir)
         // fault-injection seam: runs after the sink append but before the
         // micro-batch commits to the checkpoint — throwing here is exactly
         // a crash in the at-least-once window (StreamingSpec's
@@ -116,13 +130,12 @@ object ArchiveStream {
     * The rewrite preserves the row multiset EXACTLY: at-least-once replay
     * duplicates stay in storage and keep collapsing at replace-by-key read
     * time (the ReplacingMergeTree contract, ref: README.md:14), so reads
-    * before and after compaction are identical and the pass is idempotent —
-    * re-running it (or crashing mid-pass and re-running) converges on the
-    * same layout. The swap is two renames; a crash between them leaves the
-    * partition readable from the retained `.compact-old` directory rule:
-    * old data is deleted only after the compacted directory is in place.
-    * Runs serialized with appends (from the foreachBatch hook above, or
-    * between jobs); returns the rewritten partition names.
+    * before and after compaction are identical. Each partition is
+    * rewritten by [[appendThenDelete]]: a crash mid-pass leaves some rows
+    * twice, never zero times, and the next pass folds the extra copy into
+    * its rewrite like any other replay duplicate. Runs serialized with
+    * appends (from the foreachBatch hook above, or between jobs); returns
+    * the rewritten partition names.
     *
     * `ttlDays`: ClickHouse enforces `TTL ts + INTERVAL n DAY` AT MERGE
     * TIME, dropping whole expired parts (ref: README.md:17) — passing
@@ -132,11 +145,10 @@ object ArchiveStream {
     * not the wall clock, so offline replays are deterministic. Dropped
     * partitions are reported alongside rewritten ones.
     */
-  def compact(spark: org.apache.spark.sql.SparkSession, outDir: String,
+  def compact(spark: SparkSession, outDir: String,
               maxFilesPerPartition: Int = 4,
               targetBytesPerFile: Long = 128L * 1024 * 1024,
               ttlDays: Option[Int] = None): Seq[String] = {
-    import org.apache.hadoop.fs.Path
     val root = new Path(outDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return Seq.empty
@@ -144,7 +156,7 @@ object ArchiveStream {
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("d="))
     val dropped = ttlDays match {
       case Some(days) if allParts.nonEmpty =>
-        val day = (s: org.apache.hadoop.fs.FileStatus) =>
+        val day = (s: FileStatus) =>
           java.time.LocalDate.parse(s.getPath.getName.stripPrefix("d=")).toEpochDay
         val cutoff = allParts.map(day).max - days.toLong
         allParts.filter(p => day(p) < cutoff).map { p =>
@@ -155,33 +167,45 @@ object ArchiveStream {
     }
     val parts = allParts.filterNot(p => dropped.contains(p.getPath.getName))
     dropped ++ parts.toSeq.flatMap { p =>
-      val files = fs.listStatus(p.getPath)
-        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+      val files = parquetFiles(fs, p.getPath)
       if (files.length <= maxFilesPerPartition) None
       else {
         val bytes = files.map(_.getLen).sum
         val nOut = math.max(1, math.ceil(bytes.toDouble / targetBytesPerFile).toInt)
-        val tmp = new Path(p.getPath.getParent, ".compact-tmp-" + p.getPath.getName)
-        val old = new Path(p.getPath.getParent, ".compact-old-" + p.getPath.getName)
-        fs.delete(tmp, true); fs.delete(old, true)
-        spark.read.parquet(p.getPath.toString)
-          .repartitionByRange(nOut, col("ts"), col("id"))
-          .sortWithinPartitions("ts", "id")
-          .write.mode("overwrite").option("compression", "zstd")
-          .parquet(tmp.toString)
-        // drop the _SUCCESS marker so the dir holds parquet only
-        fs.delete(new Path(tmp, "_SUCCESS"), false)
-        fs.rename(p.getPath, old)
-        fs.rename(tmp, p.getPath)
-        fs.delete(old, true)
+        appendThenDelete(spark, p.getPath, files)(
+          _.repartitionByRange(nOut, col("ts"), col("id"))
+            .sortWithinPartitions("ts", "id"))
         Some(p.getPath.getName)
       }
     }
   }
 
-  /** TTL compaction pass (D3, ref: README.md:17 `TTL ts + INTERVAL 3 DAY`):
-    * run periodically over the sink (the reference delegates this to
-    * ClickHouse merges; here it is an explicit retention rewrite).
+  private def parquetFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    fs.listStatus(dir).filter(f => f.isFile && f.getPath.getName.endsWith(".parquet")).toSeq
+
+  /** The one in-place rewrite protocol both compactors share: append
+    * `rewrite` of the rows in `files` into `dir` itself, then delete
+    * `files` and the write's `_SUCCESS` marker. Nothing is renamed and
+    * nothing is deleted before the rewritten copy is committed, so a crash
+    * at any point leaves every row readable — between the append and the
+    * deletes, twice. Both readers absorb that: replace-by-key reads
+    * collapse the archive's duplicate rows, and an HLL union ignores a
+    * repeated sketch.
+    */
+  private def appendThenDelete(spark: SparkSession, dir: Path, files: Seq[FileStatus])(
+      rewrite: DataFrame => DataFrame): Unit = {
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    rewrite(spark.read.parquet(files.map(_.getPath.toString): _*))
+      .write.mode("append").option("compression", "zstd")
+      .parquet(dir.toString)
+    files.foreach(f => fs.delete(f.getPath, false))
+    fs.delete(new Path(dir, "_SUCCESS"), false)
+  }
+
+  /** TTL retention (D3, ref: README.md:17 `TTL ts + INTERVAL 3 DAY`): keep
+    * rows within `days` of the newest `ts` — a data-driven "now", so
+    * replays and every scale agree. The one statement of the filter: the
+    * `ttl_filter` key and `SparkEntry.entry` call it.
     */
   def applyTtl(archived: DataFrame, days: Int = 3): DataFrame = {
     val cutoff = archived.agg(max(col("ts")).as("mx"))
@@ -224,8 +248,7 @@ object ArchiveStream {
   /** Reader side of the sketch MV: per-day distinct-key estimates from the
     * accumulated partials alone.
     */
-  def sketchRollup(spark: org.apache.spark.sql.SparkSession,
-                   mvDir: String): DataFrame =
+  def sketchRollup(spark: SparkSession, mvDir: String): DataFrame =
     spark.read.parquet(mvDir)
       .groupBy("day")
       .agg(hll_sketch_estimate(hll_union_agg(col("sketch"))).as("approx_uniques"))
@@ -234,49 +257,25 @@ object ArchiveStream {
     * directory "compacts like any small-file sink", now demonstrated, not
     * claimed): rewrite the |days|×batches partial rows as ONE pre-merged
     * partial per day. The rewrite IS the rollup algebra — `hll_union_agg`
-    * is register-wise max, associative and commutative, so
+    * is register-wise max, associative, commutative and idempotent, so
     * union(compacted) == union(all originals) REGISTER-FOR-REGISTER and
     * every subsequent `sketchRollup` is bit-identical before and after
-    * (StreamingSpec pins it). Same swap discipline as [[compact]]: write
-    * to a `.compact-tmp` sibling, two renames, delete old only after the
-    * compacted directory is in place; serialized with appends (run it
-    * between micro-batches or from a foreachBatch hook). Returns the
-    * (before, after) partial-row counts.
+    * (StreamingSpec pins it). Same [[appendThenDelete]] protocol as
+    * [[compact]]: a crash between the append and the deletes leaves the
+    * old partials next to their merged copy, which the union absorbs, and
+    * the next pass merges both back to one row per day. Serialized with
+    * appends (run it between micro-batches or from a foreachBatch hook).
+    * Returns the (before, after) partial-row counts.
     */
-  def compactSketchPartials(spark: org.apache.spark.sql.SparkSession,
-                            mvDir: String): (Long, Long) = {
-    import org.apache.hadoop.fs.Path
+  def compactSketchPartials(spark: SparkSession, mvDir: String): (Long, Long) = {
     val root = new Path(mvDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // Crash recovery (ADVICE r7 #3): the swap below is two non-atomic
-    // renames. A crash between rename(root→old) and rename(tmp→root)
-    // leaves NO directory at mvDir with the data stranded in the
-    // `.compact-old` sibling — so every entry first restores a leftover
-    // `.compact-old` when mvDir itself is gone (the data it holds is the
-    // full pre-compaction MV, so restoring then re-compacting is exact).
-    // If mvDir exists the leftover is the post-swap stale copy and is
-    // deleted below as before. Readers (`sketchRollup`) remain exposed to
-    // the rename window itself — the documented contract is that
-    // compaction is serialized with readers as well as appends (run it
-    // between micro-batches); this recovery closes the CRASH case, not
-    // concurrent reads.
-    val old = new Path(root.getParent, ".compact-old-" + root.getName)
-    if (!fs.exists(root)) {
-      if (!fs.exists(old)) return (0L, 0L)
-      fs.rename(old, root) // restore the stranded pre-compaction MV
-    }
-    val partials = spark.read.parquet(mvDir)
-    val before = partials.count()
-    val merged = partials.groupBy("day")
-      .agg(hll_union_agg(col("sketch")).as("sketch"))
-    val tmp = new Path(root.getParent, ".compact-tmp-" + root.getName)
-    fs.delete(tmp, true); fs.delete(old, true)
-    val after = merged.count()
-    merged.write.mode("overwrite").parquet(tmp.toString)
-    fs.delete(new Path(tmp, "_SUCCESS"), false)
-    fs.rename(root, old)
-    fs.rename(tmp, root)
-    fs.delete(old, true)
-    (before, after)
+    val files = if (fs.exists(root)) parquetFiles(fs, root) else Nil
+    if (files.isEmpty) return (0L, 0L)
+    val partials = spark.read.parquet(files.map(_.getPath.toString): _*)
+    val counts = (partials.count(), partials.select("day").distinct().count())
+    appendThenDelete(spark, root, files)(
+      _.groupBy("day").agg(hll_union_agg(col("sketch")).as("sketch")))
+    counts
   }
 }

@@ -29,9 +29,11 @@ class R10RewriteEquivalenceSpec extends SparkSpec {
     assert(rows(SparkEntry.queries("agg_cube")(spark, sf)) == rows(direct))
   }
 
-  test("agg_quantiles_multi order-statistics form equals the percentile aggregate") {
-    val cuts = array(lit(0.25), lit(0.5), lit(0.75), lit(0.95))
-    val direct = Tables.lineitem(spark, sf)
+  private val cutPs = Seq(0.25, 0.5, 0.75, 0.95)
+
+  private def quantilesDirect(dir: String): DataFrame = {
+    val cuts = array(cutPs.map(lit): _*)
+    Tables.lineitem(spark, dir)
       .groupBy("l_returnflag")
       .agg(percentile(col("l_extendedprice"), cuts).as("qs"))
       .select(col("l_returnflag"),
@@ -40,7 +42,40 @@ class R10RewriteEquivalenceSpec extends SparkSpec {
         round(element_at(col("qs"), 3), 4).as("p75"),
         round(element_at(col("qs"), 4), 4).as("p95"))
       .orderBy("l_returnflag")
-    assert(rows(SparkEntry.queries("agg_quantiles_multi")(spark, sf)) == rows(direct))
+  }
+
+  test("agg_quantiles_multi order-statistics form equals the percentile aggregate") {
+    assert(rows(SparkEntry.queries("agg_quantiles_multi")(spark, sf)) ==
+      rows(quantilesDirect(sf)))
+  }
+
+  test("agg_quantiles_multi equals the percentile aggregate when a cut's two ranks straddle buckets") {
+    import spark.implicits._
+    // group C: 98 distinct prices 0..97, so p·(n−1) is fractional for three
+    // cuts, plus a +Inf row (rank 98, past every cut's ceiling rank) and a
+    // NULL row (ignored by both forms); group D: 2-dp prices with ties
+    val rnd = new scala.util.Random(3)
+    val c = (0 until 98).map(v => ("C", Option(v.toDouble))) ++
+      Seq(("C", Some(Double.PositiveInfinity)), ("C", None))
+    val d = (0 until 57).map(_ => ("D", Option(rnd.nextInt(400) / 4.0)))
+    val dir = java.nio.file.Files.createTempDirectory("graft-qmulti-").toString
+    (c ++ d).toDF("l_returnflag", "l_extendedprice")
+      .write.parquet(s"$dir/lineitem.parquet")
+    // premise: some cut's floor and ceiling ranks fall in different buckets
+    val nb = operators.BucketRank.nBuckets(spark)
+    val finite = (0 until 98).map(_.toDouble)
+    val bucket = (v: Double) => Seq(v).toDF("v")
+      .select(operators.BucketRank.bucketOf(col("v"), lit(finite.min),
+        lit(finite.max), nb)).head().getLong(0)
+    val n = c.count(_._2.isDefined)
+    assert(cutPs.exists { p =>
+      val pos = p * (n - 1)
+      pos.ceil.toInt < finite.size &&
+        bucket(finite(pos.floor.toInt)) != bucket(finite(pos.ceil.toInt))
+    })
+    assert(cutPs.forall(p => (p * (n - 1)).ceil < n - 1), "a cut reaches the +Inf row")
+    assert(rows(SparkEntry.queries("agg_quantiles_multi")(spark, dir)) ==
+      rows(quantilesDirect(dir)))
   }
 
   test("replace_by_key max_by argmax equals the rank-1 window form") {

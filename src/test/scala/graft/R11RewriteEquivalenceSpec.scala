@@ -13,7 +13,8 @@ import org.apache.spark.sql.types._
   * agg_distinct. Each test pins the shipped query bit-equal to the
   * superseded single-level formulation on the real fixture, plus synthetic
   * edge cases the fixture cannot exercise (NULL group keys / NULL counted
-  * columns; every n mod 4 residue and n < buckets for the NTile algebra).
+  * columns; every n mod 4 residue and n < buckets for the NTile algebra;
+  * NULL, NaN and ±Inf ordering values for the bucketed ranks).
   */
 class R11RewriteEquivalenceSpec extends SparkSpec {
 
@@ -47,18 +48,18 @@ class R11RewriteEquivalenceSpec extends SparkSpec {
     assert(both.filter(col("direct") =!= col("alg")).count() == 0)
   }
 
-  test("window_distribution bucketed rank equals the single window") {
+  /** The single-window form each bucketed key replaced, on any sf dir. */
+  private def windowDistributionDirect(dir: String): DataFrame = {
     val w = Window.partitionBy("event_type").orderBy("value", "event_id")
-    val direct = Tables.events(spark, sf)
+    Tables.events(spark, dir)
       .select(col("event_type"), col("event_id"), col("value"),
         ntile(4).over(w).cast(LongType).as("quartile"),
         percent_rank().over(w).as("pr"),
         cume_dist().over(w).as("cd"))
       .orderBy("event_type", "event_id")
-    assert(rows(SparkEntry.queries("window_distribution")(spark, sf)) == rows(direct))
   }
 
-  test("stat_anderson_darling bucketed rank + groupBy moments equal the window form") {
+  private def andersonDarlingDirect(dir: String): DataFrame = {
     val byDay = Window.partitionBy("day")
     val ord = Window.partitionBy("day").orderBy("value", "event_id")
     def phi(z: org.apache.spark.sql.Column) = {
@@ -70,7 +71,7 @@ class R11RewriteEquivalenceSpec extends SparkSpec {
       val erfc = poly * exp(-x * x)
       when(z >= 0, lit(1.0) - erfc / 2).otherwise(erfc / 2)
     }
-    val direct = Tables.events(spark, sf)
+    Tables.events(spark, dir)
       .select(to_date(col("ts")).as("day"), col("value"), col("event_id"))
       .withColumn("c",
         (col("value").cast(DecimalType(18, 2)) * 100).cast(LongType))
@@ -110,15 +111,13 @@ class R11RewriteEquivalenceSpec extends SparkSpec {
       .select(col("day"), col("n"), col("a2_stat"),
         (col("a2_stat") > 0.752).as("reject_normal"))
       .orderBy("day")
-    assert(rows(SparkEntry.queries("stat_anderson_darling")(spark, sf)) ==
-      rows(direct))
   }
 
-  test("agg_weighted_median bisection equals the cumulative-window form") {
+  private def weightedMedianDirect(dir: String): DataFrame = {
     val cum = Window.partitionBy("l_returnflag").orderBy("l_extendedprice")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val part = Window.partitionBy("l_returnflag")
-    val direct = Tables.lineitem(spark, sf)
+    Tables.lineitem(spark, dir)
       .select(col("l_returnflag"), col("l_extendedprice"),
         floor(col("l_quantity")).as("w"))
       .withColumn("cum", sum("w").over(cum))
@@ -128,8 +127,69 @@ class R11RewriteEquivalenceSpec extends SparkSpec {
       .agg(max("tot").as("total_w"),
         min("l_extendedprice").as("wmedian"))
       .orderBy("l_returnflag")
-    assert(rows(SparkEntry.queries("agg_weighted_median")(spark, sf)) ==
-      rows(direct))
+  }
+
+  /** Each bucketed key, its fixture test's name, and its single-window
+    * form. The adversarial pins compare `Row`s, whose equality holds NaN
+    * equal to NaN.
+    */
+  private val bucketed = Seq(
+    ("window_distribution", "bucketed rank equals the single window",
+      windowDistributionDirect _),
+    ("stat_anderson_darling", "bucketed rank + groupBy moments equal the window form",
+      andersonDarlingDirect _),
+    ("agg_weighted_median", "bisection equals the cumulative-window form",
+      weightedMedianDirect _))
+
+  /** A temp sf dir with the columns the bucketed keys read, holding what
+    * the fixture never does: NULL, NaN and ±Inf ordering values (also in
+    * groups with no finite value at all), an all-equal group, a hot group
+    * and, in lineitem group Z, a NULL-price block that carries more than
+    * half the weight.
+    */
+  private lazy val adversarialDir: String = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-bucketrank-").toString
+    val special = Seq(None, Some(Double.NaN), Some(Double.PositiveInfinity),
+      Some(Double.NegativeInfinity))
+    val rnd = new scala.util.Random(7)
+    def price(i: Int, base: Int) =
+      if (i % 13 == 0) special(i / 13 % 4) else Some((base + rnd.nextInt(3000)) / 100.0)
+    val events = (0 until 700).map { i =>
+      val (typ, day, v) =
+        if (i < 420) ("hot", 1 + i % 2, price(i, -1000))
+        else if (i < 500) ("a", 3, price(i, -1000))
+        else if (i < 540) ("eq", 4, Some(4.25))
+        else if (i < 560) ("nf", 5, special(i % 4))
+        else ("b", 1 + i % 3, price(i, -1000))
+      (i.toLong, java.sql.Timestamp.valueOf(f"2024-01-0$day%d ${i % 24}%02d:00:00"), typ, v)
+    }
+    events.toDF("event_id", "ts", "event_type", "value")
+      .write.parquet(s"$dir/events.parquet")
+    val lineitem = (0 until 560).map { i =>
+      val w = Some((1 + i % 50).toDouble)
+      if (i < 400) ("R", price(i, 90000), w)
+      else if (i < 460) ("A", price(i, 1000), if (i == 401) None else w)
+      else if (i < 490) ("N", Some(1234.5), w)
+      else if (i < 502) ("X", special(i % 4), w)
+      else if (i < 527) ("Z", None, Some(10.0))
+      else ("Z", price(i, 500), Some(1.0))
+    }
+    lineitem.toDF("l_returnflag", "l_extendedprice", "l_quantity")
+      .write.parquet(s"$dir/lineitem.parquet")
+    dir
+  }
+
+  for ((key, fixtureName, direct) <- bucketed) {
+    test(s"$key $fixtureName") {
+      assert(rows(SparkEntry.queries(key)(spark, sf)) == rows(direct(sf)))
+    }
+    test(s"$key keeps NULL, NaN and ±Inf rows like the single window") {
+      val got = SparkEntry.queries(key)(spark, adversarialDir).collect().toSeq
+      val want = direct(adversarialDir).collect().toSeq
+      assert(want.nonEmpty)
+      assert(got == want)
+    }
   }
 
   test("market_basket_lift basket arrays equal the posting self-join") {

@@ -176,6 +176,33 @@ class StreamingSpec extends SparkSpec {
     assert(rows() == rowsBefore)
   }
 
+  test("compact after a crash between its append and its deletes keeps every row") {
+    import spark.implicits._
+    val out = Files.createTempDirectory("graft-compact-crash-").toString + "/a"
+    val day = out + "/d=2024-01-01"
+    def add(ids: Range): Unit = for (i <- ids)
+      ArchiveStream.append(
+        Seq((i.toLong, ts(f"2024-01-01 10:$i%02d:00"), s"r$i")).toDF("id", "ts", "raw"), out)
+    def files(): Int = new java.io.File(day).listFiles().count(_.getName.endsWith(".parquet"))
+    def read(): Seq[(Long, String)] = spark.read.parquet(out).dropDuplicates("ts", "id")
+      .select("id", "raw").collect().map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
+    add(0 to 5)
+    val before = read()
+    // the crash window: the day's rewrite was appended into the day dir,
+    // but the six fragment files it replaces were never deleted
+    spark.read.parquet(day)
+      .repartitionByRange(1, col("ts"), col("id")).sortWithinPartitions("ts", "id")
+      .write.mode("append").option("compression", "zstd").parquet(day)
+    assert(files() == 7)
+    assert(spark.read.parquet(out).count() == 12, "every row is stored twice")
+    assert(read() == before, "the duplicate copy changed replace-by-key reads")
+    // replay of the last batch, then more appends, then the next compaction
+    add(5 to 10)
+    assert(ArchiveStream.compact(spark, out, maxFilesPerPartition = 2) == Seq("d=2024-01-01"))
+    assert(read().map(_._1) == (0L to 10L))
+    assert(files() <= 2)
+  }
+
   test("compact with ttlDays drops whole expired day partitions, like merge-time TTL") {
     import spark.implicits._
     val out = Files.createTempDirectory("graft-compact-ttl-").toString + "/a"
@@ -295,21 +322,19 @@ class StreamingSpec extends SparkSpec {
     assert(withNew("2024-01-01") == first("2024-01-01") &&
       withNew("2024-01-02") == first("2024-01-02") + 1,
       s"post-compaction append lost: $withNew vs $first")
-    // crash recovery (ADVICE r7 #3): simulate a crash BETWEEN the two swap
-    // renames — mvDir gone, all data stranded in the `.compact-old`
-    // sibling — and verify the next compactSketchPartials entry restores
-    // it and completes: same rollup, partials re-merged to one per day.
-    val fs = new org.apache.hadoop.fs.Path(mv)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = new org.apache.hadoop.fs.Path(mv)
-    val stranded = new org.apache.hadoop.fs.Path(
-      root.getParent, ".compact-old-" + root.getName)
-    assert(fs.rename(root, stranded), "test setup: strand the MV")
-    assert(!fs.exists(root))
+    // crash window: compaction appended its merged copy (one row per day)
+    // but died before deleting the partials it merged — both sit in the MV
+    spark.read.parquet(mv).groupBy("day")
+      .agg(hll_union_agg(col("sketch")).as("sketch"))
+      .write.mode("append").parquet(mv)
+    assert(spark.read.parquet(mv).count() == 5)
+    assert(rollup == withNew, "the duplicated partials changed the rollup")
     val (rb, ra) = ArchiveStream.compactSketchPartials(spark, mv)
-    assert(rb == 3L && ra == 2L, s"post-crash compaction got $rb -> $ra")
-    assert(fs.exists(root) && !fs.exists(stranded))
-    assert(rollup == withNew, "crash recovery changed the rollup")
+    assert(rb == 5L && ra == 2L, s"post-crash compaction got $rb -> $ra")
+    val perDay = spark.read.parquet(mv).groupBy("day").count()
+      .collect().map(r => r.get(0).toString -> r.getLong(1)).toMap
+    assert(perDay == Map("2024-01-01" -> 1L, "2024-01-02" -> 1L))
+    assert(rollup == withNew, "post-crash compaction changed the rollup")
   }
 
   test("flatMapGroupsWithState streaming funnel: levels equal the batch event_funnel") {
