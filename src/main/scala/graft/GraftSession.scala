@@ -23,6 +23,20 @@ import org.apache.spark.sql.SparkSession
   *    (collect_list). The MinHash sketch buffer is a fixed 512 B, so 100k
   *    in-memory groups cost ~50 MB per task: keep the hash path, never pay
   *    a posting sort (measured 9 s -> 0.8 s on dedup_minhash).
+  *  - `fs.file.impl` / `fs.AbstractFileSystem.file.impl`: Hadoop's local
+  *    filesystem, without `libhadoop.so`, forks a `chmod` process for every
+  *    file it creates and a `readlink` process for every `FileContext`
+  *    rename. One run of perfbench's `ingest` workload (a 96k-row dedup
+  *    state, 5 s of polls) started 2,051 such processes: 1,524 for
+  *    state-store delta and checksum files, 366 for the offsets and commits
+  *    logs, 128 for parquet job commits, 33 for checkpoint metadata; its
+  *    `backfill` started 64 and `query` 99. With the two classes below it
+  *    starts none. [[NioLocalFileSystem]] and [[NioLocalFs]] do the same
+  *    two things through NIO; the first key serves `FileSystem.get`, the
+  *    second `FileContext`, which Spark's checkpoint file manager uses.
+  *    Checksum files and atomic renames are unchanged. `FileSystem.get`
+  *    caches the first `file:` instance a JVM creates, so a session must be
+  *    built here before anything else touches the local filesystem.
   */
 object GraftSession {
   val tuning: Seq[(String, String)] = Seq(
@@ -42,6 +56,8 @@ object GraftSession {
     // shuffle.partitions.
     "spark.sql.cteRecursionRowLimit" -> "100000000",
     "spark.sql.extensions" -> "graft.GraftExtensions",
+    "spark.hadoop.fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[NioLocalFs].getName,
     "spark.sql.session.timeZone" -> "UTC",
     "spark.ui.enabled" -> "false")
 

@@ -6,7 +6,8 @@ package graft
   *  - `graft.Service` ≙ `gh-archived` (ref: cmd/gh-archived/main.go): the
   *    long-running archiver — catch up on the backlog, then poll at an
   *    adapted rate, periodically force-merging small files with TTL
-  *    retention, until killed.
+  *    retention, until killed. Every trigger prints its progress as one
+  *    JSON line (`streaming.ProgressLine`).
   *  - `graft.Backfill` ≙ `gh-load` (ref: cmd/gh-load/main.go:301-314): a
   *    bounded hour-range load into the same day-partitioned archive.
   */
@@ -21,6 +22,7 @@ object Service {
     val spark = GraftSession.builder(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark.streams.addListener(new streaming.ProgressLine)
     val (rate, q) = sources.GhArchiveSource.catchUpThenPace(
       spark, archiveDir, outDir, ckptDir, compactEvery = compactEvery)
     println(s"[graft.Service] caught up; paced at $rate files/trigger, " +

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
@@ -39,6 +39,15 @@ object BucketRank {
     math.max(32, s.sparkContext.defaultParallelism)
 
   val NullBucket: Long = -1L
+
+  /** `rows` with their group's `stats` columns, joined on `key` NULL-safe
+    * (`<=>`): the single-window forms keep a NULL key as a partition of its
+    * own, so its rows must not drop out here. The callers' later joins on
+    * the group key use `<=>` for the same reason.
+    */
+  def joinGroup(rows: DataFrame, stats: DataFrame, key: String): DataFrame =
+    rows.join(broadcast(stats.withColumnRenamed(key, "g_key")), col(key) <=> col("g_key"))
+      .drop("g_key")
 
   /** `v` if finite, else NULL: callers take `mn`/`mx` over it, since one
     * NaN or infinity in the range makes `width_bucket` NULL for the group.

@@ -511,7 +511,7 @@ object RelationalOps {
       val mm = base0.groupBy("l_returnflag")
         .agg(min(BucketRank.finite(col("l_extendedprice"))).as("mn"),
           max(BucketRank.finite(col("l_extendedprice"))).as("mx"))
-      val b = base0.join(broadcast(mm), Seq("l_returnflag"))
+      val b = BucketRank.joinGroup(base0, mm, "l_returnflag")
         .withColumn("bkt",
           BucketRank.bucketOf(col("l_extendedprice"), col("mn"), col("mx"), nb))
         .select(col("l_returnflag"), col("l_extendedprice"), col("bkt"))
@@ -531,7 +531,7 @@ object RelationalOps {
           col("off"), col("n"))
       val wL = Window.partitionBy("l_returnflag", "bkt").orderBy("l_extendedprice")
       val base = b.join(broadcast(want),
-          col("l_returnflag") === col("w_rf") && col("bkt") === col("w_bkt"))
+          col("l_returnflag") <=> col("w_rf") && col("bkt") === col("w_bkt"))
         .withColumn("rn", col("off") + row_number().over(wL))
       val withPos = ps.zipWithIndex.foldLeft(base) { case (df, (p, i)) =>
         df.withColumn(s"pos$i", lit(p) * (col("n") - 1))
@@ -1322,7 +1322,7 @@ object RelationalOps {
         .agg(min(BucketRank.finite(col("value"))).as("mn"),
           max(BucketRank.finite(col("value"))).as("mx"),
           count(lit(1)).as("n"))
-      val b = e.join(broadcast(mm), Seq("event_type"))
+      val b = BucketRank.joinGroup(e, mm, "event_type")
         .withColumn("bkt", BucketRank.bucketOf(col("value"), col("mn"), col("mx"), nb))
       val wB = Window.partitionBy("event_type").orderBy("bkt")
       val off = b.groupBy("event_type", "bkt").agg(count(lit(1)).as("bc"))
@@ -1330,7 +1330,7 @@ object RelationalOps {
         .select(col("event_type").as("o_et"), col("bkt").as("o_bkt"), col("off"))
       val wL = Window.partitionBy("event_type", "bkt").orderBy("value", "event_id")
       b.join(broadcast(off),
-          col("event_type") === col("o_et") && col("bkt") === col("o_bkt"))
+          col("event_type") <=> col("o_et") && col("bkt") === col("o_bkt"))
         .withColumn("rn", col("off") + row_number().over(wL))
         .select(col("event_type"), col("event_id"), col("value"),
           BucketRank.ntileOf(col("rn"), col("n"), 4).as("quartile"),

@@ -176,7 +176,7 @@ object StatsOps {
       val mm = base.groupBy("l_returnflag")
         .agg(min(BucketRank.finite(col("l_extendedprice"))).as("mn"),
           max(BucketRank.finite(col("l_extendedprice"))).as("mx"))
-      val b = base.join(broadcast(mm), Seq("l_returnflag"))
+      val b = BucketRank.joinGroup(base, mm, "l_returnflag")
         .withColumn("bkt",
           BucketRank.bucketOf(col("l_extendedprice"), col("mn"), col("mx"), nb))
         .select(col("l_returnflag"), col("l_extendedprice"), col("w"), col("bkt"))
@@ -197,7 +197,7 @@ object StatsOps {
       val cum = Window.partitionBy("l_returnflag").orderBy("l_extendedprice")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       b.join(broadcast(crossing),
-          col("l_returnflag") === col("c_rf") && col("bkt") === col("c_bkt"))
+          col("l_returnflag") <=> col("c_rf") && col("bkt") === col("c_bkt"))
         .withColumn("cum", col("off") + sum("w").over(cum))
         .filter(lit(2L) * col("cum") >= col("tot"))
         .groupBy("l_returnflag")
@@ -834,7 +834,7 @@ object StatsOps {
         .filter(col("n") > 7 && col("sd") > 0)
         .select(col("day"), col("n"), col("mn"), col("mx"), col("mu"), col("sd"))
       val nb = BucketRank.nBuckets(s)
-      val b = ev.join(broadcast(mom), Seq("day"))
+      val b = BucketRank.joinGroup(ev, mom, "day")
         .withColumn("bkt", BucketRank.bucketOf(col("value"), col("mn"), col("mx"), nb))
       val wB = Window.partitionBy("day").orderBy("bkt")
       val off = b.groupBy("day", "bkt").agg(count(lit(1)).as("bc"))
@@ -842,7 +842,7 @@ object StatsOps {
         .select(col("day").as("o_day"), col("bkt").as("o_bkt"), col("off"))
       val wL = Window.partitionBy("day", "bkt").orderBy("value", "event_id")
       b.join(broadcast(off),
-          col("day") === col("o_day") && col("bkt") === col("o_bkt"))
+          col("day") <=> col("o_day") && col("bkt") === col("o_bkt"))
         .withColumn("i", col("off") + row_number().over(wL))
         .withColumn("p", least(greatest(
           phi((col("value") - col("mu")) / col("sd")),

@@ -53,13 +53,15 @@ class R10RewriteEquivalenceSpec extends SparkSpec {
     import spark.implicits._
     // group C: 98 distinct prices 0..97, so p·(n−1) is fractional for three
     // cuts, plus a +Inf row (rank 98, past every cut's ceiling rank) and a
-    // NULL row (ignored by both forms); group D: 2-dp prices with ties
+    // NULL row (ignored by both forms); group D: 2-dp prices with ties;
+    // a NULL flag: its own group, as in the percentile aggregate
     val rnd = new scala.util.Random(3)
     val c = (0 until 98).map(v => ("C", Option(v.toDouble))) ++
       Seq(("C", Some(Double.PositiveInfinity)), ("C", None))
     val d = (0 until 57).map(_ => ("D", Option(rnd.nextInt(400) / 4.0)))
+    val nullFlag = (0 until 31).map(v => (null: String, Option(v * 2.5)))
     val dir = java.nio.file.Files.createTempDirectory("graft-qmulti-").toString
-    (c ++ d).toDF("l_returnflag", "l_extendedprice")
+    (c ++ d ++ nullFlag).toDF("l_returnflag", "l_extendedprice")
       .write.parquet(s"$dir/lineitem.parquet")
     // premise: some cut's floor and ceiling ranks fall in different buckets
     val nb = operators.BucketRank.nBuckets(spark)

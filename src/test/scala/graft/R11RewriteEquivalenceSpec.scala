@@ -143,9 +143,10 @@ class R11RewriteEquivalenceSpec extends SparkSpec {
 
   /** A temp sf dir with the columns the bucketed keys read, holding what
     * the fixture never does: NULL, NaN and ±Inf ordering values (also in
-    * groups with no finite value at all), an all-equal group, a hot group
-    * and, in lineitem group Z, a NULL-price block that carries more than
-    * half the weight.
+    * groups with no finite value at all), an all-equal group, a hot group,
+    * in lineitem group Z a NULL-price block that carries more than half
+    * the weight, and NULL group keys: a NULL `event_type`, a NULL `ts`
+    * (so a NULL day) and a NULL `l_returnflag`.
     */
   private lazy val adversarialDir: String = {
     import spark.implicits._
@@ -162,18 +163,24 @@ class R11RewriteEquivalenceSpec extends SparkSpec {
         else if (i < 540) ("eq", 4, Some(4.25))
         else if (i < 560) ("nf", 5, special(i % 4))
         else ("b", 1 + i % 3, price(i, -1000))
-      (i.toLong, java.sql.Timestamp.valueOf(f"2024-01-0$day%d ${i % 24}%02d:00:00"), typ, v)
+      (i.toLong, Option(java.sql.Timestamp.valueOf(f"2024-01-0$day%d ${i % 24}%02d:00:00")),
+        Option(typ), v)
+    } ++ (700 until 750).map { i =>
+      val t = Option(java.sql.Timestamp.valueOf(f"2024-01-02 ${i % 24}%02d:00:00"))
+      if (i < 730) (i.toLong, t, None, price(i, -1000))
+      else (i.toLong, None, Some("b"), price(i, -1000))
     }
     events.toDF("event_id", "ts", "event_type", "value")
       .write.parquet(s"$dir/events.parquet")
-    val lineitem = (0 until 560).map { i =>
+    val lineitem = (0 until 600).map { i =>
       val w = Some((1 + i % 50).toDouble)
       if (i < 400) ("R", price(i, 90000), w)
       else if (i < 460) ("A", price(i, 1000), if (i == 401) None else w)
       else if (i < 490) ("N", Some(1234.5), w)
       else if (i < 502) ("X", special(i % 4), w)
       else if (i < 527) ("Z", None, Some(10.0))
-      else ("Z", price(i, 500), Some(1.0))
+      else if (i < 560) ("Z", price(i, 500), Some(1.0))
+      else (null, price(i, 2000), w)
     }
     lineitem.toDF("l_returnflag", "l_extendedprice", "l_quantity")
       .write.parquet(s"$dir/lineitem.parquet")

@@ -1,11 +1,12 @@
 package graft
 
-import graft.streaming.ArchiveStream
+import graft.streaming.{ArchiveStream, ProgressLine}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import java.nio.file.Files
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
 
 /** Streaming semantics (SURVEY.md §2 group G) under MemoryStream micro-batches:
   * the dedup + archive pipeline behaves like the reference service —
@@ -243,6 +244,41 @@ class StreamingSpec extends SparkSpec {
       val got = spark.read.parquet(out).select("id").collect().map(_.getLong(0)).sorted
       assert(got.toSeq == (0L until 5L))
     } finally q.stop()
+  }
+
+  test("ProgressLine emits each archive trigger as one JSON line with WAL and state commit times") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[(Long, Timestamp, String)]
+    val base = Files.createTempDirectory("graft-progress-").toString
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new ProgressLine(lines.add(_))
+    spark.streams.addListener(listener)
+    try {
+      mem.addData((1L, ts("2024-01-02 09:00:00"), "a"), (2L, ts("2024-01-02 09:01:00"), "b"))
+      val q = ArchiveStream.archive(mem.toDF().toDF("id", "ts", "raw"), s"$base/out",
+        s"$base/ckpt", trigger = Trigger.ProcessingTime(0L))
+      val triggers = try {
+        q.processAllAvailable()
+        mem.addData((2L, ts("2024-01-02 09:01:00"), "b"), (3L, ts("2024-01-02 09:20:00"), "c"))
+        q.processAllAvailable()
+        q.recentProgress.length
+      } finally q.stop()
+      // listener events arrive asynchronously
+      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+        .enable(com.fasterxml.jackson.databind.DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
+      def ours = lines.asScala.toSeq.map(mapper.readTree)
+        .filter(_.path("id").asText == q.id.toString)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (ours.size < triggers && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(triggers >= 2 && ours.size >= triggers)
+      assert(lines.asScala.forall(l => !l.contains('\n')))
+      for (p <- ours) {
+        assert(p.isObject)
+        assert(p.at("/durationMs/walCommit").isNumber, p)
+        assert(p.at("/stateOperators/0/commitTimeMs").isNumber, p)
+      }
+    } finally spark.streams.removeListener(listener)
   }
 
   test("mapGroupsWithState: per-key counts accumulate across micro-batches (custom state, G7/I)") {
