@@ -37,6 +37,13 @@ import org.apache.spark.sql.SparkSession
   *    Checksum files and atomic renames are unchanged. `FileSystem.get`
   *    caches the first `file:` instance a JVM creates, so a session must be
   *    built here before anything else touches the local filesystem.
+  *
+  * Not here: `spark.sql.streaming.noDataMicroBatches.enabled`. The archive
+  * query runs without no-data micro-batches (one batch per poll), but the
+  * windowed, session-window and state-timeout queries need theirs to emit
+  * closed windows, so `streaming.ArchiveStream.archive` turns the key off
+  * only for the query it starts (Spark reads it when the query is
+  * constructed) and restores the session's value.
   */
 object GraftSession {
   val tuning: Seq[(String, String)] = Seq(

@@ -13,7 +13,9 @@ package graft
   */
 object Service {
   /** Usage: runMain graft.Service <archiveDir> <outDir> <checkpointDir>
-    *        [compactEveryNBatches=12] [ttlDays=3]
+    *        [compactEveryNPolls=12] [ttlDays=3]
+    *
+    * Each poll is one micro-batch, so compaction runs after every N-th poll.
     */
   def main(args: Array[String]): Unit = {
     val Array(archiveDir, outDir, ckptDir, rest @ _*) = args
@@ -26,7 +28,7 @@ object Service {
     val (rate, q) = sources.GhArchiveSource.catchUpThenPace(
       spark, archiveDir, outDir, ckptDir, compactEvery = compactEvery)
     println(s"[graft.Service] caught up; paced at $rate files/trigger, " +
-      s"compacting every $compactEvery batches, TTL $ttlDays days")
+      s"compacting every $compactEvery polls, TTL $ttlDays days")
     sys.addShutdownHook {
       q.stop()
       streaming.ArchiveStream.compact(spark, outDir, ttlDays = Some(ttlDays))

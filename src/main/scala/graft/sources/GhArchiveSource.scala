@@ -142,7 +142,8 @@ object GhArchiveSource {
     * `Trigger.AvailableNow` pass drains the backlog (the gh-load backfill
     * mode) while observing per-batch wall times, then a `ProcessingTime`
     * query resumes from the same checkpoint with the controller-adapted
-    * rate and compacts every `compactEvery` batches (0: never). Returns
+    * rate and compacts every `compactEvery` polls (one batch each; 0:
+    * never). Returns
     * (adapted files-per-trigger, the running paced query).
     */
   def catchUpThenPace(spark: SparkSession, dir: String, outDir: String,

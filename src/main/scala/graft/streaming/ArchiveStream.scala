@@ -89,14 +89,34 @@ object ArchiveStream {
     * collapses them by key (replace_by_key, C2/D4) — the ReplacingMergeTree
     * contract (ref: README.md:14; retries lean on it, cmd/gh-load/
     * main.go:257-261). StreamingSpec proves the replay→read round trip.
+    *
+    * One micro-batch per poll, as the reference does one INSERT per poll:
+    * the query runs without Spark's no-data micro-batches, so the dedup
+    * eviction rides the next poll's batch, with the same watermark, the
+    * way the reference swaps its id generations at the end of a poll
+    * (ref: main.go:207). Each first occurrence is still emitted by the
+    * batch that reads it. The late-event filter lags one poll: an event
+    * later than the 10-minute delay but within the watermark's advance
+    * over the previous poll is archived, not dropped (the reference drops
+    * no late event). A repeated id is still archived once: an entry is
+    * evicted only when its `ts` is behind every later batch's late filter.
     * `compactEvery > 0` runs [[compact]] after every `compactEvery`-th
-    * batch; its crash window adds duplicates under the same contract.
+    * batch, i.e. poll; its crash window adds duplicates under the same
+    * contract.
+    *
+    * Spark reads `spark.sql.streaming.noDataMicroBatches.enabled` from the
+    * session it clones inside `start()`. So `archive` turns the key off on
+    * `events`' session for that call only and then restores the session's
+    * value: windowed and state-timeout queries started in the session keep
+    * the no-data batches that emit their closed windows. `archive` calls
+    * serialize on one lock; a query that other code starts in the same
+    * session at the same instant may still see the key off.
     */
   def archive(events: DataFrame, outDir: String, checkpointDir: String,
               trigger: Trigger = Trigger.ProcessingTime("5 seconds"),
               compactEvery: Int = 0,
-              afterWrite: Long => Unit = _ => ()): StreamingQuery =
-    dedup(events)
+              afterWrite: Long => Unit = _ => ()): StreamingQuery = {
+    val writer = dedup(events)
       .writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
@@ -116,7 +136,19 @@ object ArchiveStream {
           ()
         }
       }
-      .start()
+    val conf = events.sparkSession.conf
+    noDataBatchesSwitch.synchronized {
+      // the explicitly set value, if any, so an unset key is unset again
+      val before = conf.getAll.get(NoDataBatches)
+      conf.set(NoDataBatches, "false")
+      try writer.start()
+      finally before.fold(conf.unset(NoDataBatches))(conf.set(NoDataBatches, _))
+    }
+  }
+
+  private val NoDataBatches = "spark.sql.streaming.noDataMicroBatches.enabled"
+  /** Serializes [[archive]]'s set, start and restore of [[NoDataBatches]]. */
+  private val noDataBatchesSwitch = new Object
 
   /** Small-file compaction — the 60 s forced-merge analog (ref:
     * cmd/gh-archived/main.go:54-55,74-77; ClickHouse OPTIMIZE). Every
@@ -142,8 +174,10 @@ object ArchiveStream {
     * `Some(n)` does the partition-granular analog here: day directories
     * entirely older than (newest day − n) are DELETED, no rewrite, before
     * fragmentation is even considered. "Now" is the newest day present,
-    * not the wall clock, so offline replays are deterministic. Dropped
-    * partitions are reported alongside rewritten ones.
+    * not the wall clock, so offline replays are deterministic. The NULL-day
+    * partition (`d=__HIVE_DEFAULT_PARTITION__`, rows without a `ts`) is
+    * never dropped. Dropped partitions are reported alongside rewritten
+    * ones.
     */
   def compact(spark: SparkSession, outDir: String,
               maxFilesPerPartition: Int = 4,
@@ -155,15 +189,17 @@ object ArchiveStream {
     val allParts = fs.listStatus(root)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("d="))
     val dropped = ttlDays match {
-      case Some(days) if allParts.nonEmpty =>
-        val day = (s: FileStatus) =>
-          java.time.LocalDate.parse(s.getPath.getName.stripPrefix("d=")).toEpochDay
-        val cutoff = allParts.map(day).max - days.toLong
-        allParts.filter(p => day(p) < cutoff).map { p =>
+      case Some(days) =>
+        // a NULL `ts` lands in `d=__HIVE_DEFAULT_PARTITION__`: its age is
+        // unknown, so it neither sets the cutoff nor expires
+        val dated = allParts.flatMap(p => scala.util.Try(java.time.LocalDate.parse(
+          p.getPath.getName.stripPrefix("d="))).toOption.map(d => (p, d.toEpochDay)))
+        val newest = dated.map(_._2).maxOption.getOrElse(0L)
+        dated.collect { case (p, day) if day < newest - days =>
           fs.delete(p.getPath, true)
           p.getPath.getName
         }.toSeq
-      case _ => Seq.empty
+      case None => Seq.empty
     }
     val parts = allParts.filterNot(p => dropped.contains(p.getPath.getName))
     dropped ++ parts.toSeq.flatMap { p =>

@@ -3,7 +3,8 @@ package graft
 import graft.streaming.{ArchiveStream, ProgressLine}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import java.nio.file.Files
 import java.sql.Timestamp
 import scala.jdk.CollectionConverters._
@@ -225,6 +226,25 @@ class StreamingSpec extends SparkSpec {
       maxFilesPerPartition = 100, ttlDays = Some(3)).isEmpty)
   }
 
+  test("compact with ttlDays keeps the NULL-day partition and never parses it as a date") {
+    import spark.implicits._
+    val out = Files.createTempDirectory("graft-compact-ttl-null-").toString + "/a"
+    // a row without created_at has a NULL ts and lands in
+    // d=__HIVE_DEFAULT_PARTITION__, whose age is unknown
+    ArchiveStream.append(Seq(
+      (5L, ts("2024-01-05 12:00:00"), "r"),
+      (10L, ts("2024-01-10 12:00:00"), "r"),
+      (99L, null, "no ts")).toDF("id", "ts", "raw"), out)
+    def ttlRead() = ArchiveStream.applyTtl(spark.read.parquet(out))
+      .select("id").collect().map(_.getLong(0)).toSeq.sorted
+    val before = ttlRead()
+    assert(ArchiveStream.compact(spark, out,
+      maxFilesPerPartition = 100, ttlDays = Some(3)) == Seq("d=2024-01-05"))
+    assert(spark.read.parquet(out).filter(col("ts").isNull)
+      .select("id").collect().map(_.getLong(0)).toSeq == Seq(99L))
+    assert(ttlRead() == before)
+  }
+
   test("archive with compactEvery merges small files between micro-batches") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -244,6 +264,165 @@ class StreamingSpec extends SparkSpec {
       val got = spark.read.parquet(out).select("id").collect().map(_.getLong(0)).sorted
       assert(got.toSeq == (0L until 5L))
     } finally q.stop()
+  }
+
+  private val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
+
+  /** Waits, up to 2 s, until `q` has run no trigger for 200 ms: time for a
+    * no-data batch that follows a poll to show up in `recentProgress`.
+    */
+  private def settle(q: StreamingQuery): Unit = {
+    val end = System.nanoTime() + 2000L * 1000 * 1000
+    var quiet = 0
+    while (quiet < 20 && System.nanoTime() < end) {
+      quiet = if (q.status.isTriggerActive) 0 else quiet + 1
+      Thread.sleep(10)
+    }
+  }
+
+  /** Distinct batch ids in `q`'s progress, and whether each read input. An
+    * idle query repeats its last batch id every 10 s, so ids, not entries.
+    */
+  private def batches(q: StreamingQuery): (Int, Boolean) = {
+    val byId = q.recentProgress.groupBy(_.batchId)
+    (byId.size, byId.values.forall(_.exists(_.numInputRows > 0)))
+  }
+
+  /** Starts `archive` over a fresh MemoryStream in `s`; returns the feed. */
+  private def archiveFeed(s: SparkSession, compactEvery: Int = 0)
+      : (MemoryStream[(Long, Timestamp, String)], StreamingQuery, String) = {
+    import s.implicits._
+    implicit val sqlCtx = s.sqlContext
+    val mem = MemoryStream[(Long, Timestamp, String)]
+    val base = Files.createTempDirectory("graft-onebatch-").toString
+    val q = ArchiveStream.archive(mem.toDF().toDF("id", "ts", "raw"), s"$base/out",
+      s"$base/ckpt", trigger = Trigger.ProcessingTime(0L), compactEvery = compactEvery)
+    (mem, q, s"$base/out")
+  }
+
+  private def archivedIds(out: String): Seq[Long] =
+    spark.read.parquet(out).select("id").collect().map(_.getLong(0)).toSeq.sorted
+
+  test("archive runs one micro-batch per poll, with no eviction-only batches") {
+    val (mem, q, _) = archiveFeed(spark)
+    try {
+      // every poll advances the watermark, which is when a no-data batch
+      // would follow it
+      for (i <- 0 until 4) {
+        mem.addData((i.toLong, ts(f"2024-01-02 09:${i * 15}%02d:00"), s"r$i"))
+        q.processAllAvailable()
+      }
+      settle(q)
+      assert(batches(q) == ((4, true)))
+    } finally q.stop()
+  }
+
+  test("archive restores the session's no-data batch switch; later windowed queries close windows") {
+    val s = spark.newSession()
+    for (setting <- Seq(None, Some("true"))) {
+      setting.foreach(s.conf.set(noDataKey, _))
+      val before = s.conf.getAll.get(noDataKey)
+      val (_, q, _) = archiveFeed(s)
+      q.stop()
+      assert(s.conf.getAll.get(noDataKey) == before)
+    }
+    import s.implicits._
+    implicit val sqlCtx = s.sqlContext
+    val mem = MemoryStream[(Long, Timestamp)]
+    val q = ArchiveStream.hourlyCounts(
+        mem.toDF().toDF("id", "ts").withWatermark("ts", "10 minutes"))
+      .writeStream.format("memory").queryName("closed_hours")
+      .outputMode("append").start()
+    try {
+      mem.addData((1L, ts("2024-01-02 09:05:00")), (2L, ts("2024-01-02 09:20:00")))
+      q.processAllAvailable()
+      // the watermark passes 10:00 after this batch; only a no-data batch
+      // can then emit the closed 09:00 window, as no more data arrives
+      mem.addData((3L, ts("2024-01-02 11:00:00")))
+      q.processAllAvailable()
+      def got = s.sql("select hour, n from closed_hours").collect()
+        .map(r => r.getTimestamp(0) -> r.getLong(1)).toSeq
+      val end = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (got.isEmpty && System.nanoTime() < end) Thread.sleep(50)
+      assert(got == Seq(ts("2024-01-02 09:00:00") -> 2L))
+    } finally q.stop()
+  }
+
+  test("concurrent archive starts leave the session's switch unchanged; each runs one batch per poll") {
+    val s = spark.newSession()
+    val before = s.conf.getAll.get(noDataKey)
+    for (_ <- 0 until 3) {
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.ExecutionContext.Implicits.global
+      val barrier = new java.util.concurrent.CyclicBarrier(2)
+      val feeds = Seq.fill(2)(Future { barrier.await(); archiveFeed(s) })
+        .map(Await.result(_, scala.concurrent.duration.Duration(60, "s")))
+      try {
+        for (((mem, q, _), k) <- feeds.zipWithIndex; i <- 0 until 2) {
+          mem.addData((k * 10L + i, ts(f"2024-01-02 09:${i * 15}%02d:00"), "r"))
+          q.processAllAvailable()
+        }
+        feeds.foreach(f => settle(f._2))
+        for ((_, q, _) <- feeds) assert(batches(q) == ((2, true)))
+      } finally feeds.foreach(_._2.stop())
+      assert(s.conf.getAll.get(noDataKey) == before)
+    }
+  }
+
+  test("archive: a repeated (id, ts) arriving after its entry expired is archived once") {
+    val (mem, q, out) = archiveFeed(spark)
+    try {
+      for (poll <- Seq(
+          Seq(1L -> "09:00"),
+          // the watermark moves to 09:20, past id 1's 09:10 expiry
+          Seq(2L -> "09:30"),
+          // expired but not yet evicted (eviction rides this batch, after
+          // its input): the state still holds id 1
+          Seq(1L -> "09:00", 3L -> "09:31"),
+          // evicted: the late filter (watermark 09:20) drops it
+          Seq(1L -> "09:00", 4L -> "09:50"))) {
+        mem.addData(poll.map { case (id, t) => (id, ts(s"2024-01-02 $t:00"), s"r$id") })
+        q.processAllAvailable()
+      }
+    } finally q.stop()
+    assert(archivedIds(out) == Seq(1L, 2L, 3L, 4L))
+  }
+
+  test("archive's late filter lags one poll: a late event within one poll's advance is kept") {
+    // Intended. With one batch per poll, a batch filters late events by the
+    // watermark the previous poll's batch ran with, not by the one that
+    // batch set. Id 3 is behind the 09:20 watermark poll 2 set, but not
+    // behind the 08:50 one poll 2's batch ran with, so it is archived.
+    // With a no-data batch after every poll it was dropped. The reference
+    // drops no late event at all.
+    val (mem, q, out) = archiveFeed(spark)
+    try {
+      for (poll <- Seq(
+          Seq(1L -> "09:00"),
+          Seq(2L -> "09:30", 1L -> "09:00"),
+          Seq(3L -> "09:15", 4L -> "09:40"))) {
+        mem.addData(poll.map { case (id, t) => (id, ts(s"2024-01-02 $t:00"), s"r$id") })
+        q.processAllAvailable()
+      }
+    } finally q.stop()
+    assert(archivedIds(out) == Seq(1L, 2L, 3L, 4L))
+  }
+
+  test("archive's compactEvery counts polls") {
+    val (mem, q, out) = archiveFeed(spark, compactEvery = 3)
+    def files(): Int = new java.io.File(out + "/d=2024-01-02").listFiles()
+      .count(_.getName.endsWith(".parquet"))
+    try {
+      // one file per poll; the compaction after poll 3 finds 3 <= 4 files
+      // and leaves them, the one after poll 6 merges 6
+      val counts = for (i <- 1 to 6) yield {
+        mem.addData((i.toLong, ts(f"2024-01-02 09:${i * 5}%02d:00"), s"r$i"))
+        q.processAllAvailable()
+        files()
+      }
+      assert(counts == Seq(1, 2, 3, 4, 5, 1))
+    } finally q.stop()
+    assert(archivedIds(out) == (1L to 6L))
   }
 
   test("ProgressLine emits each archive trigger as one JSON line with WAL and state commit times") {
