@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: every SparkEntry query at SPARK_GRAFT_SF_DIR,
   * one JSON line. Results are materialized through the `noop` datasource —

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan auditor: prints the formatted physical plan of each named query
   * (default: a scale-critical subset) so shuffle/broadcast/pushdown shape

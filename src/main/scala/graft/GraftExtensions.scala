@@ -29,6 +29,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // Physical as-of join: this strategy plans every AsOfJoin node as the
     // dedicated merge operator (plans/AsOfJoinExec).
     ext.injectPlannerStrategy(s => graft.plans.AsOfJoinStrategy(s))
+    // Recursive CTEs whose step is row-local (Project/Filter over the loop's
+    // own rows) run as one pass per task (plans/RowLocalUnionLoop); every
+    // other WITH RECURSIVE keeps Spark's per-iteration UnionLoopExec.
+    ext.injectPlannerStrategy(s => graft.plans.RowLocalUnionLoop(s))
     // SQL surface for the banded range join (point-in-interval without the
     // nested-loop plan): FROM range_join('points', 'intervals', 'ts', 'lo',
     // 'hi', band_micros[, 'key']) — parses to UnresolvedRangeJoin, which

@@ -60,7 +60,10 @@ object GraftSession {
     // data). 100M keeps the runaway-recursion protection (the LEVEL limit
     // still applies) while letting row volume scale with the input; at
     // cluster scale this is the conf a deployment sizes alongside
-    // shuffle.partitions.
+    // shuffle.partitions. Both limits are enforced by whichever exec runs
+    // the loop: plans.RowLocalUnionLoopExec (row-local steps such as
+    // sql_recursive's) checks them on a per-depth row count before it
+    // emits a row, Spark's UnionLoopExec (every other recursion) per level.
     "spark.sql.cteRecursionRowLimit" -> "100000000",
     "spark.sql.extensions" -> "graft.GraftExtensions",
     "spark.hadoop.fs.file.impl" -> classOf[NioLocalFileSystem].getName,

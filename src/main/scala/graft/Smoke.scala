@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev smoke: the driver's t1 check — SparkEntry.entry rows > 0 on sf0.001. */
 object Smoke {

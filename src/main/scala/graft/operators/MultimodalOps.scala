@@ -323,7 +323,6 @@ object MultimodalOps {
     // combos, period lcm(32,24)): Java floor(x+0.5) and DuckDB round()
     // agree on every reachable cell.
     "multimodal_pipeline" -> ((s, dir) => {
-      import s.implicits._
       val recs = mediaRecords(s, dir)
       processMedia(recs).toDF()
         .select(col("doc_id"), col("width").cast(LongType),
@@ -408,7 +407,6 @@ object MultimodalOps {
     // multimodal_features_decoded twin below carries the oracle-paired
     // version of every other column.
     "multimodal_features" -> ((s, dir) => {
-      import s.implicits._
       val recs = mediaRecords(s, dir)
       extractFeatures(recs).toDF()
         .select(col("doc_id"), col("byte_len"), col("width").cast(LongType),
@@ -424,7 +422,6 @@ object MultimodalOps {
     // row; the oracle closes the loop the original key's rows-only check
     // could not.
     "multimodal_features_decoded" -> ((s, dir) => {
-      import s.implicits._
       extractFeatures(mediaRecords(s, dir)).toDF()
         .select(col("doc_id"), col("width").cast(LongType),
           col("height").cast(LongType), col("n_frames").cast(LongType),

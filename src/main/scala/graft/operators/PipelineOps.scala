@@ -3,7 +3,6 @@ package graft.operators
 import graft.Tables
 import graft.streaming.ArchiveStream
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 

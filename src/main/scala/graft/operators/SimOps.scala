@@ -92,14 +92,13 @@ object SimOps {
     scala.collection.mutable.Map.empty[String, (String, Seq[Seq[Double]])]
 
   private def ivfIndex(s: SparkSession, dir: String): (String, Seq[Seq[Double]]) =
-    ivfIndexOf(s, dir, vecs(s, dir))
+    ivfIndexOf(dir, vecs(s, dir))
 
   /** Index builder over an arbitrary corpus frame (memo key `key`):
     * `sim_topk_ivf` indexes the scale dir's embeddings; `sim_ivf_planted`
     * runs the UNCHANGED build over corpus + planted copies.
     */
-  private def ivfIndexOf(s: SparkSession, key: String,
-      corpus: DataFrame): (String, Seq[Seq[Double]]) =
+  private def ivfIndexOf(key: String, corpus: DataFrame): (String, Seq[Seq[Double]]) =
     synchronized {
       ivfIndexes.getOrElseUpdate(key, {
         val k = 16
@@ -411,7 +410,7 @@ object SimOps {
       val plantBase = base.agg(max(col("vec_id"))).head.getLong(0) + 1L
       val planted = base.filter(col("vec_id") < 50)
         .select((col("vec_id") + plantBase).as("vec_id"), col("v"))
-      val (path, cents) = ivfIndexOf(s, dir + "#ivf_planted",
+      val (path, cents) = ivfIndexOf(dir + "#ivf_planted",
         base.unionByName(planted))
       val idx = s.read.parquet(path)
       // probe EXACTLY the minted id range, not an open >= bound

@@ -75,8 +75,12 @@ object SqlOps {
 
     // Recursive CTE (hierarchy walk): each customer key's synthetic
     // ancestor chain key -> key/2 -> ... -> 1 — the iterate-in-SQL surface
-    // (ClickHouse and every warehouse dialect ship it; Spark 4 executes it
-    // as an iterative union-loop plan). Integer division is `DIV` here and
+    // (ClickHouse and every warehouse dialect ship it). The step is a
+    // Project/Filter of the previous row, so it plans as
+    // plans.RowLocalUnionLoopExec: each task walks its anchor rows' chains
+    // in one pass, with one extra job to check Spark's recursion limits,
+    // instead of Spark's UnionLoopExec job per level (PlanSpec pins the plan
+    // and the job count). Integer division is `DIV` here and
     // `//` in the DuckDB twin — the one dialect difference; CAST(x/2 AS
     // BIGINT) would NOT be portable (Spark truncates, DuckDB rounds).
     "sql_recursive" -> ((s, dir) =>

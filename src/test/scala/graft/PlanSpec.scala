@@ -1,5 +1,13 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import graft.plans.RowLocalUnionLoopExec
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.UnionLoopExec
+
 /** Physical-plan regression guard: the scale-critical plan properties the
   * manual `graft.Explain` audit checks, asserted programmatically — losing
   * a pushdown, a broadcast, or a group-limit to a refactor should fail CI,
@@ -332,5 +340,70 @@ class PlanSpec extends SparkSpec {
       "the cluster x dim centroid table must broadcast:\n" + p.take(1500))
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
       "candidate pairs must come from the cluster-id equality join:\n" + p.take(1500))
+  }
+
+  /** The Spark jobs `body` starts: a listener counts the job starts of a job
+    * group, and a marker job run after `body` shows when the listener bus
+    * has delivered them all (it delivers in order). */
+  private def jobs(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val (group, marker) = ("plan-spec-jobs", "plan-spec-marker")
+    val started = new AtomicInteger
+    val delivered = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => started.incrementAndGet()
+          case `marker` => delivered.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      body
+      sc.setJobGroup(marker, marker)
+      sc.parallelize(Seq(1), 1).count()
+      assert(delivered.await(60, TimeUnit.SECONDS), "the marker job never reached the listener")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    started.get
+  }
+
+  test("sql_recursive: the row-local CTE runs as one fused pass, not a job per iteration") {
+    val df = SparkEntry.queries("sql_recursive")(spark, sf)
+    val n = jobs(df.collect())
+    val ns = executedNodes(df)
+    assert(ns.exists(_.isInstanceOf[RowLocalUnionLoopExec]) &&
+      !ns.exists(_.isInstanceOf[UnionLoopExec]),
+      "the ancestor walk must plan as RowLocalUnionLoopExec:\n" + df.queryExecution.executedPlan)
+    // a count of 0 would mean the listener saw nothing, not a free query
+    assert(n > 0 && n <= 6, s"$n jobs for one sql_recursive run")
+  }
+
+  test("sql_recursive: the fused exec reports UnionLoopExec's metrics for the same walk") {
+    SparkEntry.queries("sql_recursive")(spark, sf) // registers graft_customer
+    // `floor(rand()) = 0` is always true but non-deterministic, so this
+    // twin of the key's SQL keeps Spark's own loop
+    def walk(extra: String) = spark.sql(
+      s"""WITH RECURSIVE anc(custkey, anc_key, depth) AS (
+         |  SELECT c_custkey, c_custkey, 0 FROM graft_customer
+         |  UNION ALL
+         |  SELECT custkey, anc_key DIV 2, depth + 1 FROM anc WHERE anc_key > 1$extra
+         |)
+         |SELECT custkey, count(*) AS n_anc, max(depth) AS max_depth
+         |FROM anc GROUP BY custkey ORDER BY custkey""".stripMargin)
+    def metrics(df: DataFrame, exec: Class[_]): Map[String, Long] = {
+      df.collect()
+      val loops = executedNodes(df).filter(exec.isInstance)
+      assert(loops.size == 1, df.queryExecution.executedPlan.toString)
+      Seq("numOutputRows", "numAnchorOutputRows", "numIterations")
+        .map(k => k -> loops.head.metrics(k).value).toMap
+    }
+    val fused = metrics(walk(""), classOf[RowLocalUnionLoopExec])
+    assert(fused == metrics(walk(" AND floor(rand()) = 0"), classOf[UnionLoopExec]))
+    assert(fused.values.forall(_ > 0), fused)
   }
 }
