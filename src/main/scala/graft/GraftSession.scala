@@ -37,6 +37,20 @@ import org.apache.spark.sql.SparkSession
   *    Checksum files and atomic renames are unchanged. `FileSystem.get`
   *    caches the first `file:` instance a JVM creates, so a session must be
   *    built here before anything else touches the local filesystem.
+  *  - `parallelPartitionDiscovery.threshold`: a file reader given more than
+  *    this many paths or subdirectories (default 32) lists them in a Spark
+  *    job with one task per path, described "Listing leaf files and
+  *    directories for N paths". The job pays off when executors on other
+  *    hosts list in parallel. Every session here is `local[N]`, so it runs
+  *    on the driver's own N cores and still pays a task launch and a
+  *    deserialization of the session's Hadoop `Configuration` (~1,100
+  *    properties, ~113 KB) per path: it can never beat the driver listing
+  *    each path itself. Measured on 4 cores: perfbench's `backfill` hands
+  *    `spark.read.json` 72 hour files, and the job (72 tasks) took
+  *    270–350 ms of a warm 1.2–1.5 s `Backfill.main` call; a `readStream`
+  *    catch-up batch over the same files ran 3 such jobs, and an archive
+  *    read over 40 `d=` dirs or a compaction of a 40-file day one each.
+  *    With the threshold at `Int.MaxValue` none of them runs.
   *
   * Not here: `spark.sql.streaming.noDataMicroBatches.enabled`. The archive
   * query runs without no-data micro-batches (one batch per poll), but the
@@ -68,6 +82,7 @@ object GraftSession {
     "spark.sql.extensions" -> "graft.GraftExtensions",
     "spark.hadoop.fs.file.impl" -> classOf[NioLocalFileSystem].getName,
     "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[NioLocalFs].getName,
+    "spark.sql.sources.parallelPartitionDiscovery.threshold" -> Int.MaxValue.toString,
     "spark.sql.session.timeZone" -> "UTC",
     "spark.ui.enabled" -> "false")
 

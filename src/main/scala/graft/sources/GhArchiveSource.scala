@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import java.time.LocalDateTime
-import java.time.format.DateTimeFormatter
+import java.time.format.{DateTimeFormatter, ResolverStyle}
 
 /** Hour-keyed archive source — the reference's backfill input
   * (ref: cmd/gh-load/main.go:46-99): a directory of `YYYY-MM-DD-H.json.gz`
@@ -15,7 +15,11 @@ import java.time.format.DateTimeFormatter
   *    becomes LISTING-LEVEL pruning: `read(from, to)` enumerates only the
   *    in-range hour files and hands exactly those paths to the reader — at
   *    100 TB (years x 24 files) nothing outside the range is listed, opened,
-  *    or scheduled, the file-granularity analog of partition pruning;
+  *    or scheduled, the file-granularity analog of partition pruning. The
+  *    driver lists the range once, and Spark does not list it again: the
+  *    session's `parallelPartitionDiscovery.threshold` (GraftSession) keeps
+  *    the reader's own status lookup of the paths on the driver, with no
+  *    Spark job, however many hours the range holds;
   *  - gzip + NDJSON line scan (ref: main.go:80-99) are native to the JSON
   *    datasource, one Spark task per (file-split) — the `-jobs` worker pool
   *    (ref: main.go:239-269) is Spark task parallelism;
@@ -32,7 +36,14 @@ import java.time.format.DateTimeFormatter
   */
 object GhArchiveSource {
 
-  private val hourFmt = DateTimeFormatter.ofPattern("yyyy-MM-dd-H")
+  /** STRICT: a date that is not on the calendar (`2024-02-30`) fails to
+    * parse instead of resolving to the month's last day. `uuuu`, because
+    * STRICT needs an era to resolve `yyyy`.
+    */
+  private val hourFmt = DateTimeFormatter.ofPattern("uuuu-MM-dd-H")
+    .withResolverStyle(ResolverStyle.STRICT)
+  /** The same key in Spark's pattern language (which resolves strictly). */
+  private val sparkHourFmt = lit("yyyy-MM-dd-H")
   /** The hour-key shape, shared by the filename matcher and the column
     * extractor so the two can never drift; hour restricted to 0-23.
     */
@@ -74,7 +85,9 @@ object GhArchiveSource {
     }.sortBy(_._3.toEpochSecond(java.time.ZoneOffset.UTC)).map(t => (t._1, t._2))
   }
 
-  /** Batch read of an hour range as (id, created_at ts, hour).
+  /** Batch read of an hour range as (id, created_at ts, hour). The paths
+    * come from `listHours`, the one listing of the range; Spark looks each
+    * path up on the driver and runs no listing job (see GraftSession).
     * `failFast = true` reproduces the reference's abort-on-parse-error
     * (ref: cmd/gh-load/main.go:131-134); false keeps malformed rows with
     * null fields (PERMISSIVE).
@@ -96,15 +109,17 @@ object GhArchiveSource {
 
   /** The one decode of a scanned hour file into (id, ts, hour), shared by
     * `read` and `readStream` so batch/stream parity holds by construction.
-    * Rows whose file name is not a valid hour key are dropped: a no-op
-    * after `listHours`, and the row-level half of `readStream`'s glob.
+    * Rows whose file name is not a calendar hour are dropped, whether it
+    * has no hour-key shape or names a day the calendar lacks
+    * (`2024-02-30-1`): a no-op after `listHours`, and the row-level half of
+    * `readStream`'s glob.
     */
   private def decode(json: DataFrame): DataFrame =
     json
       .select(col("id"), col("created_at"),
         regexp_extract(col("_metadata.file_path"),
           "(?:^|/)(" + keyPattern + raw")\.json\.gz$$", 1).as("key"))
-      .filter(col("key") =!= "")
+      .filter(try_to_timestamp(col("key"), sparkHourFmt).isNotNull)
       .select(
         col("id"),
         to_timestamp(col("created_at")).as("ts"),
@@ -112,7 +127,7 @@ object GhArchiveSource {
         // archive key, always UTC-hour-of-day), not an instant — NTZ keeps
         // it independent of the session timezone, where to_timestamp would
         // shift it in any non-UTC session
-        to_timestamp_ntz(col("key"), lit("yyyy-MM-dd-H")).as("hour"))
+        to_timestamp_ntz(col("key"), sparkHourFmt).as("hour"))
 
   /** C6 adaptive pacing controller (ref: cmd/gh-archived/main.go:180-193).
     * The reference recomputes its poll rate from rate-limit headers every
@@ -175,10 +190,11 @@ object GhArchiveSource {
     *
     * Batch/stream parity: the glob can only approximate `fileRe` (globs
     * can't express hour <= 23), so rows are additionally filtered on the
-    * SAME `keyPattern` applied to `_metadata.file_path` — an invalid-hour
-    * artifact like `2024-01-15-99.json.gz` that `listHours` skips is dropped
-    * here too. Schema, FAILFAST/PERMISSIVE policy and the derived `hour`
-    * column come from the same `decode` as `read`.
+    * SAME `keyPattern` applied to `_metadata.file_path` and on the key
+    * being a calendar hour — an artifact like `2024-01-15-99.json.gz` or
+    * `2024-02-30-1.json.gz` that `listHours` skips is dropped here too.
+    * Schema, FAILFAST/PERMISSIVE policy and the derived `hour` column come
+    * from the same `decode` as `read`.
     */
   def readStream(spark: SparkSession, dir: String,
                  maxFilesPerTrigger: Int = 1, failFast: Boolean = true): DataFrame =

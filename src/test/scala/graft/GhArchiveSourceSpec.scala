@@ -10,12 +10,7 @@ import java.util.zip.GZIPOutputStream
   * decode, hour-column derivation, malformed-row policy.
   */
 class GhArchiveSourceSpec extends SparkSpec {
-
-  private def writeHourFile(dir: String, key: String, lines: Seq[String]): Unit = {
-    val w = new BufferedWriter(new OutputStreamWriter(
-      new GZIPOutputStream(new FileOutputStream(s"$dir/$key.json.gz")), "UTF-8"))
-    try lines.foreach { l => w.write(l); w.newLine() } finally w.close()
-  }
+  import GhArchiveSourceSpec._
 
   private lazy val archiveDir: String = {
     val dir = Files.createTempDirectory("graft-gha-").toString
@@ -32,15 +27,19 @@ class GhArchiveSourceSpec extends SparkSpec {
   test("listHours prunes to the requested range at listing time") {
     val all = GhArchiveSource.listHours(archiveDir)
     assert(all.map(_._2) == Seq("2024-01-15-0", "2024-01-15-1", "2024-01-15-2"))
-    // stray invalid-hour artifact is skipped, never aborts the listing
-    writeHourFile(archiveDir, "2024-01-15-99", Seq("{}"))
-    assert(GhArchiveSource.listHours(archiveDir).map(_._2) ==
-      Seq("2024-01-15-0", "2024-01-15-1", "2024-01-15-2"))
-    // order is chronological, not lexicographic (unpadded hour: "10" < "2")
-    writeHourFile(archiveDir, "2024-01-15-10", Seq("{}"))
-    assert(GhArchiveSource.listHours(archiveDir).map(_._2).last == "2024-01-15-10")
-    new java.io.File(s"$archiveDir/2024-01-15-99.json.gz").delete()
-    new java.io.File(s"$archiveDir/2024-01-15-10.json.gz").delete()
+    val strays = Seq("2024-01-15-99", "2024-02-30-1", "2024-01-15-10")
+    try {
+      // stray invalid-hour artifact is skipped, never aborts the listing
+      writeHourFile(archiveDir, "2024-01-15-99", Seq("{}"))
+      // and so is a key the calendar lacks: STRICT parsing, no rounding to
+      // the month's last day
+      writeHourFile(archiveDir, "2024-02-30-1", Seq("{}"))
+      assert(GhArchiveSource.listHours(archiveDir).map(_._2) ==
+        Seq("2024-01-15-0", "2024-01-15-1", "2024-01-15-2"))
+      // order is chronological, not lexicographic (unpadded hour: "10" < "2")
+      writeHourFile(archiveDir, "2024-01-15-10", Seq("{}"))
+      assert(GhArchiveSource.listHours(archiveDir).map(_._2).last == "2024-01-15-10")
+    } finally strays.foreach(k => new java.io.File(s"$archiveDir/$k.json.gz").delete())
     val ranged = GhArchiveSource.listHours(archiveDir,
       from = Some(LocalDateTime.of(2024, 1, 15, 1, 0)),
       to = Some(LocalDateTime.of(2024, 1, 15, 2, 0)))
@@ -179,13 +178,14 @@ class GhArchiveSourceSpec extends SparkSpec {
 
   test("streaming read enforces batch/stream parity: invalid-hour artifacts dropped, hour column derived") {
     import org.apache.spark.sql.streaming.Trigger
-    import org.apache.spark.sql.functions.col
     val dir = Files.createTempDirectory("graft-gha-parity-").toString
     def ev(id: Long, ts: String) = s"""{"id":$id,"created_at":"$ts"}"""
     writeHourFile(dir, "2024-01-15-7", Seq(ev(1, "2024-01-15T07:10:00Z")))
     // glob-shaped but NOT a valid hour key — exactly what listHours skips;
     // the keyPattern row filter must drop it from the stream too
     writeHourFile(dir, "2024-01-15-99", Seq(ev(666, "2024-01-15T09:00:00Z")))
+    // hour-key shaped, but February has no 30th: skipped and dropped alike
+    writeHourFile(dir, "2024-02-30-1", Seq(ev(777, "2024-03-01T01:00:00Z")))
     val q = GhArchiveSource.readStream(spark, dir)
       .writeStream.format("memory").queryName("gha_parity")
       .trigger(Trigger.AvailableNow()).start()
@@ -194,5 +194,72 @@ class GhArchiveSourceSpec extends SparkSpec {
     assert(rows.map(_.getLong(0)).toSeq == Seq(1L))
     // hour column matches the batch read's NTZ calendar-label semantics
     assert(rows.head.getAs[java.time.LocalDateTime]("hour").toString == "2024-01-15T07:00")
+    assert(GhArchiveSource.read(spark, dir).select("id", "hour").collect().toSeq == rows.toSeq)
+  }
+
+  /** Rows of a decoded hour read as (id, ts, hour), sorted. */
+  private def decoded(df: org.apache.spark.sql.DataFrame): Seq[(Long, String, String)] =
+    df.collect().map(r => (r.getLong(0), r.getTimestamp(1).toString,
+      r.getAs[LocalDateTime](2).toString)).toSeq.sorted
+
+  test("read of 40 hour files lists them on the driver: no listing job, same rows and files") {
+    val dir = hourDir(40)
+    def run() = {
+      val df = GhArchiveSource.read(spark, dir)
+      (df.inputFiles.toSeq.sorted, decoded(df))
+    }
+    val (jobs, driver) = listingJobs(run())
+    assert(jobs == 0)
+    val (sparkJobs, viaJob) = withConf(listingThreshold -> "1")(listingJobs(run()))
+    assert(sparkJobs == 1, "the counter must see Spark's own listing job")
+    assert(driver == viaJob)
+    assert(driver._1.size == 40 && driver._2.map(_._1) == (0L until 40L))
+  }
+
+  test("a readStream AvailableNow batch of 40 hour files runs no listing job, same rows and files") {
+    import org.apache.spark.sql.streaming.Trigger
+    val dir = hourDir(40)
+    def run() = {
+      val ckpt = Files.createTempDirectory("graft-gha-many-ckpt-").toString
+      val name = s"gha_many_${System.nanoTime}"
+      val q = GhArchiveSource.readStream(spark, dir, maxFilesPerTrigger = 100)
+        .writeStream.format("memory").queryName(name)
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow()).start()
+      assert(q.awaitTermination(60000))
+      assert(q.recentProgress.count(_.numInputRows > 0) == 1, "one batch")
+      // the files the batch read, from the source's own log
+      val log = new String(Files.readAllBytes(
+        java.nio.file.Paths.get(s"$ckpt/sources/0/0")), "UTF-8")
+      val files = "\"path\":\"([^\"]+)\"".r.findAllMatchIn(log).map(_.group(1)).toSeq.sorted
+      (files, decoded(spark.table(name)))
+    }
+    val (jobs, driver) = listingJobs(run())
+    assert(jobs == 0)
+    val (sparkJobs, viaJob) = withConf(listingThreshold -> "1")(listingJobs(run()))
+    assert(sparkJobs >= 1, "the counter must see Spark's own listing jobs")
+    assert(driver == viaJob)
+    assert(driver._1.size == 40 && driver._2.map(_._1) == (0L until 40L))
+  }
+}
+
+object GhArchiveSourceSpec {
+  def writeHourFile(dir: String, key: String, lines: Seq[String]): Unit = {
+    val w = new BufferedWriter(new OutputStreamWriter(
+      new GZIPOutputStream(new FileOutputStream(s"$dir/$key.json.gz")), "UTF-8"))
+    try lines.foreach { l => w.write(l); w.newLine() } finally w.close()
+  }
+
+  /** A new directory of `n` consecutive hour files from 2024-03-01-0 on,
+    * holding one event each, with ids 0 until n.
+    */
+  def hourDir(n: Int): String = {
+    val dir = Files.createTempDirectory("graft-gha-many-").toString
+    for (i <- 0 until n) {
+      val h = LocalDateTime.of(2024, 3, 1, 0, 0).plusHours(i)
+      writeHourFile(dir, s"${h.toLocalDate}-${h.getHour}",
+        Seq(s"""{"id":$i,"created_at":"${h.plusMinutes(10)}:00Z"}"""))
+    }
+    dir
   }
 }

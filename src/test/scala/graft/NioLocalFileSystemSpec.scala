@@ -16,7 +16,8 @@ import org.apache.spark.sql.streaming.Trigger
 import scala.jdk.CollectionConverters._
 
 /** The session's `file:` filesystem ([[NioLocalFileSystem]] / [[NioLocalFs]])
-  * starts no `chmod` or `readlink` process on the ingest path, and behaves
+  * starts no `chmod`, `readlink`, `ls` or `stat` process on the ingest,
+  * compaction and driver-listing paths, and behaves
   * like Hadoop's stock local filesystem: same permission bits, overwriting
   * renames, symlinks, checksum files.
   */
@@ -67,12 +68,14 @@ class NioLocalFileSystemSpec extends SparkSpec {
     assert(afs.getClass == classOf[NioLocalFs])
   }
 
+  // also covers driver-side listing, and `ls`/`stat` forks next to these
   test("archive polls, compaction and sketch compaction start no chmod or readlink process") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val out = tmp("graft-forks-out-").toString
     val ckpt = tmp("graft-forks-ckpt-").toString
     val mv = tmp("graft-forks-mv-").toString
+    val days = tmp("graft-forks-days-").toString + "/a"
     val mem = MemoryStream[(Long, Timestamp, String)]
     val started = processesStarted {
       // the recorder itself works: a process started here is seen
@@ -95,9 +98,18 @@ class NioLocalFileSystemSpec extends SparkSpec {
           .agg(hll_sketch_agg(col("id")).as("sketch"))
           .write.mode("append").parquet(mv)
       assert(ArchiveStream.compactSketchPartials(spark, mv) == (2L, 1L))
+      // listing on the driver: more paths, and more day dirs, than Spark's
+      // parallel-listing default of 32
+      assert(graft.sources.GhArchiveSource.read(spark, GhArchiveSourceSpec.hourDir(34))
+        .count() == 34)
+      ArchiveStream.append(spark.range(34).select(col("id"),
+        timestamp_seconds(lit(1704067200L) + col("id") * 86400L).as("ts"),
+        lit("r").as("raw")), days)
+      assert(spark.read.parquet(days).select("d").distinct().count() == 34)
     }
     assert(started.contains("true"))
-    val forks = started.filter(c => c.startsWith("chmod") || c.startsWith("readlink"))
+    val forks = started.filter(c =>
+      Seq("chmod", "readlink", "ls", "stat").contains(c.split(' ').head.split('/').last))
     assert(forks.isEmpty, s"${forks.size} forks, e.g. ${forks.take(3)}")
     assert(spark.read.parquet(out).count() == 10)
     // checksums are still written next to the checkpoint and sink files

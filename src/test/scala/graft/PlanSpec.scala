@@ -1,10 +1,6 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
 import graft.plans.RowLocalUnionLoopExec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.UnionLoopExec
 
@@ -342,34 +338,13 @@ class PlanSpec extends SparkSpec {
       "candidate pairs must come from the cluster-id equality join:\n" + p.take(1500))
   }
 
-  /** The Spark jobs `body` starts: a listener counts the job starts of a job
-    * group, and a marker job run after `body` shows when the listener bus
-    * has delivered them all (it delivers in order). */
+  /** The Spark jobs `body` starts on this thread, counted by a job group. */
   private def jobs(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val (group, marker) = ("plan-spec-jobs", "plan-spec-marker")
-    val started = new AtomicInteger
-    val delivered = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case `group` => started.incrementAndGet()
-          case `marker` => delivered.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
+    val (sc, group) = (spark.sparkContext, "plan-spec-jobs")
+    jobsStarted {
       sc.setJobGroup(group, group)
-      body
-      sc.setJobGroup(marker, marker)
-      sc.parallelize(Seq(1), 1).count()
-      assert(delivered.await(60, TimeUnit.SECONDS), "the marker job never reached the listener")
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-    started.get
+      try body finally sc.clearJobGroup()
+    }._1.count(_.getProperty("spark.jobGroup.id") == group)
   }
 
   test("sql_recursive: the row-local CTE runs as one fused pass, not a job per iteration") {

@@ -119,18 +119,6 @@ class RecursiveCteSpec extends SparkSpec {
     }, e)
   }
 
-  /** Runs `body` with the session confs set, then restores them. */
-  private def withConf(kvs: (String, String)*)(body: => Unit): Unit = {
-    val before = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    try {
-      kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-      body
-    } finally before.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   private val rowLimit = "spark.sql.cteRecursionRowLimit"
 
   /** Three chains counting k up from 0 to `deepest`: 3 × (deepest + 1) rows. */

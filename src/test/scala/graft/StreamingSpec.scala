@@ -245,6 +245,48 @@ class StreamingSpec extends SparkSpec {
     assert(ttlRead() == before)
   }
 
+  test("a read of an archive with 40 day dirs runs no listing job, same rows and files") {
+    import spark.implicits._
+    val out = Files.createTempDirectory("graft-days-").toString + "/a"
+    ArchiveStream.append((0 until 40).map(i =>
+      (i.toLong, new Timestamp(1704067200000L + i * 86400000L), s"r$i"))
+      .toDF("id", "ts", "raw"), out)
+    assert(new java.io.File(out).list().count(_.startsWith("d=")) == 40)
+    def run() = {
+      val df = spark.read.parquet(out)
+      (df.inputFiles.toSeq.sorted, df.select("id", "raw", "d").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.get(2).toString)).toSeq.sorted)
+    }
+    val (jobs, driver) = listingJobs(run())
+    assert(jobs == 0)
+    val (sparkJobs, viaJob) = withConf(listingThreshold -> "1")(listingJobs(run()))
+    assert(sparkJobs == 1, "the counter must see Spark's own listing job")
+    assert(driver == viaJob)
+    assert(driver._1.size == 40 && driver._2.map(_._1) == (0L until 40L))
+  }
+
+  test("compact of a 40-file day runs no listing job, same rows and files") {
+    def run() = {
+      val out = Files.createTempDirectory("graft-compact-many-").toString + "/a"
+      spark.range(0, 400, 1, 40).select(col("id"),
+        timestamp_seconds(lit(1704067200L) + col("id")).as("ts"),
+        concat(lit("r"), col("id")).as("raw"))
+        .write.parquet(out + "/d=2024-01-01")
+      val before = spark.read.parquet(out).inputFiles.length
+      val touched = ArchiveStream.compact(spark, out)
+      val after = spark.read.parquet(out)
+      (before, touched, after.inputFiles.length, after.select("id", "ts", "raw", "d")
+        .collect().map(_.toString).toSeq.sorted)
+    }
+    val (jobs, driver) = listingJobs(run())
+    assert(jobs == 0)
+    val (sparkJobs, viaJob) = withConf(listingThreshold -> "1")(listingJobs(run()))
+    assert(sparkJobs >= 1, "the counter must see Spark's own listing job")
+    assert(driver == viaJob)
+    assert(driver._1 == 40 && driver._2 == Seq("d=2024-01-01") && driver._3 == 1 &&
+      driver._4.size == 400)
+  }
+
   test("archive with compactEvery merges small files between micro-batches") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
