@@ -8,12 +8,7 @@ package graft
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default 8: measured at sf0.1 over the full suite — 4 cpus: ~48 s,
-    // 8: ~45 s, 32: ~52 s. Beyond 8, per-task scheduling overhead beats
-    // added parallelism on 600k-row partitions; at real scale the
-    // parallelism comes from the cluster, not this local knob.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = GraftSession.builder(cpus).getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // one throwaway action to absorb session warm-up (codegen compiler,
     // parquet footer caches) so per-query numbers measure the query

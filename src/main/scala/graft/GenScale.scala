@@ -40,7 +40,7 @@ object GenScale {
     val inDir = args(0)
     val outDir = args(1)
     val replicas = if (args.length > 2) args(2).toInt else 10
-    val spark = GraftSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
+    val spark = GraftSession.builder()
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

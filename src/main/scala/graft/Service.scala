@@ -12,17 +12,21 @@ package graft
   *    bounded hour-range load into the same day-partitioned archive.
   */
 object Service {
-  /** Usage: runMain graft.Service <archiveDir> <outDir> <checkpointDir>
-    *        [compactEveryNPolls=12] [ttlDays=3]
-    *
-    * Each poll is one micro-batch, so compaction runs after every N-th poll.
+  val Usage = "Usage: runMain graft.Service <archiveDir> <outDir> " +
+    "<checkpointDir> [compactEveryNPolls=12] [ttlDays=3]"
+
+  /** Each poll is one micro-batch, so compaction runs after every N-th poll
+    * (0: never). The arguments are checked before any query starts: the
+    * TTL is applied only in the shutdown hook, where a bad value would
+    * surface after the archive had been written.
     */
   def main(args: Array[String]): Unit = {
+    if (args.length < 3 || args.length > 5) throw new IllegalArgumentException(Usage)
     val Array(archiveDir, outDir, ckptDir, rest @ _*) = args
     val compactEvery = rest.headOption.map(_.toInt).getOrElse(12)
     val ttlDays = rest.lift(1).map(_.toInt).getOrElse(3)
-    val spark = GraftSession.builder(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")).getOrCreate()
+    require(ttlDays >= 0, s"ttlDays must be >= 0 (got $ttlDays)")
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.streams.addListener(new streaming.ProgressLine)
     val (rate, q) = sources.GhArchiveSource.catchUpThenPace(
@@ -41,15 +45,15 @@ object Service {
 /** Bounded hour-range backfill (ref: cmd/gh-load/main.go): list only the
   * in-range hour files, decode, dedup by id, write the same
   * day-partitioned sorted zstd layout the service appends to.
-  *
-  * Usage: runMain graft.Backfill <archiveDir> <outDir>
-  *        <fromHour e.g. 2024-01-15-0> <toHourExclusive>
   */
 object Backfill {
+  val Usage = "Usage: runMain graft.Backfill <archiveDir> <outDir> " +
+    "<fromHour e.g. 2024-01-15-0> <toHourExclusive>"
+
   def main(args: Array[String]): Unit = {
+    if (args.length != 4) throw new IllegalArgumentException(Usage)
     val Array(archiveDir, outDir, from, to) = args
-    val spark = GraftSession.builder(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")).getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val rows = sources.GhArchiveSource.read(spark, archiveDir,
         from = Some(sources.GhArchiveSource.parseHourKey(from)),

@@ -33,8 +33,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = GraftSession.builder(cpus)
+    val spark = GraftSession.builder()
       // µs parquet timestamps (not INT96) so the driver's DuckDB/pyarrow
       // side reads the same logical type Spark computed (SURVEY.md §7.4.2).
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")

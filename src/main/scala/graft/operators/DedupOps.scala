@@ -248,11 +248,9 @@ object DedupOps {
     */
   /** The (doc_id, sig, combo, ckey) posting rows of the Manku block index
     * for a given layout: each doc indexed under all C(B,3) packed
-    * (B-3)-block combination keys. Exposed separately so graft.SimHashDiag
-    * can count raw candidate collisions per layout (the ledger's measured
-    * cost-curve numbers) against the same construction the query uses.
+    * (B-3)-block combination keys.
     */
-  private[graft] def simhashComboKeys(sim: DataFrame, blocks: Int): DataFrame = {
+  private def simhashComboKeys(sim: DataFrame, blocks: Int): DataFrame = {
     require(Set(4, 6, 8)(blocks),
       s"graft.simhash.blocks must be 4, 6, or 8 (got $blocks)")
     // block widths as equal as 64/B allows (B=6 -> 11,11,11,11,10,10);

@@ -177,12 +177,14 @@ object ArchiveStream {
     * not the wall clock, so offline replays are deterministic. The NULL-day
     * partition (`d=__HIVE_DEFAULT_PARTITION__`, rows without a `ts`) is
     * never dropped. Dropped partitions are reported alongside rewritten
-    * ones.
+    * ones. A negative `n` is refused: it would expire every dated day,
+    * the newest included.
     */
   def compact(spark: SparkSession, outDir: String,
               maxFilesPerPartition: Int = 4,
               targetBytesPerFile: Long = 128L * 1024 * 1024,
               ttlDays: Option[Int] = None): Seq[String] = {
+    ttlDays.foreach(days => require(days >= 0, s"ttlDays must be >= 0 (got $days)"))
     val root = new Path(outDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return Seq.empty

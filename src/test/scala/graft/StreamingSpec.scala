@@ -215,15 +215,29 @@ class StreamingSpec extends SparkSpec {
       Seq((d.takeRight(2).toLong, ts(s"$d 12:00:00"), "r")).toDF("id", "ts", "raw")
         .withColumn("d", to_date(col("ts")))
         .write.mode("append").partitionBy("d").parquet(out)
+    def days() = spark.read.parquet(out).select("d").distinct()
+      .collect().map(_.get(0).toString).sorted.toSeq
+    // a negative TTL would put the cutoff after the newest day: refused,
+    // and nothing is deleted
+    intercept[IllegalArgumentException](ArchiveStream.compact(spark, out,
+      maxFilesPerPartition = 100, ttlDays = Some(-1)))
+    assert(days() == Seq("2024-01-05", "2024-01-07", "2024-01-09", "2024-01-10"))
     val result = ArchiveStream.compact(spark, out,
       maxFilesPerPartition = 100, ttlDays = Some(3))
     assert(result == Seq("d=2024-01-05"))
-    val days = spark.read.parquet(out).select("d").distinct()
-      .collect().map(_.get(0).toString).sorted
-    assert(days.toSeq == Seq("2024-01-07", "2024-01-09", "2024-01-10"))
+    assert(days() == Seq("2024-01-07", "2024-01-09", "2024-01-10"))
     // deterministic under replay: a second pass drops nothing further
     assert(ArchiveStream.compact(spark, out,
       maxFilesPerPartition = 100, ttlDays = Some(3)).isEmpty)
+  }
+
+  test("the mains refuse a wrong argument count with their usage line") {
+    for ((main, usage, args) <- Seq[(Array[String] => Unit, String, Array[String])](
+        (Service.main, Service.Usage, Array("a", "b")),
+        (Service.main, Service.Usage, Array("a", "b", "c", "12", "3", "x")),
+        (Backfill.main, Backfill.Usage, Array("a", "b", "2024-01-15-0")),
+        (Explain.main, Explain.Usage, Array("/no/such/sf"))))
+      assert(intercept[IllegalArgumentException](main(args)).getMessage == usage)
   }
 
   test("compact with ttlDays keeps the NULL-day partition and never parses it as a date") {
