@@ -6,15 +6,14 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Session extension: registers the engine's custom expressions for SQL use
-  * (`SELECT cosine_sim(a, b) ...`) and the TTL-enforcement optimizer rule
-  * (graft.plans.TtlEnforcement — transparent retention over registered
-  * archive paths, SURVEY.md §2 D3). Activate with
+  * (`SELECT cosine_sim(a, b) ...`), the as-of and range-join table
+  * functions and their rewrite rules, and the physical strategies for
+  * as-of joins and row-local recursive CTEs. Activate with
   * `spark.sql.extensions=graft.GraftExtensions`; the DataFrame API path
   * (`graft.functions.api`) needs no registration.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectOptimizerRule(s => graft.plans.TtlEnforcement(s))
     ext.injectResolutionRule(s => graft.plans.AsOfJoinRewrite(s))
     // SQL surface for the as-of plan node (§7.3): FROM asof_join('probe',
     // 'build', 'key', 'probe_ts', 'build_ts', 'build_tie'[, direction
@@ -64,11 +63,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (children: Seq[Expression]) => graft.functions.ApproxTopK(children.head,
         children(1).eval().asInstanceOf[Int],
         children(2).eval().asInstanceOf[Int]).toAggregateExpression()))
-    ext.injectFunction((
-      FunctionIdentifier("ngram_dup_stats"),
-      new ExpressionInfo("graft.functions.NgramDupStats", "ngram_dup_stats"),
-      (children: Seq[Expression]) => graft.functions.NgramDupStats(children.head,
-        children(1).eval().asInstanceOf[Int])))
     ext.injectFunction((
       FunctionIdentifier("top_ngram"),
       new ExpressionInfo("graft.functions.TopNgram", "top_ngram"),

@@ -25,6 +25,7 @@ object Service {
     val Array(archiveDir, outDir, ckptDir, rest @ _*) = args
     val compactEvery = rest.headOption.map(_.toInt).getOrElse(12)
     val ttlDays = rest.lift(1).map(_.toInt).getOrElse(3)
+    require(compactEvery >= 0, s"compactEveryNPolls must be >= 0 (got $compactEvery)")
     require(ttlDays >= 0, s"ttlDays must be >= 0 (got $ttlDays)")
     val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -8,8 +7,10 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Word k-gram repetition statistics of a text column — `(n, n_distinct)`
-  * gram counts in ONE fused pass, for the Gopher-family duplicate-fraction
-  * quality signals (TextOps.text_repetition).
+  * gram counts for EVERY k = 1..maxK in one fused pass, for the
+  * Gopher-family duplicate-fraction quality signals
+  * (TextOps.text_repetition). Returns `array<struct<n, n_distinct>>`
+  * indexed k-1.
   *
   * Why a custom expression (the ShingleHashes lesson, measured again here):
   * the built-in phrasing `transform(sequence(1, size(toks)-k+1), i ->
@@ -18,48 +19,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * `split(text, ' ')` — k re-splits of the whole document per emitted gram,
   * O(k·tokens²) per document: 33 s for one sf0.1 pass vs ~1 s fused. Here:
   * tokenize once (same single-space semantics as `split(text, ' ')`), XXH64
-  * each token once, combine k consecutive token hashes per gram
+  * each token once, then per k combine k consecutive token hashes per gram
   * (boost-style hash_combine via [[ShingleHashes]]), sort, count distinct
-  * in place. Only the two counts leave the expression, so gram identity by
-  * 64-bit hash changes nothing observable (within-document collision odds
-  * ~m²/2^65).
+  * in place. Tokenizing once for all k matters too: one pass per k
+  * re-split and re-hashed the document each time, the dominant cost at
+  * 500k-document scale (measured at the sf10 ramp). Only the two counts
+  * leave the expression, so gram identity by 64-bit hash changes nothing
+  * observable (within-document collision odds ~m²/2^65).
   *
   * Fewer than k tokens → (0, 0): the caller's duplicate fraction treats an
   * absent gram population as "no repetition", matching the SQL oracle's
   * `CASE WHEN len(grams) > 0` guard.
-  */
-case class NgramDupStats(child: Expression, k: Int) extends UnaryExpression {
-  require(k >= 1, "k must be >= 1")
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("n", LongType, nullable = false),
-    StructField("n_distinct", LongType, nullable = false)))
-  override def prettyName: String = "ngram_dup_stats"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires string, got ${other.simpleString}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    NgramDupStats.compute(input.asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v =>
-      s"${ev.value} = graft.functions.NgramDupStats.compute($v, $k);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** All-k sibling of [[NgramDupStats]]: `(n, n_distinct)` for EVERY
-  * k = 1..maxK in one pass — tokenize and hash each token ONCE, then one
-  * combine+sort per k over the shared token-hash array. `text_repetition`
-  * needs k = 1, 2, 3; three separate NgramDupStats calls each re-split and
-  * re-hash the document (the dominant cost at 500k-document scale —
-  * measured at the sf10 ramp), where this pays tokenization once.
-  * Returns `array<struct<n, n_distinct>>` indexed k-1.
   */
 case class NgramDupProfile(child: Expression, maxK: Int) extends UnaryExpression {
   require(maxK >= 1, "maxK must be >= 1")
@@ -76,52 +46,19 @@ case class NgramDupProfile(child: Expression, maxK: Int) extends UnaryExpression
   }
 
   override def nullSafeEval(input: Any): Any =
-    NgramDupStats.computeProfile(input.asInstanceOf[UTF8String], maxK)
+    NgramDupProfile.computeProfile(input.asInstanceOf[UTF8String], maxK)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, v =>
-      s"${ev.value} = graft.functions.NgramDupStats.computeProfile($v, $maxK);")
+      s"${ev.value} = graft.functions.NgramDupProfile.computeProfile($v, $maxK);")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
-object NgramDupStats {
+object NgramDupProfile {
 
-  /** (total grams, distinct grams) for word k-grams under single-space
-    * tokenization — one byte scan, one hash per token, one sort.
-    */
-  def compute(text: UTF8String, k: Int): InternalRow = {
-    val toks = text.split(UTF8String.fromString(" "), -1)
-    val n = toks.length
-    val m = n - k + 1
-    if (m <= 0) return new GenericInternalRow(Array[Any](0L, 0L))
-    val th = new Array[Long](n)
-    var i = 0
-    while (i < n) { th(i) = ShingleHashes.tokenHash(toks(i)); i += 1 }
-    val gh = new Array[Long](m)
-    i = 0
-    while (i < m) {
-      var h = th(i)
-      var j = 1
-      while (j < k) { h = ShingleHashes.combine(h, th(i + j)); j += 1 }
-      gh(i) = h
-      i += 1
-    }
-    java.util.Arrays.sort(gh)
-    var distinct = 1
-    i = 1
-    while (i < m) {
-      if (gh(i) != gh(i - 1)) distinct += 1
-      i += 1
-    }
-    new GenericInternalRow(Array[Any](m.toLong, distinct.toLong))
-  }
-
-  /** One (n, n_distinct) row per k = 1..maxK, sharing ONE tokenize+hash
-    * pass (see [[NgramDupProfile]]). Identical per-k results to
-    * [[compute]] — same tokenizer, same combine, same sort-count.
-    */
+  /** One (n, n_distinct) row per k = 1..maxK, sharing ONE tokenize+hash pass. */
   def computeProfile(text: UTF8String,
       maxK: Int): org.apache.spark.sql.catalyst.util.GenericArrayData = {
     val toks = text.split(UTF8String.fromString(" "), -1)

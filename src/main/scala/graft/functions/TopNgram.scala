@@ -11,7 +11,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * pass, for the Gopher top-gram concentration rule
   * (TextOps.text_top_ngram_frac).
   *
-  * Why a custom expression (the NgramDupStats pathology, measured a third
+  * Why a custom expression (the NgramDupProfile pathology, measured a third
   * time): the compositional phrasing — transform/sequence/element_at to
   * build grams, explode, groupBy(doc, gram), per-doc rank — ran the lambda
   * INTERPRETED and shuffled every gram occurrence just to throw all but
@@ -20,7 +20,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * semantics to `split(text, ' ')`), build each gram string once, count in
   * one hash map, argmax with the (count desc, gram asc) tie rule — the
   * 2-row result leaves the expression and NOTHING shuffles. Unlike
-  * NgramDupStats the gram must come back as a STRING (it is part of the
+  * NgramDupProfile the gram must come back as a STRING (it is part of the
   * output contract), so identity is the exact gram text, never a hash.
   *
   * Fewer than k tokens → (null, 0): the caller's fraction treats an absent

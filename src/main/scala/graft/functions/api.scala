@@ -88,12 +88,6 @@ object api {
     graftBridge.column(UniqUpTo(graftBridge.expression(item), n)
       .toAggregateExpression())
 
-  /** Codegen'd word-k-gram repetition stats `(n, n_distinct)` of a text
-    * column — single fused pass (see [[NgramDupStats]]).
-    */
-  def ngramDupStats(text: Column, k: Int): Column =
-    graftBridge.column(NgramDupStats(graftBridge.expression(text), k))
-
   /** Codegen'd most-frequent word k-gram `(gram, n)` of a text column —
     * single fused pass, count-desc/gram-asc tie rule (see [[TopNgram]]).
     */

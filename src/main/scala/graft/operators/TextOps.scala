@@ -970,16 +970,17 @@ object TextOps {
 
     // Repetition signals (Gopher-family quality filters): fraction of
     // duplicate tokens / 2-grams / 3-grams per document — heavily repeated
-    // text is boilerplate or spam. Each fraction comes from ONE fused
-    // codegen'd pass (functions/NgramDupStats) yielding (n, n_distinct);
+    // text is boilerplate or spam. All three fractions come from ONE fused
+    // codegen'd pass (functions/NgramDupProfile) yielding (n, n_distinct)
+    // per k;
     // the built-in transform/element_at phrasing re-split the document per
     // emitted gram — O(k·tokens²) interpreted, 33 s vs ~1 s at sf0.1 (the
     // ShingleHashes pathology, re-measured here). Map-only: no explode, no
     // shuffle, nothing but the two counts per (doc, k) leaves the pass.
     "text_repetition" -> ((s, dir) => {
-      // ONE tokenize+hash pass for all three k (functions/NgramDupProfile)
-      // — three separate NgramDupStats calls re-split and re-hash the
-      // document each, the dominant cost at 500k-doc scale (sf10 ramp).
+      // ONE tokenize+hash pass for all three k — one pass per k re-split
+      // and re-hashed the document each, the dominant cost at 500k-doc
+      // scale (sf10 ramp).
       def dupFrac(st: Column): Column =
         round(when(st.getField("n") > 0,
           lit(1.0) - st.getField("n_distinct").cast(DoubleType) / st.getField("n"))
@@ -1000,7 +1001,7 @@ object TextOps {
     // covers): fraction of characters inside the most frequent word
     // 2-gram, keep-gate at the Gopher 0.20 threshold. The per-doc argmax
     // runs as ONE fused codegen pass (functions/TopNgram, the
-    // NgramDupStats discipline measured a third time): the compositional
+    // NgramDupProfile discipline measured a third time): the compositional
     // explode + groupBy(doc, gram) + per-doc rank shuffled every gram
     // occurrence just to discard all but one row per document — 3.7 s at
     // sf0.1, the suite's slowest key — where the fused map-only pass is

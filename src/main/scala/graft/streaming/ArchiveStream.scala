@@ -53,15 +53,6 @@ object ArchiveStream {
       .withWatermark("ts", watermark)
       .dropDuplicatesWithinWatermark("id")
 
-  /** Tumbling hourly rollup (G2) — streaming-safe windowed aggregation;
-    * the hour key is the reference's archive-file key (ref: cmd/gh-load/main.go:49).
-    */
-  def hourlyCounts(events: DataFrame): DataFrame =
-    events
-      .groupBy(window(col("ts"), "1 hour").as("w"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("w.start").as("hour"), col("n"))
-
   /** The archive layout, stated once (ref: README.md:8-17 `PARTITION BY
     * toDate(ts) ORDER BY (ts, id)`): a `d` day column, one shuffle by day
     * and a (ts, key) sort; `key` is `event_id` on the fixture tables.
@@ -210,9 +201,7 @@ object ArchiveStream {
       else {
         val bytes = files.map(_.getLen).sum
         val nOut = math.max(1, math.ceil(bytes.toDouble / targetBytesPerFile).toInt)
-        appendThenDelete(spark, p.getPath, files)(
-          _.repartitionByRange(nOut, col("ts"), col("id"))
-            .sortWithinPartitions("ts", "id"))
+        appendThenDelete(spark, p.getPath, files, nOut)
         Some(p.getPath.getName)
       }
     }
@@ -221,19 +210,20 @@ object ArchiveStream {
   private def parquetFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
     fs.listStatus(dir).filter(f => f.isFile && f.getPath.getName.endsWith(".parquet")).toSeq
 
-  /** The one in-place rewrite protocol both compactors share: append
-    * `rewrite` of the rows in `files` into `dir` itself, then delete
-    * `files` and the write's `_SUCCESS` marker. Nothing is renamed and
-    * nothing is deleted before the rewritten copy is committed, so a crash
-    * at any point leaves every row readable — between the append and the
-    * deletes, twice. Both readers absorb that: replace-by-key reads
-    * collapse the archive's duplicate rows, and an HLL union ignores a
-    * repeated sketch.
+  /** `compact`'s in-place rewrite: append the rows in `files`, range
+    * clustered into `nOut` files and sorted by (ts, id), into `dir`
+    * itself, then delete `files` and the write's `_SUCCESS` marker.
+    * Nothing is renamed and nothing is deleted before the rewritten copy
+    * is committed, so a crash at any point leaves every row readable —
+    * between the append and the deletes, twice, which replace-by-key reads
+    * collapse like any replay duplicate.
     */
-  private def appendThenDelete(spark: SparkSession, dir: Path, files: Seq[FileStatus])(
-      rewrite: DataFrame => DataFrame): Unit = {
+  private def appendThenDelete(spark: SparkSession, dir: Path, files: Seq[FileStatus],
+      nOut: Int): Unit = {
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    rewrite(spark.read.parquet(files.map(_.getPath.toString): _*))
+    spark.read.parquet(files.map(_.getPath.toString): _*)
+      .repartitionByRange(nOut, col("ts"), col("id"))
+      .sortWithinPartitions("ts", "id")
       .write.mode("append").option("compression", "zstd")
       .parquet(dir.toString)
     files.foreach(f => fs.delete(f.getPath, false))
@@ -250,70 +240,5 @@ object ArchiveStream {
     archived.crossJoin(broadcast(cutoff))
       .filter(col("ts") >= col("mx") - expr(s"INTERVAL $days DAYS"))
       .drop("mx")
-  }
-
-  /** Incremental sketch-MV maintenance — the STREAMING producer of the
-    * day-partial HLL table that `agg_hll_merge` / `event_rolling_uniques_
-    * approx` consume: each micro-batch appends its OWN (day, partial) rows
-    * to the MV directory; readers roll any day range up with
-    * `hll_union_agg` without ever touching raw events.
-    *
-    * Replay safety is BY ALGEBRA, not by dedup: an HLL union is
-    * register-wise max, so merging a replayed identical partial is a
-    * no-op — the estimate after a duplicated append equals the estimate
-    * without it (the sketch analog of the archive's replace-by-key replay
-    * contract; StreamingSpec pins it). That is why the engine keeps NO
-    * streaming state here (no watermark store, nothing to checkpoint
-    * beyond source offsets): the MV directory is the state, it is
-    * mergeable, and at-least-once appends cannot corrupt it. Partial rows
-    * accumulate at |days|×batches and compact like any small-file sink.
-    */
-  def sketchPartials(events: DataFrame, outDir: String, checkpointDir: String,
-                     trigger: Trigger = Trigger.ProcessingTime("5 seconds"),
-                     keyCol: String = "id"): StreamingQuery =
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch
-          .groupBy(to_date(col("ts")).as("day"))
-          .agg(hll_sketch_agg(col(keyCol)).as("sketch"))
-          .write.mode("append").parquet(outDir)
-      }
-      .start()
-
-  /** Reader side of the sketch MV: per-day distinct-key estimates from the
-    * accumulated partials alone.
-    */
-  def sketchRollup(spark: SparkSession, mvDir: String): DataFrame =
-    spark.read.parquet(mvDir)
-      .groupBy("day")
-      .agg(hll_sketch_estimate(hll_union_agg(col("sketch"))).as("approx_uniques"))
-
-  /** Compaction for the sketch MV (VERDICT r6 ask #6 — the G10 partial
-    * directory "compacts like any small-file sink", now demonstrated, not
-    * claimed): rewrite the |days|×batches partial rows as ONE pre-merged
-    * partial per day. The rewrite IS the rollup algebra — `hll_union_agg`
-    * is register-wise max, associative, commutative and idempotent, so
-    * union(compacted) == union(all originals) REGISTER-FOR-REGISTER and
-    * every subsequent `sketchRollup` is bit-identical before and after
-    * (StreamingSpec pins it). Same [[appendThenDelete]] protocol as
-    * [[compact]]: a crash between the append and the deletes leaves the
-    * old partials next to their merged copy, which the union absorbs, and
-    * the next pass merges both back to one row per day. Serialized with
-    * appends (run it between micro-batches or from a foreachBatch hook).
-    * Returns the (before, after) partial-row counts.
-    */
-  def compactSketchPartials(spark: SparkSession, mvDir: String): (Long, Long) = {
-    val root = new Path(mvDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = if (fs.exists(root)) parquetFiles(fs, root) else Nil
-    if (files.isEmpty) return (0L, 0L)
-    val partials = spark.read.parquet(files.map(_.getPath.toString): _*)
-    val counts = (partials.count(), partials.select("day").distinct().count())
-    appendThenDelete(spark, root, files)(
-      _.groupBy("day").agg(hll_union_agg(col("sketch")).as("sketch")))
-    counts
   }
 }

@@ -145,7 +145,6 @@ class GhArchiveSourceSpec extends SparkSpec {
   }
 
   test("whole service: catch-up -> paced -> compact(ttl) -> replace-by-key read") {
-    import org.apache.spark.sql.functions.col
     // the full reference service lifecycle in one pass: backfill an hour
     // archive (with a replayed duplicate), reach paced steady state, run
     // the periodic merge with retention, and read the canonical table

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** The hot-line-key skew answer for line-level dedup (VERDICT r6 ask #4):
   * `pipeline_line_dedup_salted` replaces the rank-1 window (whose hot
   * boilerplate key a window CANNOT split across tasks) with the associative

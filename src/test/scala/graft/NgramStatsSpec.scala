@@ -1,10 +1,10 @@
 package graft
 
-import graft.functions.NgramDupStats
+import graft.functions.NgramDupProfile
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins functions/NgramDupStats (the fused pass behind text_repetition)
+/** Pins functions/NgramDupProfile (the fused pass behind text_repetition)
   * against a naive string-gram reference: the expression counts gram
   * HASHES, so these assert the counts — the only observable — match exact
   * string semantics, including the split(text, ' ') empty-token corners.
@@ -17,8 +17,10 @@ class NgramStatsSpec extends AnyFunSuite {
     (grams.size.toLong, grams.distinct.size.toLong)
   }
 
+  /** Element k-1 of one all-k profile, as `text_repetition` reads it. */
   private def fused(text: String, k: Int): (Long, Long) = {
-    val r = NgramDupStats.compute(UTF8String.fromString(text), k)
+    val r = NgramDupProfile.computeProfile(UTF8String.fromString(text), 4)
+      .getStruct(k - 1, 2)
     (r.getLong(0), r.getLong(1))
   }
 

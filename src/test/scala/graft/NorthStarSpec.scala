@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{DedupOps, MultimodalOps, SimOps}
+import graft.operators.{MultimodalOps, SimOps}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -139,7 +139,6 @@ class NorthStarSpec extends SparkSpec {
   }
 
   test("lshBucket puts identical vectors in the same bucket") {
-    import spark.implicits._
     val e = Tables.embeddings(spark, planted)
       .select(col("vec_id"), SimOps.lshBucket(
         transform(col("embedding"), x => x.cast("double"))).as("b"))

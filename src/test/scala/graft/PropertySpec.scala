@@ -125,7 +125,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("property: compaction preserves the row multiset for any append pattern") {
-    import spark.implicits._
     for (i <- trials.take(5)) {
       val rows = sample(i)
       val out = java.nio.file.Files
@@ -246,7 +245,7 @@ class PropertySpec extends SparkSpec {
       // bin = exclusive running token count DIV 256
       val want = rows.groupBy(_._3).toSeq.flatMap { case (src, ds) =>
         var cum = 0L
-        ds.sortBy(_._1).map { case (id, nTok, _) =>
+        ds.sortBy(_._1).map { case (_, nTok, _) =>
           val bin = cum / 256
           cum += nTok
           ((src, bin), (1L, nTok.toLong))

@@ -1,8 +1,6 @@
 package graft
 
 import java.sql.Timestamp
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** The r7 sweep lesson as a REGRESSION CLASS, not a memory (VERDICT r7 ask
   * #4): when a rounded output is a RATIONAL of the data's exact integers

@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.DedupOps
-import org.apache.spark.sql.functions._
 
 /** The corpus-adaptive simhash candidate index (VERDICT r8 ask #3): the
   * Hamming<=3 pair set must be IDENTICAL under every block layout — B=4

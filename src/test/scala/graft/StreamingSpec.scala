@@ -232,12 +232,15 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("the mains refuse a wrong argument count with their usage line") {
-    for ((main, usage, args) <- Seq[(Array[String] => Unit, String, Array[String])](
+    for ((main, message, args) <- Seq[(Array[String] => Unit, String, Array[String])](
         (Service.main, Service.Usage, Array("a", "b")),
         (Service.main, Service.Usage, Array("a", "b", "c", "12", "3", "x")),
+        // a negative poll count would never compact: refused before any query
+        (Service.main, "requirement failed: compactEveryNPolls must be >= 0 (got -1)",
+          Array("a", "b", "c", "-1")),
         (Backfill.main, Backfill.Usage, Array("a", "b", "2024-01-15-0")),
         (Explain.main, Explain.Usage, Array("/no/such/sf"))))
-      assert(intercept[IllegalArgumentException](main(args)).getMessage == usage)
+      assert(intercept[IllegalArgumentException](main(args)).getMessage == message)
   }
 
   test("compact with ttlDays keeps the NULL-day partition and never parses it as a date") {
@@ -385,8 +388,10 @@ class StreamingSpec extends SparkSpec {
     import s.implicits._
     implicit val sqlCtx = s.sqlContext
     val mem = MemoryStream[(Long, Timestamp)]
-    val q = ArchiveStream.hourlyCounts(
-        mem.toDF().toDF("id", "ts").withWatermark("ts", "10 minutes"))
+    val q = mem.toDF().toDF("id", "ts").withWatermark("ts", "10 minutes")
+      .groupBy(window(col("ts"), "1 hour").as("w"))
+      .agg(count(lit(1)).as("n"))
+      .select(col("w.start").as("hour"), col("n"))
       .writeStream.format("memory").queryName("closed_hours")
       .outputMode("append").start()
     try {
@@ -516,165 +521,6 @@ class StreamingSpec extends SparkSpec {
     } finally spark.streams.removeListener(listener)
   }
 
-  test("mapGroupsWithState: per-key counts accumulate across micro-batches (custom state, G7/I)") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, Timestamp)]
-    val q = graft.streaming.StateOps.runningCounts(
-        mem.toDF().toDF("key", "ts").as[(Long, Timestamp)])
-      .writeStream.format("memory").queryName("state_out")
-      .outputMode("update").start()
-    try {
-      mem.addData((1L, ts("2024-01-01 10:00:00")), (1L, ts("2024-01-01 10:01:00")),
-                  (2L, ts("2024-01-01 10:02:00")))
-      q.processAllAvailable()
-      mem.addData((1L, ts("2024-01-01 10:03:00")))
-      q.processAllAvailable()
-      // cross-batch accumulation: key 1 reaches 3 (2 then +1), key 2 stays 1
-      val latest = spark.sql("select key, max(n) from state_out group by key")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(latest == Map(1L -> 3L, 2L -> 1L))
-    } finally q.stop()
-  }
-
-  test("sketch-MV maintenance: incremental partials == single pass; replay is a union no-op") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, Timestamp)]
-    val mv = Files.createTempDirectory("graft-sketchmv-").toString
-    val ckpt = Files.createTempDirectory("graft-sketchmv-ckpt-").toString
-    val b1 = Seq(1L, 2L, 3L, 2L).map(u => (u, ts("2024-01-01 10:00:00")))
-    val b2 = Seq(3L, 4L, 5L).map(u => (u, ts("2024-01-01 11:00:00"))) ++
-      Seq(1L, 6L).map(u => (u, ts("2024-01-02 09:00:00")))
-    val q = ArchiveStream.sketchPartials(mem.toDF().toDF("id", "ts"), mv, ckpt)
-    try {
-      mem.addData(b1: _*); q.processAllAvailable()
-      mem.addData(b2: _*); q.processAllAvailable()
-    } finally q.stop()
-    def rollup = ArchiveStream.sketchRollup(spark, mv)
-      .collect().map(r => r.get(0).toString -> r.getLong(1)).toMap
-    // two batches touched day 1 -> two partial rows rolled up; equals the
-    // single-pass estimate over the union of both batches
-    val singlePass = (b1 ++ b2).toDF("id", "ts")
-      .groupBy(to_date(col("ts")).as("day"))
-      .agg(hll_sketch_estimate(hll_sketch_agg(col("id"))).as("e"))
-      .collect().map(r => r.get(0).toString -> r.getLong(1)).toMap
-    val first = rollup
-    assert(first == singlePass, s"merged=$first single=$singlePass")
-    // at-least-once replay: append the SAME batch's partial again — the
-    // register-wise-max union absorbs the duplicate, estimates unchanged
-    val mem2 = MemoryStream[(Long, Timestamp)]
-    val q2 = ArchiveStream.sketchPartials(
-      mem2.toDF().toDF("id", "ts"), mv,
-      Files.createTempDirectory("graft-sketchmv-ckpt2-").toString)
-    try {
-      mem2.addData(b1: _*); q2.processAllAvailable()
-    } finally q2.stop()
-    assert(rollup == first, "replayed partial changed the estimate")
-    // and the MV really did grow by one more day-1 partial row (no dedup
-    // happened — the ALGEBRA absorbed it)
-    assert(spark.read.parquet(mv).filter(col("day") === "2024-01-01").count() == 3)
-    // compaction (VERDICT r6 ask #6): union-merge the partials down to one
-    // row per day — the rollup is unchanged because the compaction IS the
-    // rollup's own associative union, then keep streaming into the
-    // compacted MV and verify new appends still merge in.
-    val (nBefore, nAfter) = ArchiveStream.compactSketchPartials(spark, mv)
-    assert(nBefore == 4L && nAfter == 2L, s"expected 4 partials -> 2, got $nBefore -> $nAfter")
-    assert(spark.read.parquet(mv).count() == 2)
-    assert(rollup == first, "compaction changed the rollup")
-    val mem3 = MemoryStream[(Long, Timestamp)]
-    val q3 = ArchiveStream.sketchPartials(
-      mem3.toDF().toDF("id", "ts"), mv,
-      Files.createTempDirectory("graft-sketchmv-ckpt3-").toString)
-    try {
-      mem3.addData((7L, ts("2024-01-02 10:00:00"))); q3.processAllAvailable()
-    } finally q3.stop()
-    val withNew = rollup
-    assert(withNew("2024-01-01") == first("2024-01-01") &&
-      withNew("2024-01-02") == first("2024-01-02") + 1,
-      s"post-compaction append lost: $withNew vs $first")
-    // crash window: compaction appended its merged copy (one row per day)
-    // but died before deleting the partials it merged — both sit in the MV
-    spark.read.parquet(mv).groupBy("day")
-      .agg(hll_union_agg(col("sketch")).as("sketch"))
-      .write.mode("append").parquet(mv)
-    assert(spark.read.parquet(mv).count() == 5)
-    assert(rollup == withNew, "the duplicated partials changed the rollup")
-    val (rb, ra) = ArchiveStream.compactSketchPartials(spark, mv)
-    assert(rb == 5L && ra == 2L, s"post-crash compaction got $rb -> $ra")
-    val perDay = spark.read.parquet(mv).groupBy("day").count()
-      .collect().map(r => r.get(0).toString -> r.getLong(1)).toMap
-    assert(perDay == Map("2024-01-01" -> 1L, "2024-01-02" -> 1L))
-    assert(rollup == withNew, "post-crash compaction changed the rollup")
-  }
-
-  test("flatMapGroupsWithState streaming funnel: levels equal the batch event_funnel") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, String, Timestamp)]
-    // watermark wider than the replayed 30-day span: no state eviction mid
-    // replay, so no funnel re-anchors and batch/stream levels must agree
-    // exactly (see the streamingFunnel doc comment for the re-anchor rule)
-    val q = graft.streaming.StateOps.streamingFunnel(
-        mem.toDF().toDF("user_id", "event_type", "ts").as[(Long, String, Timestamp)],
-        watermark = "40 days")
-      .writeStream.format("memory").queryName("funnel_out")
-      .outputMode("append").start()
-    try {
-      // replay the whole sf0.001 events table in event-time order, split
-      // across three micro-batches — the archive source's in-order contract
-      val all = Tables.events(spark, sf)
-        .select("user_id", "event_type", "ts")
-        .orderBy("ts", "event_id")
-        .collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getTimestamp(2)))
-      for (chunk <- all.grouped(400)) { mem.addData(chunk.toSeq); q.processAllAvailable() }
-      // per-user max reached level from the stream, exclusive level counts
-      val streamLevels = spark.sql(
-        "select user_id, max(level) as lvl from funnel_out group by user_id")
-        .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-      val streamCounts = streamLevels.values.groupBy(identity).map { case (l, v) => (l.toLong, v.size.toLong) }
-      val batchCounts = SparkEntry.queries("event_funnel")(spark, sf).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).filter(_._1 > 0).toMap
-      assert(streamCounts == batchCounts,
-        s"stream $streamCounts vs batch $batchCounts")
-    } finally q.stop()
-  }
-
-  test("streaming as-of join equals the batch join_asof / plan-level AsOfJoin") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, String, Long, Timestamp)]
-    // watermark wider than the replayed span: no state eviction mid-replay,
-    // so the stream must reproduce the batch as-of exactly
-    val q = graft.streaming.StateOps.streamingAsOf(
-        mem.toDF().toDF("user_id", "event_type", "event_id", "ts")
-          .as[(Long, String, Long, Timestamp)],
-        watermark = "40 days")
-      .writeStream.format("memory").queryName("asof_out")
-      .outputMode("append").start()
-    try {
-      val all = Tables.events(spark, sf)
-        .filter(col("event_type").isin("click", "purchase"))
-        .select("user_id", "event_type", "event_id", "ts")
-        .orderBy("ts", "event_id")
-        .collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getTimestamp(3)))
-      for (chunk <- all.grouped(400)) { mem.addData(chunk.toSeq); q.processAllAvailable() }
-      val streamed = spark.sql(
-        "select p_id, click_ts from asof_out")
-        .collect().map(r => r.getLong(0) -> Option(r.getTimestamp(1))).toMap
-      val batch = SparkEntry.queries("join_asof")(spark, sf).collect()
-        .map(r => r.getLong(0) -> Option(r.getTimestamp(3))).toMap
-      assert(streamed.size == batch.size,
-        s"purchase count: stream ${streamed.size} vs batch ${batch.size}")
-      val diffs = batch.collect {
-        case (id, want) if streamed(id) != want => (id, streamed(id), want)
-      }
-      assert(diffs.isEmpty, s"first diffs: ${diffs.take(5)}")
-    } finally q.stop()
-  }
-
   test("late data beyond the watermark is dropped from finalized windows (G6)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -704,112 +550,6 @@ class StreamingSpec extends SparkSpec {
         .collect().map(_.getLong(0)).toSeq
       assert(first == Seq(2L),
         s"closed window must emit once with the on-time count only: $first")
-    } finally q.stop()
-  }
-
-  test("flatMapGroupsWithState carry-forward equals the batch window_fill_forward") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, Long, String, Timestamp, Double)]
-    // watermark wider than the replayed span: no idle eviction mid-replay,
-    // so the stream must reproduce the batch window exactly
-    val q = graft.streaming.StateOps.carryForward(
-        mem.toDF().toDF("user_id", "event_id", "event_type", "ts", "value")
-          .as[(Long, Long, String, Timestamp, Double)],
-        watermark = "40 days")
-      .writeStream.format("memory").queryName("carry_out")
-      .outputMode("append").start()
-    try {
-      val all = Tables.events(spark, sf)
-        .select("user_id", "event_id", "event_type", "ts", "value")
-        .orderBy("ts", "event_id")
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getString(2),
-          r.getTimestamp(3), r.getDouble(4)))
-      for (chunk <- all.grouped(400)) { mem.addData(chunk.toSeq); q.processAllAvailable() }
-      val stream = spark.sql("select user_id, event_id, filled from carry_out")
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1)) ->
-          (if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toMap
-      val batch = SparkEntry.queries("window_fill_forward")(spark, sf).collect()
-        .map(r => (r.getLong(0), r.getLong(1)) ->
-          (if (r.isNullAt(4)) None else Some(r.getDouble(4)))).toMap
-      assert(stream.size == batch.size, s"${stream.size} vs ${batch.size}")
-      assert(stream == batch)
-    } finally q.stop()
-  }
-
-  test("property: streaming funnel equals a sequential state-machine reference") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val types = Vector("signup", "click", "purchase", "view", "error")
-    val windowMs = 7L * 24 * 3600 * 1000
-    for (seed <- 1 to 5) {
-      val rnd = new scala.util.Random(seed)
-      val base = Timestamp.valueOf("2024-01-01 00:00:00").getTime
-      // unique, strictly increasing timestamps: no tie ambiguity to test
-      val events = (0 until 300).map { k =>
-        (rnd.nextInt(8).toLong, types(rnd.nextInt(types.size)),
-          new Timestamp(base + k * 60000L + rnd.nextInt(50000)))
-      }.sortBy(_._3.getTime)
-      // sequential reference: the documented state machine, no eviction
-      val want = scala.collection.mutable.Map[Long, (Long, Long, Long)]()
-      val wantLevels = scala.collection.mutable.Map[Long, Int]()
-      for ((u, typ, ts) <- events) {
-        val t = ts.getTime
-        val (t1, t2, t3) = want.getOrElse(u, (-1L, -1L, -1L))
-        if (typ == "signup" && t1 < 0) {
-          want(u) = (t, t2, t3); wantLevels(u) = math.max(wantLevels.getOrElse(u, 0), 1)
-        } else if (typ == "click" && t1 >= 0 && t2 < 0 && t > t1 && t <= t1 + windowMs) {
-          want(u) = (t1, t, t3); wantLevels(u) = math.max(wantLevels.getOrElse(u, 0), 2)
-        } else if (typ == "purchase" && t2 >= 0 && t3 < 0 && t > t2 && t <= t1 + windowMs) {
-          want(u) = (t1, t2, t); wantLevels(u) = math.max(wantLevels.getOrElse(u, 0), 3)
-        }
-      }
-      val mem = MemoryStream[(Long, String, Timestamp)]
-      val q = graft.streaming.StateOps.streamingFunnel(
-          mem.toDF().toDF("user_id", "event_type", "ts").as[(Long, String, Timestamp)],
-          watermark = "60 days")
-        .writeStream.format("memory").queryName(s"funnel_prop_$seed")
-        .outputMode("append").start()
-      try {
-        for (chunk <- events.grouped(97)) { mem.addData(chunk); q.processAllAvailable() }
-        val got = spark.sql(
-          s"select user_id, max(level) from funnel_prop_$seed group by user_id")
-          .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-        assert(got == wantLevels.toMap, s"seed=$seed")
-      } finally q.stop()
-    }
-  }
-
-  test("streaming funnel evicts closed windows and re-anchors on a later signup") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, String, Timestamp)]
-    val q = graft.streaming.StateOps.streamingFunnel(
-        mem.toDF().toDF("user_id", "event_type", "ts").as[(Long, String, Timestamp)],
-        watermark = "1 hour")
-      .writeStream.format("memory").queryName("funnel_restart_out")
-      .outputMode("append").start()
-    try {
-      // funnel 1: signup + click, never purchases; window (7 d) then closes
-      mem.addData((1L, "signup", ts("2024-01-01 00:00:00")),
-                  (1L, "click", ts("2024-01-01 01:00:00")))
-      q.processAllAvailable()
-      // another user's event pushes the watermark past day 8 -> user 1's
-      // window (ends Jan 8) is evicted at the state-store timeout
-      mem.addData((2L, "view", ts("2024-01-10 00:00:00")))
-      q.processAllAvailable()
-      // funnel 2: the late signup re-anchors; a full chain completes
-      mem.addData((1L, "signup", ts("2024-01-20 00:00:00")),
-                  (1L, "click", ts("2024-01-20 01:00:00")),
-                  (1L, "purchase", ts("2024-01-20 02:00:00")))
-      q.processAllAvailable()
-      val levels = spark.sql(
-        "select level, count(*) as n from funnel_restart_out where user_id = 1 group by level")
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      // two level-1 and two level-2 advances (one per funnel), one level-3
-      assert(levels == Map(1 -> 2L, 2 -> 2L, 3 -> 1L), levels.toString)
     } finally q.stop()
   }
 
@@ -846,16 +586,6 @@ class StreamingSpec extends SparkSpec {
         .select("p_id", "c_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(batch == got)
     } finally q.stop()
-  }
-
-  test("hourlyCounts matches batch groupBy on the same data") {
-    import spark.implicits._
-    val e = Tables.events(spark, sf).select(col("event_id").as("id"), col("ts"),
-      col("props").as("raw"))
-    val streaming = ArchiveStream.hourlyCounts(e).orderBy("hour").collect()
-    val batch = e.groupBy(date_trunc("hour", col("ts")).as("hour"))
-      .agg(count(lit(1)).as("n")).orderBy("hour").collect()
-    assert(streaming.toSeq == batch.toSeq)
   }
 
   test("checkpoint crash-recovery: restart from the checkpoint dir converges on the uninterrupted run (G8)") {
@@ -922,81 +652,6 @@ class StreamingSpec extends SparkSpec {
     // replayed batch's rows are present at least twice in raw storage
     assert(spark.read.parquet(outA).count() >
       spark.read.parquet(outB).count(),
-      "recovery must have re-appended the uncommitted batch")
-  }
-
-  test("streaming as-of: checkpoint crash-recovery converges on the uninterrupted run (G9)") {
-    // Same fault-injection seam as the archive() G8 test, applied to the
-    // STATEFUL operator: crash after a sink append but before the
-    // micro-batch commits, rebuild on a fresh session from the checkpoint
-    // (flatMapGroupsWithState state + file-source offsets both live there),
-    // drain, and require the deduped output to equal an uninterrupted
-    // control run AND the batch join_asof truth.
-    val base = Files.createTempDirectory("graft-asof-crash-").toString
-    val srcDir = s"$base/src"
-    new java.io.File(srcDir).mkdirs()
-    val eventsDf = Tables.events(spark, sf)
-      .filter(col("event_type").isin("click", "purchase"))
-      .select("user_id", "event_type", "event_id", "ts")
-    val schema = eventsDf.schema
-    val all = eventsDf.orderBy("ts", "event_id").collect()
-    // 4 ts-ordered chunk files with strictly increasing mod times: the file
-    // source lists by mod time, so with maxFilesPerTrigger=1 replay order
-    // equals event-time order (the archive replay contract)
-    all.grouped((all.length + 3) / 4).zipWithIndex.foreach { case (chunk, i) =>
-      val df = spark.createDataFrame(
-        java.util.Arrays.asList(chunk: _*), schema)
-      val tmp = s"$base/tmp$i"
-      df.coalesce(1).write.parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      val dst = new java.io.File(srcDir, f"chunk-$i%02d.parquet")
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      assert(dst.setLastModified(1700000000000L + i * 60000L))
-    }
-    def run(s: org.apache.spark.sql.SparkSession, out: String, ckpt: String,
-            crashAt: Option[Long]) = {
-      import s.implicits._
-      val src = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(srcDir)
-        .toDF("user_id", "event_type", "event_id", "ts")
-        .as[(Long, String, Long, Timestamp)]
-      graft.streaming.StateOps.streamingAsOf(src, watermark = "40 days")
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .foreachBatch {
-          (df: org.apache.spark.sql.Dataset[graft.streaming.StateOps.AsOfMatch],
-           bid: Long) =>
-            df.write.mode("append").parquet(out)
-            if (crashAt.contains(bid)) throw new RuntimeException("injected crash")
-        }
-        .start()
-    }
-    def canonical(out: String): Map[Long, Option[Timestamp]] =
-      spark.read.parquet(out).dropDuplicates("p_id").collect()
-        .map(r => r.getAs[Long]("p_id") ->
-          Option(r.getAs[Timestamp]("click_ts"))).toMap
-    val (outA, ckptA) = (s"$base/a", s"$base/ckptA")
-    val crashed = run(spark, outA, ckptA, crashAt = Some(1L))
-    val failed =
-      try { crashed.processAllAvailable(); false }
-      catch { case _: Exception => true }
-    assert(failed, "the injected crash must terminate the first run")
-    val s2 = spark.newSession()
-    val resumed = run(s2, outA, ckptA, crashAt = None)
-    try { resumed.processAllAvailable() } finally resumed.stop()
-    val (outB, ckptB) = (s"$base/b", s"$base/ckptB")
-    val control = run(spark, outB, ckptB, crashAt = None)
-    try { control.processAllAvailable() } finally control.stop()
-    assert(canonical(outA) == canonical(outB),
-      "post-recovery as-of output must equal the uninterrupted run")
-    val batch = SparkEntry.queries("join_asof")(spark, sf).collect()
-      .map(r => r.getLong(0) -> Option(r.getTimestamp(3))).toMap
-    assert(canonical(outA) == batch,
-      "post-recovery as-of output must equal the batch join_asof truth")
-    // the crash exercised the at-least-once window: the replayed batch's
-    // rows appear at least twice in raw (pre-dedup) storage
-    assert(spark.read.parquet(outA).count() > spark.read.parquet(outB).count(),
       "recovery must have re-appended the uncommitted batch")
   }
 
