@@ -8,7 +8,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 /** Session extension: registers the engine's custom expressions for SQL use
   * (`SELECT cosine_sim(a, b) ...`), the as-of and range-join table
   * functions and their rewrite rules, and the physical strategies for
-  * as-of joins and row-local recursive CTEs. Activate with
+  * as-of joins and row-local recursive CTEs. No injected name may be one
+  * of Spark's built-in functions (`GraftExtensionsSpec`): the injection
+  * would silently replace it in every session. Activate with
   * `spark.sql.extensions=graft.GraftExtensions`; the DataFrame API path
   * (`graft.functions.api`) needs no registration.
   */
@@ -81,31 +83,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo("graft.functions.JaroWinkler", "jaro_winkler"),
       (children: Seq[Expression]) =>
         graft.functions.JaroWinkler(children.head, children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("theta_sketch"),
-      new ExpressionInfo("graft.functions.ThetaSketchAgg", "theta_sketch"),
-      (children: Seq[Expression]) => graft.functions.ThetaSketchAgg(children.head,
-        children(1).eval().asInstanceOf[Int]).toAggregateExpression()))
-    ext.injectFunction((
-      FunctionIdentifier("theta_union_agg"),
-      new ExpressionInfo("graft.functions.ThetaUnionAgg", "theta_union_agg"),
-      (children: Seq[Expression]) => graft.functions.ThetaUnionAgg(children.head,
-        children(1).eval().asInstanceOf[Int]).toAggregateExpression()))
-    ext.injectFunction((
-      FunctionIdentifier("theta_intersect"),
-      new ExpressionInfo("graft.functions.ThetaIntersect", "theta_intersect"),
-      (children: Seq[Expression]) =>
-        graft.functions.ThetaIntersect(children.head, children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("theta_union"),
-      new ExpressionInfo("graft.functions.ThetaUnion", "theta_union"),
-      (children: Seq[Expression]) =>
-        graft.functions.ThetaUnion(children.head, children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("theta_estimate"),
-      new ExpressionInfo("graft.functions.ThetaEstimate", "theta_estimate"),
-      (children: Seq[Expression]) =>
-        graft.functions.ThetaEstimate(children.head)))
     ext.injectFunction((
       FunctionIdentifier("co_moment"),
       new ExpressionInfo("graft.functions.CoMoment", "co_moment"),

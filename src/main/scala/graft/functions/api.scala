@@ -43,33 +43,6 @@ object api {
     graftBridge.column(ApproxTopKWeighted(graftBridge.expression(item),
       graftBridge.expression(weight), k, capacity).toAggregateExpression())
 
-  /** Mergeable theta/KMV distinct sketch of a column (BinaryType out) —
-    * the set algebra HLL lacks: sketches union AND intersect (see
-    * [[ThetaSketchAgg]]). Exact while a group's distinct count ≤ k.
-    */
-  def thetaSketch(item: Column, k: Int = 4096): Column =
-    graftBridge.column(ThetaSketchAgg(graftBridge.expression(item), k)
-      .toAggregateExpression())
-
-  /** Union of serialized theta sketches (the MV-rollup merge path). */
-  def thetaUnionAgg(sketch: Column, k: Int = 4096): Column =
-    graftBridge.column(ThetaUnionAgg(graftBridge.expression(sketch), k)
-      .toAggregateExpression())
-
-  /** Pairwise intersection of two serialized theta sketches. */
-  def thetaIntersect(a: Column, b: Column): Column =
-    graftBridge.column(ThetaIntersect(
-      graftBridge.expression(a), graftBridge.expression(b)))
-
-  /** Pairwise union of two serialized theta sketches. */
-  def thetaUnion(a: Column, b: Column): Column =
-    graftBridge.column(ThetaUnion(
-      graftBridge.expression(a), graftBridge.expression(b)))
-
-  /** Distinct-count estimate of a serialized theta sketch. */
-  def thetaEstimate(sketch: Column): Column =
-    graftBridge.column(ThetaEstimate(graftBridge.expression(sketch)))
-
   /** One-pass mergeable co-moment accumulator over a d-dim double-array
     * column: [n, Σx_i…, Σx_i·x_j (i≤j)…] — O(d²) state per group
     * regardless of row count (see [[CoMoment]]).

@@ -1707,43 +1707,31 @@ object EventOps {
             .as("days_intersect"))
     }),
 
-    // The SKETCH form of day-over-day overlap — mergeable theta/KMV
+    // The SKETCH form of day-over-day overlap — mergeable theta
     // sketches per day, intersected pairwise: the ClickHouse
     // `uniqTheta`/`groupBitmapAnd` analog and the 100-TB path where
     // `event_day_overlap`'s exact self-join re-scans raw events for every
     // audience question. Day sketches are O(k) bytes, persistable as an
     // MV, and answer ANY day/audience combination (union AND intersection
-    // — the algebra HLL lacks) from sketch bytes alone.
+    // — the algebra HLL lacks) from sketch bytes alone. The sketches are
+    // Spark's DataSketches built-ins (`theta_sketch_agg` at lgNomEntries
+    // 12, i.e. k = 4096, `theta_intersection`, `theta_union`,
+    // `theta_sketch_estimate`).
     // Oracle-pairable by contract: the sketch is EXACT while a day's
     // distinct count ≤ k (theta never trips), and test-data audiences
     // (≤ ~1.4k/day at sf0.1) sit far under k=4096, so the estimates
     // equal the exact counts; beyond k the key degrades to ±1/√k
-    // relative error (the approximate regime is pinned in
-    // ThetaSketchSpec, not here).
-    "agg_theta_intersect" -> ((s, dir) => {
-      import graft.functions.api.{thetaSketch, thetaIntersect, thetaUnion, thetaEstimate}
-      val sk = Tables.events(s, dir)
-        .select(col("user_id"), to_date(col("ts")).as("d"))
-        .groupBy("d").agg(thetaSketch(col("user_id"), 4096).as("sk"))
-      sk.as("s1").join(sk.as("s2"), date_add(col("s1.d"), 1) === col("s2.d"))
-        .select(col("s1.d").as("d"),
-          round(thetaEstimate(col("s1.sk"))).cast(LongType).as("est_day"),
-          round(thetaEstimate(col("s2.sk"))).cast(LongType).as("est_next"),
-          round(thetaEstimate(thetaIntersect(col("s1.sk"), col("s2.sk"))))
-            .cast(LongType).as("est_both"),
-          round(thetaEstimate(thetaUnion(col("s1.sk"), col("s2.sk"))))
-            .cast(LongType).as("est_either"))
-        .orderBy("d")
-    }),
+    // relative error (the approximate regime is Spark's QuickSelect
+    // sketch, pinned in ThetaSketchSpec against the built-ins, not here).
+    "agg_theta_intersect" -> ((s, dir) => thetaDayOverlap(Tables.events(s, dir))),
 
     // The EXACT-REGIME sweep twin of agg_theta_intersect (VERDICT r7 ask
     // #3): the original key's oracle is only valid while daily audiences
     // stay under the sketch's k=4096 — true at the sf0.01 driver gate,
     // false from sf10 up, so the family had no oracle-green row at sweep
-    // scales. This twin runs the UNCHANGED sketch pipeline (same
-    // thetaSketch → intersect/union → estimate plan — a regression
-    // anywhere in the sketch algebra still hash-fails) over a
-    // deterministically subsampled audience that stays under k BY
+    // scales. This twin runs the same sketch pipeline (`thetaDayOverlap`
+    // — a regression anywhere in the sketch algebra still hash-fails)
+    // over a deterministically subsampled audience that stays under k BY
     // CONSTRUCTION at any decade: users pass when splitHash(user_id, m)
     // == 0 with m the smallest power of two making distinct-users/m
     // ≤ 2000 — half the headroom to k. Both engines derive m from the
@@ -1755,24 +1743,11 @@ object EventOps {
     // dedup_embedding band-width discipline). The count(distinct) is one
     // bounded driver scalar, the documented collect() exception class.
     "agg_theta_intersect_capped" -> ((s, dir) => {
-      import graft.functions.api.{thetaSketch, thetaIntersect, thetaUnion, thetaEstimate}
       val ev = Tables.events(s, dir)
       val nu = ev.agg(countDistinct(col("user_id"))).head().getLong(0)
       val q = (nu + 1999L) / 2000L
       val m = if (q <= 1L) 1L else java.lang.Long.highestOneBit(q - 1L) << 1
-      val sk = ev
-        .filter(Tables.splitHash(col("user_id"), m) === 0L)
-        .select(col("user_id"), to_date(col("ts")).as("d"))
-        .groupBy("d").agg(thetaSketch(col("user_id"), 4096).as("sk"))
-      sk.as("s1").join(sk.as("s2"), date_add(col("s1.d"), 1) === col("s2.d"))
-        .select(col("s1.d").as("d"),
-          round(thetaEstimate(col("s1.sk"))).cast(LongType).as("est_day"),
-          round(thetaEstimate(col("s2.sk"))).cast(LongType).as("est_next"),
-          round(thetaEstimate(thetaIntersect(col("s1.sk"), col("s2.sk"))))
-            .cast(LongType).as("est_both"),
-          round(thetaEstimate(thetaUnion(col("s1.sk"), col("s2.sk"))))
-            .cast(LongType).as("est_either"))
-        .orderBy("d")
+      thetaDayOverlap(ev.filter(Tables.splitHash(col("user_id"), m) === 0L))
     }),
 
     // Anomaly surfacing — the observability query the reference's own
@@ -1797,6 +1772,26 @@ object EventOps {
             .as("z_score"))
         .orderBy("event_type", "day")
     }))
+
+  /** Day-over-day audience overlap from per-day theta sketches of
+    * `user_id` (see the `agg_theta_intersect` key comment): one row per
+    * day that has a next day, with the estimated audiences of both days,
+    * of their intersection and of their union.
+    */
+  private def thetaDayOverlap(ev: DataFrame): DataFrame = {
+    val sk = ev
+        .select(col("user_id"), to_date(col("ts")).as("d"))
+        .groupBy("d").agg(theta_sketch_agg(col("user_id"), 12).as("sk"))
+      sk.as("s1").join(sk.as("s2"), date_add(col("s1.d"), 1) === col("s2.d"))
+        .select(col("s1.d").as("d"),
+          theta_sketch_estimate(col("s1.sk")).as("est_day"),
+          theta_sketch_estimate(col("s2.sk")).as("est_next"),
+          theta_sketch_estimate(theta_intersection(col("s1.sk"), col("s2.sk")))
+            .as("est_both"),
+          theta_sketch_estimate(theta_union(col("s1.sk"), col("s2.sk")))
+            .as("est_either"))
+        .orderBy("d")
+  }
 
   /** PageRank over the repo-transition graph (see the `graph_pagerank` key
     * comment). With `redistributeDangling = true` the rank mass parked at
