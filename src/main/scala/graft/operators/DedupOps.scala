@@ -51,7 +51,7 @@ object DedupOps {
     * materialize-the-signatures step; here MEMORY_AND_DISK spills safely.
     */
   private def shingled(s: SparkSession, dir: String): DataFrame =
-    OpCache.cached(dir + "#shingled",
+    OpCache.cached(dir,
       Tables.documents(s, dir).select(col("doc_id"), shingles(col("text")).as("sh")))
 
   /** Exact-Jaccard (>= 0.8) duplicate pairs (a_id < b_id), candidates from
@@ -72,14 +72,14 @@ object DedupOps {
   private def exactJaccardPairs(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val sh = shingled(s, dir)
-    OpCache.cached(dir + "#jac_pairs", {
+    OpCache.cached(dir, {
       val posts = sh.select(col("doc_id"), size(col("sh")).as("n"),
         explode(col("sh")).as("g"))
       val dfreq = posts.groupBy("g").agg(count(lit(1)).as("dfc"))
       val w = Window.partitionBy("doc_id").orderBy("dfc", "g")
       // persisted: both self-join sides reference it; unpersisted, the
       // dfreq join + window would run once per side
-      val prefixPosts = OpCache.cached(dir + "#jac_prefix",
+      val prefixPosts = OpCache.cached(dir,
         posts.join(dfreq, Seq("g"))
           .withColumn("rk", row_number().over(w))
           .filter(col("rk") <= col("n") - ceil(col("n") * 0.8) + 1)
@@ -189,17 +189,17 @@ object DedupOps {
     * a tight loop with map-side partial aggregation, vs 64 independent
     * min(hash) columns at 64× the hash work), 16 bands × 4 rows hashed to a
     * band key, band-bucket equi-join proposes candidates, true shingle
-    * Jaccard ≥ 0.7 confirms. `bandCacheKey` persists the band table — the
-    * self-join below would otherwise run the signature aggregation once per
-    * side. Shared by dedup_minhash (probabilistic, rows-only) and
-    * dedup_minhash_planted (the deterministic exact-duplicate contract,
-    * oracle-paired).
+    * Jaccard ≥ 0.7 confirms. The band table is persisted (OpCache, over
+    * `dir`'s data) — the self-join below would otherwise run the signature
+    * aggregation once per side. Shared by dedup_minhash (probabilistic,
+    * rows-only) and dedup_minhash_planted (the deterministic
+    * exact-duplicate contract, oracle-paired).
     */
-  private def minHashPairs(sh: DataFrame, bandCacheKey: String): DataFrame = {
+  private def minHashPairs(dir: String, sh: DataFrame): DataFrame = {
     val posts = sh.select(col("doc_id"), explode(col("sh")).as("g"))
     val sig = posts.groupBy("doc_id")
       .agg(graft.functions.api.minHashSig(col("g")).as("sig"))
-    val bands = OpCache.cached(bandCacheKey, sig.select(col("doc_id"),
+    val bands = OpCache.cached(dir, sig.select(col("doc_id"),
         posexplode(array((0 until 16).map(b => xxhash64(
           element_at(col("sig"), b * 4 + 1), element_at(col("sig"), b * 4 + 2),
           element_at(col("sig"), b * 4 + 3), element_at(col("sig"), b * 4 + 4))): _*)))
@@ -370,13 +370,13 @@ object DedupOps {
         .withColumn("is_new", Tables.splitHash(col("doc_id"), 100L) >= 90)
       val idx = sh.filter(!col("is_new"))
       val inc = sh.filter(col("is_new"))
-      val idxPosts = OpCache.cached(dir + "#inc_index",
+      val idxPosts = OpCache.cached(dir,
         idx.select(col("doc_id").as("i_id"), size(col("sh")).as("i_n"),
           explode(col("sh")).as("g")))
       // Index-side gram document frequency — at scale this table is part of
       // the materialized index the ingest job already maintains (one row per
       // distinct gram, ≪ postings).
-      val idxDf = OpCache.cached(dir + "#inc_index_df",
+      val idxDf = OpCache.cached(dir,
         idxPosts.groupBy("g").agg(count(lit(1)).as("dfc")))
       val incPosts = inc.select(col("doc_id").as("d_id"),
         size(col("sh")).as("d_n"), explode(col("sh")).as("g"))
@@ -429,8 +429,7 @@ object DedupOps {
       // session construction (GraftSession.tuning — 512 B fixed sketch
       // buffers make the 128-group default absurdly conservative); set there,
       // not here, so builders never mutate shared session state.
-      retain(Tables.documents(s, dir),
-        minHashPairs(shingled(s, dir), dir + "#mh_bands"))),
+      retain(Tables.documents(s, dir), minHashPairs(dir, shingled(s, dir)))),
 
     // The SQL-expressible slice of the MinHash contract (VERDICT r5 ask
     // #7): LSH recall on NEAR-dups is probabilistic (hence dedup_minhash
@@ -456,9 +455,9 @@ object DedupOps {
         .withColumn("doc_id", col("doc_id") + lit(plantBase))
       val corpus = d.select("doc_id", "text")
         .unionByName(planted.select("doc_id", "text"))
-      val sh = OpCache.cached(dir + "#mh_planted_sh",
+      val sh = OpCache.cached(dir,
         corpus.select(col("doc_id"), shingles(col("text")).as("sh")))
-      val dropped = minHashPairs(sh, dir + "#mh_planted_bands")
+      val dropped = minHashPairs(dir, sh)
         .select(col("b_id").as("planted_id")).distinct()
         .withColumn("hit", lit(true))
       planted.select(col("doc_id").as("planted_id"))
@@ -484,7 +483,7 @@ object DedupOps {
         .withColumn("doc_id", col("doc_id") + lit(plantBase))
       val corpus = d.select("doc_id", "text")
         .unionByName(planted.select("doc_id", "text"))
-      val sim = OpCache.cached(dir + "#sh_planted_sig",
+      val sim = OpCache.cached(dir,
         corpus.select(col("doc_id"),
           graft.functions.api.simHash64(col("text")).as("sig")))
       // same corpus-adaptive candidate chain as dedup_simhash (r9): an
@@ -511,7 +510,7 @@ object DedupOps {
     // grows with n (the r8 VERDICT's quadratic-in-n ceiling, retired).
     "dedup_simhash" -> ((s, dir) => {
       val d = Tables.documents(s, dir)
-      val sim = OpCache.cached(dir + "#sh_sig",
+      val sim = OpCache.cached(dir,
         d.select(col("doc_id"), graft.functions.api.simHash64(col("text")).as("sig")))
       retain(d, simhashNearDupPairs(sim))
     }),
@@ -578,7 +577,7 @@ object DedupOps {
     // traversals), cached BEFORE the posexplode so Generate never
     // recomputes it per output row.
     "dedup_embedding" -> ((s, dir) => {
-      val e = OpCache.cached(dir + "#emb_v",
+      val e = OpCache.cached(dir,
         Tables.embeddings(s, dir)
           .select(col("vec_id"),
             transform(col("embedding"), x => x.cast(DoubleType)).as("v")))
@@ -602,7 +601,7 @@ object DedupOps {
       val bits = math.min(graft.functions.SrpBandKeys.MaxBits,
         math.max(graft.functions.SrpBandKeys.Bits,
           64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, n - 1)) + 4))
-      val sigs = OpCache.cached(dir + "#emb_bands",
+      val sigs = OpCache.cached(dir,
         e.select(col("vec_id"),
           graft.functions.api.srpBandKeys(col("v"),
             graft.functions.SrpBandKeys.Bands, bits).as("bk")))
@@ -641,7 +640,7 @@ object DedupOps {
     // map-side into a cluster × dim table (broadcast back); pairing is an
     // equality self-join on the cluster id; nothing all-pairs ever runs.
     "dedup_semantic" -> ((s, dir) => {
-      val e = OpCache.cached(dir + "#semdedup_v",
+      val e = OpCache.cached(dir,
         Tables.embeddings(s, dir)
           .select(col("vec_id"), col("label"),
             transform(col("embedding"), x => x.cast(DoubleType)).as("v")))
@@ -656,7 +655,7 @@ object DedupOps {
       val n = e.count()
       val bits = math.min(12, math.max(6,
         (64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, n - 1))) - 7))
-      val cl = OpCache.cached(dir + "#semdedup_cl",
+      val cl = OpCache.cached(dir,
         e.withColumn("cluster",
           (1 to bits).map(i => when(element_at(col("v"), i) >= 0,
             lit(1L << (bits - i))).otherwise(lit(0L))).reduce(_ + _)))
@@ -672,7 +671,7 @@ object DedupOps {
         .groupBy("cluster")
         .agg(transform(array_sort(collect_list(struct(col("i"), col("ce")))),
           p => p.getField("ce")).as("cv"))
-      val sc = OpCache.cached(dir + "#semdedup_scored",
+      val sc = OpCache.cached(dir,
         cl.join(broadcast(cent), Seq("cluster"))
           .withColumn("cent_sim",
             round(graft.functions.api.cosineSim(col("v"), col("cv")), 6))

@@ -733,20 +733,11 @@ object EventOps {
       // scanned ONCE and every downstream pass rolls up sketch rows (at
       // scale the partials are the materialized MV the day's ingest job
       // already wrote; PlanSpec pins the single-scan shape).
-      val partials = OpCache.cached(dir + "#hll_day_partials",
-        Tables.events(s, dir)
-          .groupBy(to_date(col("ts")).as("day"))
-          .agg(hll_sketch_agg(col("user_id")).as("sketch")))
-      val dau = partials.select(col("day"),
-        hll_sketch_estimate(col("sketch")).as("dau_approx"))
-      def trailing(w: Int, name: String) = partials
-        .select(col("sketch"),
-          explode(sequence(col("day"), date_add(col("day"), w - 1))).as("day"))
-        .groupBy("day")
-        .agg(hll_sketch_estimate(hll_union_agg(col("sketch"))).as(name))
-      dau
-        .join(trailing(7, "wau7_approx"), "day")
-        .join(trailing(28, "mau28_approx"), "day")
+      val partials = hllDayPartials(s, dir)
+      partials.select(col("day"),
+          hll_sketch_estimate(col("sketch")).as("dau_approx"))
+        .join(hllTrailing(partials, 7, "wau7_approx"), "day")
+        .join(hllTrailing(partials, 28, "mau28_approx"), "day")
         .orderBy("day")
     }),
 
@@ -768,20 +759,12 @@ object EventOps {
             .as("day"))
         .groupBy("day")
         .agg(countDistinct("user_id").as(name))
-      val partials = OpCache.cached(dir + "#hll_day_partials",
-        Tables.events(s, dir)
-          .groupBy(to_date(col("ts")).as("day"))
-          .agg(hll_sketch_agg(col("user_id")).as("sketch")))
-      def approxT(w: Int, name: String) = partials
-        .select(col("sketch"),
-          explode(sequence(col("day"), date_add(col("day"), w - 1))).as("day"))
-        .groupBy("day")
-        .agg(hll_sketch_estimate(hll_union_agg(col("sketch"))).as(name))
+      val partials = hllDayPartials(s, dir)
       dau
         .join(exactT(7, "wau7"), "day")
         .join(exactT(28, "mau28"), "day")
-        .join(approxT(7, "wau7_est"), "day")
-        .join(approxT(28, "mau28_est"), "day")
+        .join(hllTrailing(partials, 7, "wau7_est"), "day")
+        .join(hllTrailing(partials, 28, "mau28_est"), "day")
         .select(col("day"), col("dau"), col("wau7"), col("mau28"),
           (abs(col("wau7_est").cast(DoubleType) / col("wau7") - 1.0)
             <= 0.05).as("wau7_within"),
@@ -1772,6 +1755,24 @@ object EventOps {
             .as("z_score"))
         .orderBy("event_type", "day")
     }))
+
+  /** (day, sketch): one HLL sketch of `user_id` per event day, persisted
+    * (OpCache); the one builder of both rolling-uniques keys' partials.
+    */
+  private def hllDayPartials(s: SparkSession, dir: String): DataFrame =
+    OpCache.cached(dir, Tables.events(s, dir)
+      .groupBy(to_date(col("ts")).as("day"))
+      .agg(hll_sketch_agg(col("user_id")).as("sketch")))
+
+  /** (day, `name`): the estimated distinct users of the `w` days ending on
+    * each day, one sketch union per window-end day over `hllDayPartials`.
+    */
+  private def hllTrailing(partials: DataFrame, w: Int, name: String): DataFrame =
+    partials
+      .select(col("sketch"),
+        explode(sequence(col("day"), date_add(col("day"), w - 1))).as("day"))
+      .groupBy("day")
+      .agg(hll_sketch_estimate(hll_union_agg(col("sketch"))).as(name))
 
   /** Day-over-day audience overlap from per-day theta sketches of
     * `user_id` (see the `agg_theta_intersect` key comment): one row per

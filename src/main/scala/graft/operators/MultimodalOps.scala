@@ -273,6 +273,24 @@ object MultimodalOps {
     s.read.parquet(path).as[MediaRecord]
   }
 
+  /** (img_id, ahash) of every PNG payload and of its one-pixel-edited
+    * re-encode, persisted: the band self-join references the hash table on
+    * BOTH sides — unpersisted, Spark would run the decode+hash map twice.
+    * img_id = doc_id·2 (+1 for the variant): collision-free for ANY doc_id
+    * (an additive offset would alias once ids reach it).
+    */
+  private def aHashes(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    OpCache.cached(dir,
+      mediaRecords(s, dir)
+        .filter(col("doc_id") % 2 === 0) // PNG rows; pushes to the lake scan
+        .mapPartitions(_.flatMap { r =>
+          Seq(r.doc_id * 2 -> aHash(r.payload),
+            (r.doc_id * 2 + 1) -> aHash(perturb(r.payload)))
+        })
+        .toDF("img_id", "ahash"))
+  }
+
   /** 4×16-bit band equi-join + popcount verify over 64-bit aHashes — the
     * image twin of dedup_simhash's banded candidate generation (pigeonhole:
     * hamming ≤ 3 guarantees a shared band). Shared by multimodal_near_dup
@@ -341,22 +359,8 @@ object MultimodalOps {
     // key. Deterministic but JVM-codec-derived -> rows-only check; the
     // original↔variant pairing is pinned exactly in NorthStarSpec, and
     // multimodal_near_dup_planted below is the oracle-paired contract twin.
-    "multimodal_near_dup" -> ((s, dir) => {
-      import s.implicits._
-      // persisted: the band self-join references the hash table on BOTH
-      // sides — unpersisted, Spark would run the decode+hash map twice.
-      // img_id = doc_id·2 (+1 for the variant): collision-free for ANY
-      // doc_id (an additive offset would alias once ids reach it)
-      val hashes = OpCache.cached(dir + "#ahash",
-        mediaRecords(s, dir)
-          .filter(col("doc_id") % 2 === 0) // PNG rows; pushes to the lake scan
-          .mapPartitions(_.flatMap { r =>
-            Seq(r.doc_id * 2 -> aHash(r.payload),
-              (r.doc_id * 2 + 1) -> aHash(perturb(r.payload)))
-          })
-          .toDF("img_id", "ahash"))
-      aHashPairs(hashes).orderBy("left_id", "right_id")
-    }),
+    "multimodal_near_dup" -> ((s, dir) =>
+      aHashPairs(aHashes(s, dir)).orderBy("left_id", "right_id")),
 
     // PLANTED CONTRACT for the image near-dup family (the dedup_minhash_
     // planted discipline applied to pixels): byte-identical copies of every
@@ -376,14 +380,7 @@ object MultimodalOps {
       import s.implicits._
       val plantBase = Tables.documents(s, dir)
         .agg(max(col("doc_id"))).head.getLong(0) * 2L + 2L
-      val natural = OpCache.cached(dir + "#ahash",
-        mediaRecords(s, dir)
-          .filter(col("doc_id") % 2 === 0)
-          .mapPartitions(_.flatMap { r =>
-            Seq(r.doc_id * 2 -> aHash(r.payload),
-              (r.doc_id * 2 + 1) -> aHash(perturb(r.payload)))
-          })
-          .toDF("img_id", "ahash"))
+      val natural = aHashes(s, dir)
       val planted = mediaRecords(s, dir)
         .filter(col("doc_id") % 10 === 0)
         .mapPartitions(_.map(r => (r.doc_id * 2 + plantBase) -> aHash(r.payload)))

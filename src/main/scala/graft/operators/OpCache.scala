@@ -3,15 +3,15 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
-/** Per-process memo for expensive shared intermediates (signature tables,
-  * prefix indexes, the partitioned sink): operators that feed both sides of
-  * a self-join persist the subtree once per scale dir instead of letting
-  * the physical plan duplicate it, and sinks shared by several query keys
-  * are written once. Keys embed the sfDir so scales never collide.
+/** Shared intermediates and once-only builds. `cached` persists a subtree
+  * (signature tables, prefix indexes) in Spark's own cache, keyed on its
+  * plan, so operators that feed both sides of a self-join, or several query
+  * keys, build it once; `once` runs a build (a sink write, an index) once
+  * per key. Both follow in-place rewrites of the data dir through its
+  * content fingerprint.
   */
 object OpCache {
-  private val frames = scala.collection.mutable.Map.empty[String, DataFrame]
-  private val actions = scala.collection.mutable.Map.empty[String, String]
+  private val actions = scala.collection.mutable.Map.empty[String, Any]
 
   /** Collision-free filesystem key for a data dir: the readable sanitized
     * form alone is lossy (all non-alphanumerics collapse to '_', so
@@ -26,12 +26,12 @@ object OpCache {
 
   /** Content fingerprint of the data dir a memo key points at (file count,
     * max mtime, total bytes — a local listing, no data read). Folded into
-    * every effective cache key so an IN-PLACE rewrite of the dir serves
-    * fresh artifacts instead of stale memos (VERDICT r8 watch item #2: the
-    * dir+tag key was correct only under a fresh-dir-per-scale protocol;
-    * this removes the protocol assumption). Keys carry the dir before the
-    * first '#'; non-dir keys (already content-addressed, e.g. SimOps'
-    * hashed cache names) fingerprint as "nofs" — unchanged behavior.
+    * every `once` key, and compared by `cached`, so an IN-PLACE rewrite of
+    * the dir serves fresh artifacts instead of stale memos (VERDICT r8
+    * watch item #2: the dir+tag key was correct only under a
+    * fresh-dir-per-scale protocol; this removes the protocol assumption). `once` keys carry the dir
+    * before the first '#'; a path that is not a directory fingerprints as
+    * "nofs", so it never moves.
     *
     * The RECURSIVE walk is memoized behind a one-level probe (VERDICT r9
     * ask #7: a per-call deep listing is wrong-shaped on an object store,
@@ -43,7 +43,7 @@ object OpCache {
     * probe cannot see — an mtime-only touch of a file nested two or more
     * levels down with no parent-entry churn — is not a write any engine
     * performs (Spark/DuckDB/Hadoop committers always create or delete
-    * entries). `clear()` drops the memo with everything else.
+    * entries).
     */
   private val fpMemo =
     scala.collection.mutable.Map.empty[String, (String, String)]
@@ -82,43 +82,31 @@ object OpCache {
   private def contentKey(key: String): String =
     key + "@" + fingerprint(key.takeWhile(_ != '#'))
 
-  /** Persist `df` (memory+disk, spillable) the first time `key` is seen.
-    * Synchronized, not a lock-free map: `getOrElseUpdate` on a concurrent
-    * map may evaluate the thunk twice under a first-access race, which here
-    * would double-persist (an unreachable cache entry `clear()` could never
-    * unpersist). A hit bound to a stopped SparkSession is evicted and
-    * recomputed, so a session restart in the same JVM never serves plans of
-    * a dead context.
+  /** The fingerprint each data dir had at its last `cached` call. */
+  private val seen = scala.collection.mutable.Map.empty[String, String]
+
+  /** Persist `df` (memory+disk, spillable) in Spark's own cache, which
+    * serves any later plan that `sameResult`s it: the plan is the key, so
+    * two separately built equal plans share one entry. If `dir`'s content
+    * fingerprint moved since the last call for `dir`, every cached plan
+    * reading under it is refreshed first: an outside in-place rewrite is
+    * invisible to Spark's cache (its own writers refresh it themselves).
+    * A plan already cached is returned as is, never persisted twice.
     */
-  def cached(key: String, df: => DataFrame): DataFrame = synchronized {
-    val ck = contentKey(key)
-    frames.get(ck).filter(!_.sparkSession.sparkContext.isStopped)
-      .getOrElse {
-        // A miss under a NEW fingerprint supersedes any entry of the same
-        // logical key (ADVICE r9 #2: repeated in-place rewrites within one
-        // JVM would otherwise accumulate pinned MEMORY_AND_DISK storage
-        // for data that no longer exists) — evict and unpersist it first.
-        frames.keys.filter(k => k != ck && k.startsWith(key + "@")).toList
-          .foreach { stale =>
-            frames.remove(stale).foreach { old =>
-              if (!old.sparkSession.sparkContext.isStopped)
-                old.unpersist(blocking = false)
-            }
-          }
-        val fresh = df.persist(StorageLevel.MEMORY_AND_DISK)
-        frames.put(ck, fresh)
-        fresh
-      }
+  def cached(dir: String, df: DataFrame): DataFrame = synchronized {
+    val fp = fingerprint(dir)
+    if (seen.put(dir, fp).exists(_ != fp)) df.sparkSession.catalog.refreshByPath(dir)
+    if (df.storageLevel == StorageLevel.NONE) df.persist(StorageLevel.MEMORY_AND_DISK)
+    else df
   }
 
   /** Run `make` (e.g. a sink write returning its path) exactly once per
-    * `key` — synchronized for the same reason: two first-access threads
-    * racing the same sink write would commit into one directory. Stale
-    * fingerprints of the same key are dropped on supersession (they hold
-    * only the returned string, but an unbounded map is still a leak).
+    * `key` — synchronized: two first-access threads racing the same sink
+    * write would commit into one directory. Stale fingerprints of the same
+    * key are dropped on supersession (they hold only the returned value,
+    * but an unbounded map is still a leak).
     */
-
-  def once(key: String)(make: => String): String = synchronized {
+  def once[T](key: String)(make: => T): T = synchronized {
     val ck = contentKey(key)
     actions.get(ck).getOrElse {
       actions.keys.filter(k => k != ck && k.startsWith(key + "@")).toList
@@ -126,18 +114,6 @@ object OpCache {
       val made = make
       actions.put(ck, made)
       made
-    }
-  }
-
-  /** Drop every memo and unpersist the cached frames (library hygiene for
-    * long-lived sessions; the driver's mains exit per run).
-    */
-  def clear(): Unit = synchronized {
-    frames.values.foreach { df =>
-      if (!df.sparkSession.sparkContext.isStopped) df.unpersist(blocking = false)
-    }
-    frames.clear()
-    actions.clear()
-    fpMemo.clear()
+    }.asInstanceOf[T]
   }
 }

@@ -653,7 +653,7 @@ object RelationalOps {
     // not the corpus. Decimal partials make the merge order-independent,
     // so merged == direct, which is exactly what the oracle states.
     "agg_incremental_merge" -> ((s, dir) => {
-      val partials = OpCache.cached(dir + "#daily_partials",
+      val partials = OpCache.cached(dir,
         Tables.events(s, dir)
           .groupBy(to_date(col("ts")).as("day"), col("event_type"))
           .agg(count(lit(1)).as("pn"), sum(dec(col("value"))).as("pv")))

@@ -75,7 +75,10 @@ object SimOps {
         struct(api.sqDist(v, c).as("d"), (i + 1).cast(IntegerType).as("cell")))),
       p => p("cell")), 1, nprobe)
 
-  /** Per-(JVM, scale dir) IVF index build: K seed centroids sampled by
+  /** IVF index build over `corpus`, run once per `key` (`OpCache.once`, so
+    * an in-place rewrite of the scale dir rebuilds it): `sim_topk_ivf`
+    * indexes the scale dir's embeddings, `sim_ivf_planted` runs the
+    * UNCHANGED build over corpus + planted copies. K seed centroids sampled by
     * xxhash64(vec_id) order, Lloyd trained to a fixed 5 iterations on a
     * BOUNDED deterministic sample (hash-ordered 4096 vectors — training
     * cost tracks the sample, not the corpus, which is what keeps the
@@ -88,58 +91,46 @@ object SimOps {
     * sqrt(N) rows, dimension-table sized), which is what makes assignment
     * and probe shuffle-free.
     */
-  private val ivfIndexes =
-    scala.collection.mutable.Map.empty[String, (String, Seq[Seq[Double]])]
-
-  private def ivfIndex(s: SparkSession, dir: String): (String, Seq[Seq[Double]]) =
-    ivfIndexOf(dir, vecs(s, dir))
-
-  /** Index builder over an arbitrary corpus frame (memo key `key`):
-    * `sim_topk_ivf` indexes the scale dir's embeddings; `sim_ivf_planted`
-    * runs the UNCHANGED build over corpus + planted copies.
-    */
-  private def ivfIndexOf(key: String, corpus: DataFrame): (String, Seq[Seq[Double]]) =
-    synchronized {
-      ivfIndexes.getOrElseUpdate(key, {
-        val k = 16
-        val lloydIters = 5
-        val e = corpus.select("vec_id", "v")
-        val seeds: Seq[Seq[Double]] = e.orderBy(xxhash64(col("vec_id"))).limit(k)
-          .select("v").collect().map(_.getSeq[Double](0)).toSeq
-        // training sample: deterministic hash-ordered draw, persisted once
-        // and rescanned per iteration
-        val sample = e.orderBy(xxhash64(col("vec_id"))).limit(4096).select("v")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        var cents: Seq[Seq[Double]] = seeds
-        try {
-          for (_ <- 1 to lloydIters) {
-            // persist barrier: Generate (posexplode) re-evaluates its child
-            // projection per OUTPUT row, which would charge the 16-centroid
-            // argmin 64x per vector (measured 13x slower) — materialize the
-            // assignment first, explode from the cache
-            val assign = sample
-              .select(nearestCell(col("v"), cents).as("cell"), col("v"))
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            val centroidRows =
-              try {
-                assign
-                  .select(col("cell"), posexplode(col("v")).as(Seq("dim", "x")))
-                  .groupBy("cell", "dim").agg(avg(col("x")).as("m"))
-                  .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
-              } finally { assign.unpersist(); () }
-            // cells that captured no vectors this round keep their centroid
-            val refined = centroidRows.groupBy(_._1).map { case (cell, rs) =>
-              cell -> rs.sortBy(_._2).map(_._3).toSeq
-            }
-            cents = cents.indices.map(i => refined.getOrElse(i + 1, cents(i)))
+  private def ivfIndex(key: String, corpus: => DataFrame): (String, Seq[Seq[Double]]) =
+    OpCache.once(key) {
+      val k = 16
+      val lloydIters = 5
+      val e = corpus.select("vec_id", "v")
+      val seeds: Seq[Seq[Double]] = e.orderBy(xxhash64(col("vec_id"))).limit(k)
+        .select("v").collect().map(_.getSeq[Double](0)).toSeq
+      // training sample: deterministic hash-ordered draw, persisted once
+      // and rescanned per iteration
+      val sample = e.orderBy(xxhash64(col("vec_id"))).limit(4096).select("v")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      var cents: Seq[Seq[Double]] = seeds
+      try {
+        for (_ <- 1 to lloydIters) {
+          // persist barrier: Generate (posexplode) re-evaluates its child
+          // projection per OUTPUT row, which would charge the 16-centroid
+          // argmin 64x per vector (measured 13x slower) — materialize the
+          // assignment first, explode from the cache
+          val assign = sample
+            .select(nearestCell(col("v"), cents).as("cell"), col("v"))
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          val centroidRows =
+            try {
+              assign
+                .select(col("cell"), posexplode(col("v")).as(Seq("dim", "x")))
+                .groupBy("cell", "dim").agg(avg(col("x")).as("m"))
+                .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
+            } finally { assign.unpersist(); () }
+          // cells that captured no vectors this round keep their centroid
+          val refined = centroidRows.groupBy(_._1).map { case (cell, rs) =>
+            cell -> rs.sortBy(_._2).map(_._3).toSeq
           }
-        } finally { sample.unpersist(); () }
-        val path = s"${System.getProperty("java.io.tmpdir")}/graft-ivf/" +
-          OpCache.pathKey(key)
-        e.withColumn("cell", nearestCell(col("v"), cents))
-          .write.mode("overwrite").partitionBy("cell").parquet(path)
-        (path, cents)
-      })
+          cents = cents.indices.map(i => refined.getOrElse(i + 1, cents(i)))
+        }
+      } finally { sample.unpersist(); () }
+      val path = s"${System.getProperty("java.io.tmpdir")}/graft-ivf/" +
+        OpCache.pathKey(key)
+      e.withColumn("cell", nearestCell(col("v"), cents))
+        .write.mode("overwrite").partitionBy("cell").parquet(path)
+      (path, cents)
     }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -371,7 +362,7 @@ object SimOps {
     // Approximate by construction -> no SQL oracle (rows-only); recall
     // >= 0.9 vs brute force is asserted in NorthStarSpec.
     "sim_topk_ivf" -> ((s, dir) => {
-      val (path, cents) = ivfIndex(s, dir)
+      val (path, cents) = ivfIndex(dir + "#ivf", vecs(s, dir))
       val idx = s.read.parquet(path)
       // queries probe their nprobe=2 nearest cells; candidates are the
       // union of those cells only
@@ -410,8 +401,7 @@ object SimOps {
       val plantBase = base.agg(max(col("vec_id"))).head.getLong(0) + 1L
       val planted = base.filter(col("vec_id") < 50)
         .select((col("vec_id") + plantBase).as("vec_id"), col("v"))
-      val (path, cents) = ivfIndexOf(dir + "#ivf_planted",
-        base.unionByName(planted))
+      val (path, cents) = ivfIndex(dir + "#ivf_planted", base.unionByName(planted))
       val idx = s.read.parquet(path)
       // probe EXACTLY the minted id range, not an open >= bound
       val probes = idx.filter(col("vec_id").between(plantBase, plantBase + 49L))
@@ -565,7 +555,7 @@ object SimOps {
       // persisted: each Lloyd round is a collect ACTION, so an unpersisted
       // base re-scans the parquet + recasts per round (+ once more for the
       // final assignment) — 5 scans for 3 rounds
-      val e = OpCache.cached(dir + "#kmeans_v", vecs(s, dir))
+      val e = OpCache.cached(dir, vecs(s, dir))
       var cents: Seq[Seq[Double]] = e.orderBy("vec_id").limit(k)
         .select("v").collect().map(_.getSeq[Double](0)).toSeq
       for (_ <- 1 to iters) {

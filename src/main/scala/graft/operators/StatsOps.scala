@@ -987,7 +987,7 @@ object StatsOps {
       // grid — derives from it (integer sums, so p_type is bit-identical
       // to a direct corpus count). Persisted because three readouts
       // reference it.
-      val daily = OpCache.cached(dir + "#chi2_daily",
+      val daily = OpCache.cached(dir,
         Tables.events(s, dir)
           .groupBy(to_date(col("ts")).as("day"), col("event_type"))
           .agg(count(lit(1)).as("o")))
@@ -1327,7 +1327,7 @@ object StatsOps {
       val (muQ, sdQ) = muSd(m.getLong(1), m.getLong(2))
       val (muD, sdD) = muSd(m.getLong(3), m.getLong(4))
       val (muT, sdT) = muSd(m.getLong(5), m.getLong(6))
-      val z = OpCache.cached(dir + "#logreg_z",
+      val z = OpCache.cached(dir,
         raw.select(col("y"),
           ((col("q") - lit(muQ)) / lit(sdQ)).as("z1"),
           ((col("dd") - lit(muD)) / lit(sdD)).as("z2"),

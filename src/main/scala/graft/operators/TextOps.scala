@@ -34,15 +34,13 @@ object TextOps {
       .cast(DoubleType) / size(toks).cast(DoubleType)
 
   /** Positional token postings (doc_id, pos, tok) — the inverted-index
-    * core shared by phrase search and the bigram LM, built once per
-    * (JVM, scale dir). posexplode is 0-based; only position DELTAS cross
+    * core shared by phrase search and the bigram LM, persisted once
+    * (OpCache). posexplode is 0-based; only position DELTAS cross
     * the oracle boundary, so the base never matters.
     */
   private def posPostings(s: SparkSession, dir: String): DataFrame =
-    OpCache.cached(dir + "#tok_pos", {
-      Tables.documents(s, dir)
-        .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("pos", "tok")))
-    })
+    OpCache.cached(dir, Tables.documents(s, dir)
+      .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("pos", "tok"))))
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Reproducible train/holdout split — the training-pipeline primitive a
@@ -68,9 +66,9 @@ object TextOps {
     // round(6) absorbs libm ln() last-ulp differences across engines.
     "text_unigram_logprob" -> ((s, dir) => {
       val d = Tables.documents(s, dir)
-      val tokens = OpCache.cached(dir + "#tok_posts",
+      val tokens = OpCache.cached(dir,
         d.select(col("doc_id"), explode(split(col("text"), " ")).as("tok")))
-      val vocab = OpCache.cached(dir + "#unigram_lm",
+      val vocab = OpCache.cached(dir,
         tokens.groupBy("tok").agg(count(lit(1)).as("tf"))
           .crossJoin(broadcast(tokens.agg(count(lit(1)).as("total"))))
           .select(col("tok"),
@@ -101,7 +99,7 @@ object TextOps {
       val docs = Tables.documents(s, dir)
         .withColumn("is_test",
           Tables.splitHash(col("doc_id"), 100L) >= 90)
-      val grams = OpCache.cached(dir + "#decontam_grams",
+      val grams = OpCache.cached(dir,
         docs.select(col("doc_id"), col("is_test"),
           explode(when(size(toks) >= n,
             transform(sequence(lit(0), size(toks) - n),
@@ -165,7 +163,7 @@ object TextOps {
     "pipeline_chunk_documents" -> ((s, dir) => {
       val win = 64L
       val stride = 48L
-      val tk = OpCache.cached(dir + "#chunk_toks",
+      val tk = OpCache.cached(dir,
         Tables.documents(s, dir)
           .select(col("doc_id"), toks.as("tk"))
           .withColumn("n", size(col("tk")).cast(LongType)))
@@ -382,7 +380,7 @@ object TextOps {
       // the final anti-join) — unpersisted, the whole dedup + line-window +
       // quality subtree re-executes per reference (the minhash/IVF OpCache
       // discipline; measured 3.0 s → 0.5 s steady-state at sf0.1)
-      val d3 = OpCache.cached(dir + "#e2e_d3",
+      val d3 = OpCache.cached(dir,
         d1.join(keptFrac, Seq("doc_id"))
           .filter(col("klt") * 2 >= col("nlt"))
           .withColumn("quality", quality)
@@ -401,7 +399,7 @@ object TextOps {
       // emitted gram — the exact O(tokens²) pathology the TopNgram /
       // ShingleHashes expressions exist to avoid; binding the array first
       // makes the lambda a per-gram slice of an already-built array.
-      val grams = OpCache.cached(dir + "#e2e_grams",
+      val grams = OpCache.cached(dir,
         d3.withColumn("tk", split(col("text"), " "))
           .select(col("doc_id"), col("split"),
             explode(when(size(col("tk")) >= gramN,
@@ -539,7 +537,7 @@ object TextOps {
     // unigram twin).
     "text_bigram_logprob" -> ((s, dir) => {
       val w = Window.partitionBy("doc_id").orderBy("pos")
-      val bigrams = OpCache.cached(dir + "#bigrams",
+      val bigrams = OpCache.cached(dir,
         posPostings(s, dir)
           .select(col("doc_id"), col("tok").as("w1"),
             lead(col("tok"), 1).over(w).as("w2"))

@@ -23,9 +23,8 @@ import java.time.format.{DateTimeFormatter, ResolverStyle}
   *  - gzip + NDJSON line scan (ref: main.go:80-99) are native to the JSON
   *    datasource, one Spark task per (file-split) — the `-jobs` worker pool
   *    (ref: main.go:239-269) is Spark task parallelism;
-  *  - the 100 MB line cap / abort-on-parse-error policy (ref: main.go:97-99,
-  *    131-134) maps to reader modes: FAILFAST (the reference's behavior) or
-  *    PERMISSIVE with a corrupt-record column (B3);
+  *  - the abort-on-parse-error policy (ref: main.go:131-134) is the
+  *    reader's FAILFAST mode (B3);
   *  - the hour key itself is surfaced as an `hour` timestamp column derived
   *    from `_metadata.file_path`, so downstream windows/joins can group by
   *    archive hour without re-parsing event time.
@@ -88,24 +87,15 @@ object GhArchiveSource {
   /** Batch read of an hour range as (id, created_at ts, hour). The paths
     * come from `listHours`, the one listing of the range; Spark looks each
     * path up on the driver and runs no listing job (see GraftSession).
-    * `failFast = true` reproduces the reference's abort-on-parse-error
-    * (ref: cmd/gh-load/main.go:131-134); false keeps malformed rows with
-    * null fields (PERMISSIVE).
+    * A malformed record aborts the read (FAILFAST), as the reference does
+    * (ref: cmd/gh-load/main.go:131-134).
     */
   def read(spark: SparkSession, dir: String,
-           from: Option[LocalDateTime] = None, to: Option[LocalDateTime] = None,
-           failFast: Boolean = true): DataFrame = {
+           from: Option[LocalDateTime] = None, to: Option[LocalDateTime] = None): DataFrame = {
     val paths = listHours(dir, from, to).map(_._1)
     require(paths.nonEmpty, s"no hour files in range under $dir")
-    decode(spark.read.schema(readSchema).options(readOptions(failFast))
-      .json(paths: _*))
+    decode(spark.read.schema(schema).option("mode", "FAILFAST").json(paths: _*))
   }
-
-  /** Reader schema and mode options shared by `read` and `readStream`. */
-  private val readSchema = schema.add("_corrupt_record", StringType)
-  private def readOptions(failFast: Boolean): Map[String, String] = Map(
-    "mode" -> (if (failFast) "FAILFAST" else "PERMISSIVE"),
-    "columnNameOfCorruptRecord" -> "_corrupt_record")
 
   /** The one decode of a scanned hour file into (id, ts, hour), shared by
     * `read` and `readStream` so batch/stream parity holds by construction.
@@ -193,12 +183,12 @@ object GhArchiveSource {
     * SAME `keyPattern` applied to `_metadata.file_path` and on the key
     * being a calendar hour — an artifact like `2024-01-15-99.json.gz` or
     * `2024-02-30-1.json.gz` that `listHours` skips is dropped here too.
-    * Schema, FAILFAST/PERMISSIVE policy and the derived `hour` column come
-    * from the same `decode` as `read`.
+    * Schema and FAILFAST policy match `read`; the derived `hour` column
+    * comes from the same `decode`.
     */
   def readStream(spark: SparkSession, dir: String,
-                 maxFilesPerTrigger: Int = 1, failFast: Boolean = true): DataFrame =
-    decode(spark.readStream.schema(readSchema).options(readOptions(failFast))
+                 maxFilesPerTrigger: Int = 1): DataFrame =
+    decode(spark.readStream.schema(schema).option("mode", "FAILFAST")
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       // coarse listing-level cut: a stray summary.json.gz never enters the
       // stream; decode's keyPattern filter finishes the job row-level

@@ -6,7 +6,8 @@ import scala.concurrent.ExecutionContext.Implicits.global
 
 /** Concurrent-SESSIONS hammer for the JVM-global shared state (VERDICT r7
   * ask #6, the sibling of AsOfJoinExecSpec's impl race test): `OpCache`'s
-  * synchronized memo maps, SimOps' `ivfIndexes`, and `join_bucketed`'s
+  * synchronized memo (the IVF index build runs under its `once`), Spark's
+  * shared cache behind `OpCache.cached`, and `join_bucketed`'s
   * managed-catalog delete-if-exists/create dance are singletons the
   * single-session driver protocol never stresses. Here two
   * `spark.newSession()` siblings (own SessionState, shared SparkContext +

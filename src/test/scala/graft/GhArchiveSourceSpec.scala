@@ -60,15 +60,12 @@ class GhArchiveSourceSpec extends SparkSpec {
     assert(rows(2)._3 == "2024-01-15T01:00") // hour key (NTZ), not event ts
   }
 
-  test("permissive mode keeps malformed rows as nulls; failfast aborts") {
+  test("a malformed record aborts the read (FAILFAST)") {
     val dir = Files.createTempDirectory("graft-gha-bad-").toString
     writeHourFile(dir, "2024-01-15-0",
       Seq("""{"id":1,"created_at":"2024-01-15T00:10:00Z"}""", "{not json"))
-    val permissive = GhArchiveSource.read(spark, dir, failFast = false).collect()
-    assert(permissive.length == 2)
-    assert(permissive.count(_.isNullAt(0)) == 1)
     intercept[org.apache.spark.SparkException] {
-      GhArchiveSource.read(spark, dir, failFast = true).collect()
+      GhArchiveSource.read(spark, dir).collect()
     }
   }
 

@@ -80,8 +80,8 @@ class PlanSpec extends SparkSpec {
   // Dedup family: the whole 100-TB design rests on candidates coming from an
   // EQUALITY join on a band/prefix key (shuffle-hash or sort-merge on that
   // key) — never a nested-loop over the corpus — and on the signature table
-  // being materialized once (InMemoryRelation via OpCache) rather than
-  // recomputed per self-join side.
+  // being materialized once (an InMemoryRelation in Spark's cache, put there
+  // by OpCache.cached) rather than recomputed per self-join side.
   private def assertBandedCandidateJoin(name: String): Unit = {
     val p = plan(name)
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
@@ -90,7 +90,8 @@ class PlanSpec extends SparkSpec {
       p.contains("BroadcastHashJoin"),
       s"$name: no equi-join found in plan:\n" + p.take(1500))
     assert(p.contains("InMemoryTableScan"),
-      s"$name: signature table not reused via OpCache persist:\n" + p.take(1500))
+      s"$name: signature table not read from Spark's cache (OpCache.cached):\n" +
+        p.take(1500))
   }
 
   test("dedup_minhash: banded equi-join candidates + persisted signatures") {
