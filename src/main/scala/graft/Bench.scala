@@ -12,7 +12,7 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
     // one throwaway action to absorb session warm-up (codegen compiler,
     // parquet footer caches) so per-query numbers measure the query
-    spark.read.parquet(s"$sfDir/region.parquet").write
+    Tables.region(spark, sfDir).write
       .format("noop").mode("overwrite").save()
     // dev profiling: `runMain graft.Bench q1 q2` restricts to those queries.
     // Default 2 reps, reported value = min: a single run carries ±15-30%

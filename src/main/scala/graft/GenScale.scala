@@ -45,7 +45,7 @@ object GenScale {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    def in(name: String): DataFrame = spark.read.parquet(s"$inDir/$name.parquet")
+    def in(name: String): DataFrame = Tables.parquet(spark, s"$inDir/$name.parquet")
     // Scaled tables MUST be written as multiple files: the driver fixtures
     // are single-file/single-row-group, and crossJoin(broadcast(reps))
     // preserves that 1-partition layout, so a decade table written as-is

@@ -44,8 +44,10 @@ object Service {
 }
 
 /** Bounded hour-range backfill (ref: cmd/gh-load/main.go): list only the
-  * in-range hour files, decode, dedup by id, write the same
-  * day-partitioned sorted zstd layout the service appends to.
+  * in-range hour files, decode, and append them through
+  * `ArchiveStream.append`, the service's own sink: one shuffle by day, in
+  * which rows equal on the archive key (ts, id) collapse to one, then the
+  * day-partitioned (ts, id)-sorted zstd layout.
   */
 object Backfill {
   val Usage = "Usage: runMain graft.Backfill <archiveDir> <outDir> " +
@@ -56,11 +58,9 @@ object Backfill {
     val Array(archiveDir, outDir, from, to) = args
     val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val rows = sources.GhArchiveSource.read(spark, archiveDir,
-        from = Some(sources.GhArchiveSource.parseHourKey(from)),
-        to = Some(sources.GhArchiveSource.parseHourKey(to)))
-      .dropDuplicates("id")
-    streaming.ArchiveStream.append(rows, outDir)
+    streaming.ArchiveStream.append(sources.GhArchiveSource.read(spark, archiveDir,
+      from = Some(sources.GhArchiveSource.parseHourKey(from)),
+      to = Some(sources.GhArchiveSource.parseHourKey(to))), outDir)
     println(s"[graft.Backfill] loaded hours [$from, $to) into $outDir")
     spark.stop()
   }

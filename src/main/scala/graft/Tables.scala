@@ -1,6 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
 
 /** Loaders for the driver-generated testdata tables (TESTDATA.md, FIXTURES.md).
   *
@@ -10,7 +16,67 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   */
 object Tables {
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
+
+  /** `spark.read.parquet(paths)` without Spark's schema-inference job: with
+    * `mergeSchema` off Spark reads the schema from ONE footer, in a
+    * one-task job on every read. Here the driver reads that same footer
+    * and hands the schema to the reader. The file is the one Spark picks
+    * (`ParquetUtils.inferSchema`): a root's `_common_metadata`, else its
+    * `_metadata`, else the first data file in path order, hidden names
+    * skipped; the conversion is Spark's own, under the session's conf
+    * (`nanosAsLong`, NTZ inference). Partition columns are still inferred
+    * from the directory names. With no data file, or `mergeSchema` on,
+    * this is `spark.read.parquet`, so Spark's own schema and errors stand.
+    */
+  def parquet(spark: SparkSession, paths: String*): DataFrame = {
+    val state = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
+    if (state.conf.isParquetSchemaMergingEnabled) spark.read.parquet(paths: _*)
+    else {
+      val conf = state.newHadoopConf()
+      footerFile(conf, paths) match {
+        case Some(f) =>
+          val footer = ParquetFooterReader.readFooter(
+            HadoopInputFile.fromStatus(f, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+          val schema = ParquetFileFormat.readSchemaFromFooter(
+            new Footer(f.getPath, footer), new ParquetToSparkSchemaConverter(state.conf))
+          spark.read.schema(schema).parquet(paths: _*)
+        case None => spark.read.parquet(paths: _*)
+      }
+    }
+  }
+
+  /** The file whose footer Spark's schema inference reads for `paths`.
+    * Directories are descended in path order and only as deep as the first
+    * data file, so a day-partitioned archive lists one day dir, not all.
+    */
+  private def footerFile(conf: org.apache.hadoop.conf.Configuration,
+      paths: Seq[String]): Option[FileStatus] = {
+    val roots = paths.flatMap { p =>
+      val path = new Path(p)
+      val fs = path.getFileSystem(conf)
+      scala.util.Try(fs.getFileStatus(fs.makeQualified(path))).toOption
+    }
+    def visible(dir: Path): Seq[FileStatus] =
+      dir.getFileSystem(conf).listStatus(dir).toSeq
+        .filterNot(s => GraftSqlShim.hiddenPathName(s.getPath.getName))
+    val summaries = Seq(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE,
+      ParquetFileWriter.PARQUET_METADATA_FILE)
+    // a child's path is its dir's plus "/name", and every path below a
+    // child dir starts with "name/": sorting on that key is path order
+    def firstData(kids: Seq[FileStatus]): Option[FileStatus] =
+      kids.filterNot(s => s.isFile && summaries.contains(s.getPath.getName))
+        .sortBy(s => if (s.isDirectory) s.getPath.getName + "/" else s.getPath.getName)
+        .iterator
+        .flatMap(s => if (s.isDirectory) firstData(visible(s.getPath)) else Some(s))
+        .nextOption()
+    val listed = roots.map(r => if (r.isDirectory) visible(r.getPath) else Seq(r))
+    def first(found: Seq[FileStatus]) = found.minByOption(_.getPath.toString)
+    summaries.iterator
+      .flatMap(name => first(listed.flatten.filter(s => s.isFile && s.getPath.getName == name)))
+      .nextOption()
+      .orElse(first(listed.flatMap(firstData)))
+  }
 
   def region(s: SparkSession, d: String): DataFrame     = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = table(s, d, "nation")

@@ -78,7 +78,7 @@ object ComposedOps {
     // plan.
     "composed_asof_dpp_days" -> ((s, dir) => {
       val path = PipelineOps.writeSink(s, dir)
-      val fact = s.read.parquet(path)
+      val fact = Tables.parquet(s, path)
       val asof = AsOf.join(purchases(s, dir), clicks(s, dir), key = "user_id",
         probeTs = "ts", buildTs = "click_ts", buildTie = "click_id")
       val convDays = asof

@@ -270,7 +270,7 @@ object MultimodalOps {
         .write.mode("overwrite").parquet(out)
       out
     }
-    s.read.parquet(path).as[MediaRecord]
+    Tables.parquet(s, path).as[MediaRecord]
   }
 
   /** (img_id, ahash) of every PNG payload and of its one-pixel-edited

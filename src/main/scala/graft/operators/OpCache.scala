@@ -17,11 +17,14 @@ object OpCache {
     * form alone is lossy (all non-alphanumerics collapse to '_', so
     * distinct dirs could collide), so append a hash of the raw string; the
     * JVM pid isolates concurrent processes sharing the same tmpdir from
-    * racing each other's mode("overwrite") writes.
+    * racing each other's mode("overwrite") writes. The key starts with a
+    * letter or digit: Spark's file source skips names starting with `_`
+    * or `.` as hidden, and an absolute dir would otherwise start with `_`.
     */
   def pathKey(dir: String): String = {
     val h = Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(dir))
     s"${dir.replaceAll("[^A-Za-z0-9.]", "_")}_${h}_p${ProcessHandle.current().pid()}"
+      .dropWhile(c => !c.isLetterOrDigit)
   }
 
   /** Content fingerprint of the data dir a memo key points at (file count,

@@ -154,7 +154,7 @@ object PipelineOps {
           .write.mode("overwrite").parquet(out)
         out
       }
-      s.read.parquet(rawPath)
+      Tables.parquet(s, rawPath)
         .select(from_json(col("raw"), org.apache.spark.sql.types.DataType.fromDDL(eventSchema)
           .asInstanceOf[StructType]).as("ev"))
         .select(col("ev.id").as("id"), col("ev.type").as("type"),
@@ -225,7 +225,7 @@ object PipelineOps {
     // sink; Catalyst prunes to 2 of N day directories (verify via .explain).
     "partition_prune" -> ((s, dir) => {
       val path = writeSink(s, dir)
-      s.read.parquet(path)
+      Tables.parquet(s, path)
         .filter(col("d").between(lit("2024-01-01").cast(DateType), lit("2024-01-02").cast(DateType)))
         .groupBy("d")
         .agg(count(lit(1)).as("n_events"), sum(dec(col("value"))).cast(DoubleType).as("sum_value"))
@@ -242,7 +242,7 @@ object PipelineOps {
     // static-literal case; this is the join-driven one.
     "join_partition_prune_dynamic" -> ((s, dir) => {
       val path = writeSink(s, dir)
-      val fact = s.read.parquet(path)
+      val fact = Tables.parquet(s, path)
       val topDays = Tables.events(s, dir)
         .filter(col("event_type") === "error")
         .groupBy(to_date(col("ts")).as("d"))
@@ -260,7 +260,7 @@ object PipelineOps {
     // skipping for the time-range predicate.
     "sorted_range_scan" -> ((s, dir) => {
       val path = writeSink(s, dir)
-      s.read.parquet(path)
+      Tables.parquet(s, path)
         .filter(col("ts").between(
           lit("2024-01-01 06:00:00").cast(TimestampType),
           lit("2024-01-01 18:00:00").cast(TimestampType)))
@@ -289,7 +289,7 @@ object PipelineOps {
     // sorted, zstd write byte-for-byte.
     "sink_partitioned_write" -> ((s, dir) => {
       val path = writeSink(s, dir)
-      s.read.parquet(path)
+      Tables.parquet(s, path)
         .select("event_id", "ts", "user_id", "event_type", "value", "props", "d")
         .orderBy("event_id")
     }),
@@ -339,7 +339,7 @@ object PipelineOps {
           .partitionBy("d").parquet(out)
         out
       }
-      s.read.parquet(path)
+      Tables.parquet(s, path)
         .select(col("event_id"), col("d"), col("value"))
         .orderBy("event_id")
     }),

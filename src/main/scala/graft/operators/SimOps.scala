@@ -363,7 +363,7 @@ object SimOps {
     // >= 0.9 vs brute force is asserted in NorthStarSpec.
     "sim_topk_ivf" -> ((s, dir) => {
       val (path, cents) = ivfIndex(dir + "#ivf", vecs(s, dir))
-      val idx = s.read.parquet(path)
+      val idx = Tables.parquet(s, path)
       // queries probe their nprobe=2 nearest cells; candidates are the
       // union of those cells only
       val probes = idx.filter(col("vec_id") < 5)
@@ -402,7 +402,7 @@ object SimOps {
       val planted = base.filter(col("vec_id") < 50)
         .select((col("vec_id") + plantBase).as("vec_id"), col("v"))
       val (path, cents) = ivfIndex(dir + "#ivf_planted", base.unionByName(planted))
-      val idx = s.read.parquet(path)
+      val idx = Tables.parquet(s, path)
       // probe EXACTLY the minted id range, not an open >= bound
       val probes = idx.filter(col("vec_id").between(plantBase, plantBase + 49L))
         .select(col("vec_id").as("q_id"), col("v").as("qv"),

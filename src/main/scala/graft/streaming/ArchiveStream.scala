@@ -53,17 +53,28 @@ object ArchiveStream {
       .withWatermark("ts", watermark)
       .dropDuplicatesWithinWatermark("id")
 
-  /** The archive layout, stated once (ref: README.md:8-17 `PARTITION BY
-    * toDate(ts) ORDER BY (ts, id)`): a `d` day column, one shuffle by day
-    * and a (ts, key) sort; `key` is `event_id` on the fixture tables.
+  /** The archive layout and its key, stated once (ref: README.md:8-17
+    * `PARTITION BY toDate(ts) ORDER BY (ts, id)` of a ReplacingMergeTree):
+    * a `d` day column, one shuffle by day, one row per (ts, key) and a
+    * (d, ts, key) sort; `key` is `event_id` on the fixture tables. Rows equal
+    * on (ts, key) collapse to one, as the reference's merges collapse
+    * equal sorting keys. `d` is a function of `ts`, so the day shuffle
+    * already clusters every (d, ts, key) group: the dedup aggregates
+    * after it, with no second exchange. Rows already unique on the key
+    * (a streaming batch after [[dedup]], the fixture tables) pass through.
+    * The sort leads with `d`: a `partitionBy("d")` write needs its rows
+    * ordered by `d`, and Spark sorts them by `d` alone, dropping a (ts,
+    * key) sort below, unless that order is already there.
     */
   def byDay(df: DataFrame, key: String = "id"): DataFrame =
     df.withColumn("d", to_date(col("ts")))
       .repartition(col("d"))
-      .sortWithinPartitions("ts", key)
+      .dropDuplicates("d", "ts", key)
+      .sortWithinPartitions("d", "ts", key)
 
   /** The archive append of both the streaming sink and the backfill:
-    * [[byDay]], then day-partitioned zstd parquet.
+    * [[byDay]] (one shuffle, dedup on (ts, id)), then day-partitioned zstd
+    * parquet.
     */
   def append(df: DataFrame, outDir: String): Unit =
     byDay(df).write.mode("append")
@@ -221,7 +232,7 @@ object ArchiveStream {
   private def appendThenDelete(spark: SparkSession, dir: Path, files: Seq[FileStatus],
       nOut: Int): Unit = {
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    spark.read.parquet(files.map(_.getPath.toString): _*)
+    graft.Tables.parquet(spark, files.map(_.getPath.toString): _*)
       .repartitionByRange(nOut, col("ts"), col("id"))
       .sortWithinPartitions("ts", "id")
       .write.mode("append").option("compression", "zstd")

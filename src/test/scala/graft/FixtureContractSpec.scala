@@ -64,6 +64,50 @@ class FixtureContractSpec extends SparkSpec {
     }
   }
 
+  /** `Tables.parquet`'s footer schema must be the one Spark infers, field
+    * for field: name, type, nullability and metadata.
+    */
+  private def assertInferredSchema(paths: String*): Unit = {
+    val inferred = spark.read.parquet(paths: _*).schema
+    val read = Tables.parquet(spark, paths: _*).schema
+    assert(read.fields.toSeq == inferred.fields.toSeq,
+      s"Tables.parquet read $read, Spark infers $inferred")
+  }
+
+  for (dir <- scales; table <- contract.keys.toSeq.sorted) {
+    test(s"$table at $dir: Tables.parquet's schema is the one Spark infers") {
+      assertInferredSchema(s"$dir/$table.parquet")
+    }
+  }
+
+  test("a Spark-written partitioned dir: Tables.parquet's schema is the one Spark infers") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.MetadataBuilder
+    val schema = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("ts", TimestampType),
+      StructField("local", TimestampNTZType),
+      StructField("amount", DecimalType(18, 2)),
+      StructField("tags", ArrayType(StringType, containsNull = false)),
+      StructField("attrs", MapType(StringType, DoubleType)),
+      StructField("actor", StructType(Seq(StructField("login", StringType)))),
+      StructField("note", StringType, nullable = true,
+        new MetadataBuilder().putString("comment", "free text").build()),
+      StructField("d", DateType)))
+    val ts = java.sql.Timestamp.valueOf("2024-01-15 10:00:00")
+    val rows = Seq(
+      Row(1L, ts, java.time.LocalDateTime.of(2024, 1, 15, 10, 0), BigDecimal("1.50").bigDecimal,
+        Seq("a"), Map("x" -> 1.0), Row("u1"), "n1", java.sql.Date.valueOf("2024-01-15")),
+      Row(2L, ts, null, null, Seq.empty[String], null, null, null,
+        java.sql.Date.valueOf("2024-01-16")),
+      Row(3L, null, null, null, Seq("b", "c"), Map.empty[String, Double], Row(null), "n3", null))
+    val out = java.nio.file.Files.createTempDirectory("fixture-dir").toString + "/t"
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+      .write.partitionBy("d").parquet(out)
+    assert(new java.io.File(out, "_SUCCESS").exists)
+    assertInferredSchema(out)
+  }
+
   for (dir <- scales) {
     test(s"Tables.events normalizes ts to TimestampType at $dir") {
       assert(Tables.events(spark, dir).schema("ts").dataType == TimestampType)

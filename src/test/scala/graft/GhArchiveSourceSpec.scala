@@ -97,6 +97,48 @@ class GhArchiveSourceSpec extends SparkSpec {
     assert(parts.toSet == Set("d=2024-01-15", "d=2024-01-16"))
   }
 
+  test("backfill composition: append(read(range)) keeps one row per (ts, id) in one day shuffle") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.functions.col
+    import streaming.ArchiveStream
+    // what Backfill.main runs between its session start and stop
+    val dir = Files.createTempDirectory("graft-gha-backfill-").toString
+    def ev(id: Long, ts: String) = s"""{"id":$id,"created_at":"$ts","type":"WatchEvent"}"""
+    val repeated = ev(2, "2024-01-15T22:50:00Z")
+    writeHourFile(dir, "2024-01-15-22", Seq(ev(1, "2024-01-15T22:10:00Z"), repeated,
+      ev(7, "2024-01-15T22:30:00Z")))
+    // the repeated line again, byte-identical, in the adjacent hour; id 7
+    // again with another created_at: a distinct (ts, id), so a second row
+    writeHourFile(dir, "2024-01-15-23", Seq(repeated, ev(3, "2024-01-15T23:20:00Z"),
+      ev(7, "2024-01-16T00:05:00Z")))
+    writeHourFile(dir, "2024-01-16-0", Seq(ev(4, "2024-01-16T00:40:00Z"),
+      ev(3, "2024-01-15T23:20:00Z")))
+    writeHourFile(dir, "2024-01-16-1", Seq(ev(5, "2024-01-16T01:15:00Z")))  // out of range
+    Files.write(java.nio.file.Paths.get(s"$dir/stray.txt"), "{not an hour}".getBytes("UTF-8"))
+    def read() = GhArchiveSource.read(spark, dir,
+      from = Some(LocalDateTime.of(2024, 1, 15, 22, 0)),
+      to = Some(LocalDateTime.of(2024, 1, 16, 1, 0)))
+    val out = Files.createTempDirectory("graft-gha-backfill-out-").toString + "/a"
+    ArchiveStream.append(read(), out)
+
+    val stored = spark.read.parquet(out).select(col("ts").cast("string"), col("id"))
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    assert(stored.sorted == Seq(
+      ("2024-01-15 22:10:00", 1L), ("2024-01-15 22:30:00", 7L), ("2024-01-15 22:50:00", 2L),
+      ("2024-01-15 23:20:00", 3L), ("2024-01-16 00:05:00", 7L), ("2024-01-16 00:40:00", 4L)))
+    val days = new java.io.File(out).listFiles().filter(_.isDirectory).map(_.getName).sorted
+    assert(days.toSeq == Seq("d=2024-01-15", "d=2024-01-16"))
+    for (day <- days; f <- new java.io.File(s"$out/$day").listFiles()
+         if f.getName.endsWith(".parquet")) {
+      val rows = spark.read.parquet(f.getPath).select("ts", "id").collect()
+        .map(r => (r.getTimestamp(0).getTime, r.getLong(1))).toSeq
+      assert(rows == rows.sorted, s"$day/${f.getName} is not sorted by (ts, id)")
+    }
+    val shuffles = executedNodes(ArchiveStream.byDay(read()))
+      .count(_.isInstanceOf[ShuffleExchangeExec])
+    assert(shuffles == 1, "the (ts, id) dedup must ride the day exchange")
+  }
+
   test("streaming read paces by maxFilesPerTrigger and reaches all rows") {
     import org.apache.spark.sql.streaming.Trigger
     val q = GhArchiveSource.readStream(spark, archiveDir, maxFilesPerTrigger = 1)

@@ -170,4 +170,12 @@ class OpCacheSpec extends SparkSpec {
     assert(truth != before, "the rewrite must change the answer")
     assert(run(d) == truth, "an in-place rewrite must not serve the stale index")
   }
+
+  test("the IVF index dir sim_topk_ivf reads back is not a hidden name to Spark's file source") {
+    SparkEntry.queries("sim_topk_ivf")(spark, sf).collect()
+    val name = OpCache.pathKey(sf + "#ivf")
+    assert(new File(s"${System.getProperty("java.io.tmpdir")}/graft-ivf/$name").isDirectory)
+    assert(!org.apache.spark.sql.GraftSqlShim.hiddenPathName(name),
+      s"$name is skipped as hidden, so every read of the index warns that all paths were ignored")
+  }
 }

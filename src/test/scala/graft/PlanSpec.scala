@@ -49,6 +49,16 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("PartitionFilters: [isnotnull(d"), p.take(1500))
   }
 
+  test("a second build of each perfbench query key starts no Spark job") {
+    // the first build writes partition_prune's sink; a build after that
+    // must not run Spark's parquet schema-inference job for any table
+    for (k <- Seq("replace_by_key", "partition_prune", "sql_recursive", "market_basket_lift")) {
+      SparkEntry.queries(k)(spark, sf)
+      val (jobs, _) = jobsStarted(SparkEntry.queries(k)(spark, sf))
+      assert(jobs.isEmpty, s"$k: the second build started ${jobs.size} Spark jobs")
+    }
+  }
+
   test("topk: whole-stage top-k, not a global sort of everything") {
     val p = plan("topk")
     assert(p.contains("TakeOrderedAndProject"), p.take(800))
